@@ -125,8 +125,11 @@ object Bench {
     val priorJson = results.flatMap { case (k, _) =>
       prior.get(k).map(p => "\"" + k + "\":" + p)
     }.mkString("{", ",", "}")
+    // fixed-point numbers in Locale.ROOT: `f"%.3f"` follows the JVM
+    // locale and writes "1,234" under e.g. de_DE, which is not JSON
+    def num(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val deltaJson = results.flatMap { case (k, v) =>
-      prior.get(k).map(p => f""""$k":${v - p}%.3f""")
+      prior.get(k).map(p => s""""$k":${num(v - p)}""")
     }.mkString("{", ",", "}")
     if (only.isEmpty) {
       // failed queries keep their prior history entry (a crash's
@@ -152,12 +155,12 @@ object Bench {
     // core-count scaling (PERF r16 had per_query empty for this exact
     // reason). Timing methodology unchanged.
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val qsMs = results.map { case (k, v) => f""""$k":$v%.3f""" }
+    val qsMs = results.map { case (k, v) => s""""$k":${num(v)}""" }
       .mkString("{", ",", "}")
     val full = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""prior":$priorJson,"delta":$deltaJson,"failed":$failedJson,"sf":"$sfDir"}"""
-    val short = f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qsMs,""" +
-      f""""n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir","detail":"$benchOut"}"""
+    val short = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qsMs,""" +
+      s""""n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"sf":"$sfDir","detail":"$benchOut"}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get(benchOut), full + "\n")
     // silence shutdown-path logging (EventLoop interrupt stacks at
     // stop() previously corrupted the output tail), stop Spark FIRST,

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.{SparkConf, SparkEnv}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
@@ -11,9 +12,18 @@ import graft.functions.DotProduct
   * including ones created by spark-submit on a real cluster — gets the
   * graft-native expressions without calling GraftFunctions.register
   * by hand.
+  *
+  * It also installs [[GraftExtensions.sessionDefaults]] on the live
+  * SparkConf. The builder applies extensions after the SparkContext
+  * exists but before the first session's state does, so the defaults
+  * reach every session of the context, static confs included. graft's
+  * callers run each job in a fresh session (`newSession()`), and under
+  * Spark's own defaults each fresh session recompiles every generated
+  * class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    Option(SparkEnv.get).foreach(env => GraftExtensions.installDefaults(env.conf))
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getCanonicalName, "graft_dot"),
@@ -134,4 +144,33 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // physical operator for the first-class as-of join node
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
+}
+
+object GraftExtensions {
+  /** Spark defaults under which a generated class compiles once per JVM
+    * instead of once per session. Set only where the user has not set
+    * the key, so an explicit value always wins.
+    *
+    *  - `spark.sql.codegen.cache.maxEntries`: static, read once when the
+    *    JVM-wide class cache is first built. Spark's 100 is fewer than
+    *    the five reference pipelines compile (317 classes), so the LRU
+    *    evicts each class before its next use.
+    *  - `spark.sql.artifact.isolation.enabled`: with isolation each
+    *    session gets its own class loader, and the loader is part of the
+    *    cache key, so every task-side class recompiles per session.
+    *    graft never adds per-session artifacts (jars, classes, files),
+    *    so isolation buys it nothing. A deployment that needs it can set
+    *    it back to `true`, at the cost of these recompiles.
+    *  - `spark.sql.codegen.useIdInClassName`: AQE numbers codegen stages
+    *    in re-optimization order, so identical code gets different class
+    *    names (`…CodegenStage16` vs `…24`) in different sessions and
+    *    misses the cache.
+    */
+  val sessionDefaults: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> "1024",
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.useIdInClassName" -> "false")
+
+  def installDefaults(conf: SparkConf): Unit =
+    sessionDefaults.foreach { case (k, v) => conf.setIfMissing(k, v) }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftPlanBridge
 
 /** Loaders for the driver's parquet tables (TESTDATA.md). All operators
   * take `dir` = scale-factor directory and read only what they need so
@@ -57,11 +58,11 @@ object Tables {
     * 256 entries the cache resets (worst case one re-probe per scan),
     * so a long-lived JVM cycling sessions cannot pin entries forever. */
   private val narrowCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, Int, Int), java.lang.Boolean]()
+    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), java.lang.Boolean]()
 
   def fanout(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sessionState.conf.numShufflePartitions
-    val key = (System.identityHashCode(df.sparkSession),
+    val key = (GraftPlanBridge.sessionUUID(df.sparkSession),
       df.queryExecution.logical.semanticHash(), target)
     if (narrowCache.size > 256) narrowCache.clear()
     val narrow = narrowCache.computeIfAbsent(key,

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftPlanBridge
 import graft.Tables
 import graft.functions.TextFns._
 
@@ -30,7 +31,9 @@ object Dedup {
       FROM documents GROUP BY 1 ORDER BY content_key"""
 
   /** Session-level cache of shared dedup intermediates, keyed by
-    * (session identity, sf dir, plan name). The MinHash pair graph
+    * (session UUID, sf dir, plan name). The UUID, unlike an identity
+    * hash, is unique among live sessions, so two sessions never serve
+    * each other's builds. The MinHash pair graph
     * feeds THREE queries (d2 pairs, d6 components, d7 canonical
     * selection); without sharing, d7 re-runs d6's whole iterative CC
     * which re-runs d2's signature+verify pipeline. A production
@@ -40,7 +43,7 @@ object Dedup {
     * checkpointed blocks). Entries are tiny (verified pairs + labels,
     * not documents). */
   private val sharedPlans =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
 
   /** Drop all memoized intermediates. The bench calls this before each
     * timed run so d2/d6/d7 each report their full standalone pipeline
@@ -54,7 +57,7 @@ object Dedup {
     // checkpointed blocks forever — past 64 entries the cache resets
     // (worst case is one recompute per consumer, never wrong results)
     if (sharedPlans.size > 64) sharedPlans.clear()
-    sharedPlans.getOrElseUpdate((System.identityHashCode(spark), dir, key),
+    sharedPlans.getOrElseUpdate((GraftPlanBridge.sessionUUID(spark), dir, key),
       build.localCheckpoint(true))
   }
 

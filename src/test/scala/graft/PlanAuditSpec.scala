@@ -460,17 +460,23 @@ class PlanAuditSpec extends SparkTestBase {
     // the Expand path must never fall back to sort-based aggregation —
     // the r16 finding: ONE immutable (string) min/max buffer demoted
     // every phase of the profile aggregate to SortAggregate + a full
-    // sort of the 7× expanded stream. Assert the guarded PROPERTY
-    // (r17, advisor): at most the two grouping-free string-bounds
-    // phases may stay sort-based (they sort NOTHING — no Sort node is
-    // planned for a global aggregate), and zero Sort operators exist
-    // anywhere in the plan. A Spark upgrade that hash-aggregates
-    // string min/max (SortAggregate count 0) passes; a demotion that
-    // re-sorts the Expand stream trips the Sort-node check.
+    // sort of the 7× expanded stream. Assert the guarded PROPERTY:
+    // at most the two string-bounds phases may stay sort-based, and
+    // only grouping-free (a global aggregate plans no Sort). The one
+    // Sort allowed is the final ORDER BY of the 6 unpivoted rows: it
+    // orders col_name, which only exists above the stack Generate, and
+    // sits above that Generate, so nothing sorts the Expand stream. A
+    // Spark upgrade that hash-aggregates string min/max passes; a
+    // demotion that re-sorts the Expand stream trips the Sort checks.
     assert("SortAggregate".r.findAllIn(prof).size <= 2,
       s"q_profile's Expand path fell back to SortAggregate:\n$prof")
-    assert("Sort \\[".r.findAllIn(prof).isEmpty,
-      s"q_profile must not sort any stream:\n$prof")
+    assert("SortAggregate\\(key=\\[[^\\]]".r.findFirstIn(prof).isEmpty,
+      s"q_profile's sort-based aggregates must be grouping-free:\n$prof")
+    val sorts = "Sort \\[[^\\]]*\\]".r.findAllIn(prof).toList
+    assert(sorts.size <= 1 && sorts.forall("Sort \\[col_name#\\d+ ASC NULLS FIRST\\]".r.matches),
+      s"q_profile may sort only its 6 output rows by col_name:\n$prof")
+    assert(sorts.isEmpty || prof.indexOf("Sort [") < prof.indexOf("Generate stack(6"),
+      s"q_profile's output sort must sit above the unpivot, not below the Expand:\n$prof")
     // c62: every dim-parent FK probe is a broadcast left join — the
     // child never shuffles to check a dimension
     val fk = operators.OpsAudit.qFkAudit(spark, sfDir)

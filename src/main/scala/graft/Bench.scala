@@ -12,15 +12,14 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // optional comma-separated filter for fast single-query iteration
+    // (SPARK_GRAFT_BENCH_ONLY=q_asof_native,q_asof_join); the full run
+    // is the default
+    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val selected = SparkEntry.select(only).toSeq.sortBy(_._1)
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // Silence the `No Partition Defined for Window operation!` warning
     // ONLY: every remaining global-order window in the library reads a
@@ -39,18 +38,11 @@ object Bench {
     // absorb session init cost (~5s) into its measurement; deterministic
     // picks covering the two big fact tables (lineitem + documents)
     Seq("q1_agg", "q_token_count").foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
+      try SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
       }
     }
-    // optional comma-separated filter for fast single-query iteration
-    // (SPARK_GRAFT_BENCH_ONLY=q_asof_native,q_asof_join); the full run
-    // (driver mode) is the default
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     // min of 2 runs per query: the first run pays janino compilation
     // of that query's generated code (up to several seconds for wide
     // projections) — the min reflects steady-state throughput, which

@@ -21,22 +21,33 @@ object SparkEntry {
         "vsi_prefix", "dst_blob_path", "cog_name")
   }
 
+  /** Every operator module's declarations by name; a name declared
+    * twice fails here, when SparkEntry initialises. */
+  private[graft] val registry: Map[String, Query] = Query.index(Seq(
+    Analytics.registry, AnalyticsExt.registry, AnalyticsTs.registry, IngestOps.registry,
+    GeoOps.registry, GeoProj.registry, GeoGeom.registry, GeoClip.registry,
+    GeoSimplify.registry, GeoBorders.registry, GeoMulti.registry, GeoWrap.registry,
+    GeoLines.registry, GeoRaster.registry, GeoMeta.registry,
+    TextOps.registry, TextModels.registry, CorpusClean.registry, Dedup.registry, Ann.registry,
+    Retrieval.registry, Bpe.registry, Pca.registry, Asof.registry, Serving.registry,
+    Seeding.registry, OpsAudit.registry, graft.multimodal.Media.registry).flatten)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Analytics.queries ++ AnalyticsExt.queries ++ AnalyticsTs.queries ++ IngestOps.queries ++
-      GeoOps.queries ++ GeoProj.queries ++ GeoGeom.queries ++ GeoClip.queries ++
-      GeoSimplify.queries ++ GeoBorders.queries ++ GeoMulti.queries ++ GeoWrap.queries ++ GeoLines.queries ++ GeoRaster.queries ++ GeoMeta.queries ++
-      TextOps.queries ++ TextModels.queries ++ CorpusClean.queries ++ Dedup.queries ++ Ann.queries ++
-      Retrieval.queries ++ Bpe.queries ++ Pca.queries ++ Asof.queries ++ Serving.queries ++ Seeding.queries ++
-      OpsAudit.queries ++ graft.multimodal.Media.queries
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, q) => name -> q.build }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Analytics.oracles ++ AnalyticsExt.oracles ++ AnalyticsTs.oracles ++ IngestOps.oracles ++
-      GeoOps.oracles ++ GeoProj.oracles ++ GeoGeom.oracles ++ GeoClip.oracles ++
-      GeoSimplify.oracles ++ GeoBorders.oracles ++ GeoMulti.oracles ++ GeoWrap.oracles ++ GeoLines.oracles ++ GeoRaster.oracles ++ GeoMeta.oracles ++
-      TextOps.oracles ++ TextModels.oracles ++ CorpusClean.oracles ++ Dedup.oracles ++ Ann.oracles ++
-      Retrieval.oracles ++ Bpe.oracles ++ Pca.oracles ++ Asof.oracles ++ Serving.oracles ++ Seeding.oracles ++
-      OpsAudit.oracles ++ graft.multimodal.Media.oracles
+    * the same parquet tables; rows-only queries have none. */
+  val oracleSql: Map[String, String] =
+    registry.collect { case (name, Query(_, _, Oracle(sql))) => name -> sql }
+
+  /** The queries named in `only`, or all of them when it is None. An
+    * unknown name throws, listing every unknown one, so a typo cannot
+    * silently select nothing. */
+  def select(only: Option[Set[String]]): Map[String, (SparkSession, String) => DataFrame] =
+    only.fold(queries) { names =>
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty, s"unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+      queries.filter { case (name, _) => names(name) }
+    }
 }

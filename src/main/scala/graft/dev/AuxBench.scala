@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -29,17 +28,10 @@ object AuxBench {
     val n = args.headOption.map(_.toInt).getOrElse(500000)
     val sfDir = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
+    // the production state store; set before the first stream starts
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** dev tool: synthesize a `documents.parquet` corpus with the driver
@@ -19,10 +18,7 @@ object GenDocs {
   def main(args: Array[String]): Unit = {
     val rows = args.headOption.map(_.toInt).getOrElse(50000)
     val out = args.lift(1).getOrElse("/tmp/gen_docs")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val vocab = Seq("batch", "part", "spark", "line", "column", "order",
       "small", "sort", "fast", "value", "scan", "hash", "slow", "group",

@@ -22,10 +22,7 @@ object GenTpch {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(600000) // lineitem rows
     val out = args.lift(1).getOrElse("/tmp/gen_tpch")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     synthesize(spark, n, out)
     println(s"[gentpch] wrote lineitem=$n suite to $out")

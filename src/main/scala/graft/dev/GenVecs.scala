@@ -29,10 +29,7 @@ object GenVecs {
     val rows = args.headOption.map(_.toInt).getOrElse(20000)
     val out = args.lift(1).getOrElse("/tmp/gen_vecs")
     val amp = args.lift(2).map(_.toDouble).getOrElse(0.35)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("WARN")
     val withVec = synthesize(spark, rows, amp)
     withVec.coalesce(4).write.mode("overwrite").parquet(s"$out/embeddings.parquet")

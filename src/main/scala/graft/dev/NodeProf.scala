@@ -1,6 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -17,14 +16,7 @@ import graft.SparkEntry
 object NodeProf {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     def fmt(v: Long, unit: String): String = unit match {
@@ -75,7 +67,7 @@ object NodeProf {
       lastQe = null
       // t0 BEFORE construction: eager localCheckpoints (memo builds,
       // chained-leg materializations) run inside the builder call, and
-      // Bench/TimeQ time them — excluding them here misread pagerank as
+      // Bench times them — excluding them here misread pagerank as
       // 0.2 s when its descent runs in construction-time jobs.
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(n)(spark, sfDir)

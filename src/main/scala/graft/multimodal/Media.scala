@@ -6,7 +6,7 @@ import javax.imageio.ImageIO
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, RowsOnly, Tables}
 
 /** Real image codec on the JDK's built-in PNG support (javax.imageio —
   * no extra dependency). The testdata has no image files, so each
@@ -1102,46 +1102,36 @@ object Media {
       SELECT mime, action, count(*) AS n_media, CAST(sum(nbytes) AS BIGINT) AS bytes
       FROM a GROUP BY 1, 2 ORDER BY mime, action"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_exif_privacy" -> (qExifPrivacy _),
-    "q_bitrate_ladder" -> (qBitrateLadder _),
-    "q_storyboard" -> (qStoryboard _),
-    "q_media_e2e_plan" -> (qMediaE2ePlan _),
-    "q_media_audit" -> (qMediaAudit _),
-    "q_media_e2e" -> (qMediaE2e _),
-    "q_audio_fingerprint" -> (qAudioFingerprint _),
-    "q_shot_detect" -> (qShotDetect _),
-    "q_phash_dedup" -> (qPhashDedup _),
-    "q_audio_frames" -> (qAudioFrames _),
-    "q_multimodal_meta" -> (qMultimodalMeta _),
-    "q_media_geo" -> (qMediaGeo _),
-    "q_media_pipeline" -> (qMediaPipeline _),
-    "q_media_batched" -> (qMediaBatched _),
-    "q_frame_sample" -> (qFrameSample _),
-    "q_resize_plan" -> (qResizePlan _),
-    "q_decode_batches" -> (qDecodeBatches _))
 
-  /** q_media_pipeline, q_media_batched, q_phash_dedup, q_shot_detect
-    * and q_media_e2e intentionally have no oracle (a PNG codec
-    * round-trip is not SQL-expressible) → driver records a rows-only
-    * check; the specs gate them with golden-pixel, g2-parity/g5-parity,
-    * golden-hash, exact-dup-recall, planted-scene-recovery,
-    * g8-pair-parity assertions. q_media_audit IS oracle-gated: its
-    * decode provably reproduces the generator's dimension formula, so
-    * the DuckDB twin states that formula and independently checks the
-    * real decode every round; q_media_e2e_plan carries g11's
-    * decode-free plan half under a full oracle. */
-  val oracles: Map[String, String] = Map(
-    "q_exif_privacy" -> qExifPrivacySql,
-    "q_bitrate_ladder" -> qBitrateLadderSql,
-    "q_storyboard" -> qStoryboardSql,
-    "q_media_audit" -> qMediaAuditSql,
-    "q_media_e2e_plan" -> qMediaE2ePlanSql,
-    "q_audio_frames" -> qAudioFramesSql,
-    "q_audio_fingerprint" -> qAudioFingerprintSql,
-    "q_multimodal_meta" -> qMultimodalMetaSql,
-    "q_media_geo" -> qMediaGeoSql,
-    "q_frame_sample" -> qFrameSampleSql,
-    "q_resize_plan" -> qResizePlanSql,
-    "q_decode_batches" -> qDecodeBatchesSql)
+  /** The rows-only queries have no oracle because a PNG codec
+    * round-trip is not SQL-expressible; the correctness dump checks
+    * only their row counts and the named spec gates the rows. q_media_audit IS
+    * oracle-gated: its decode provably reproduces the generator's
+    * dimension formula, so the DuckDB twin states that formula and
+    * independently checks the real decode every round;
+    * q_media_e2e_plan carries g11's decode-free plan half under a full
+    * oracle. */
+  val registry: Seq[Query] = Seq(
+    Query("q_exif_privacy", qExifPrivacy, Oracle(qExifPrivacySql)),
+    Query("q_bitrate_ladder", qBitrateLadder, Oracle(qBitrateLadderSql)),
+    Query("q_storyboard", qStoryboard, Oracle(qStoryboardSql)),
+    Query("q_media_e2e_plan", qMediaE2ePlan, Oracle(qMediaE2ePlanSql)),
+    Query("q_media_audit", qMediaAudit, Oracle(qMediaAuditSql)),
+    // planted-copy flags and g8 pair parity
+    Query("q_media_e2e", qMediaE2e, RowsOnly("MediaE2eSpec")),
+    Query("q_audio_fingerprint", qAudioFingerprint, Oracle(qAudioFingerprintSql)),
+    // planted-scene recovery
+    Query("q_shot_detect", qShotDetect, RowsOnly("ShotDetectSpec")),
+    // golden hash and exact-duplicate recall
+    Query("q_phash_dedup", qPhashDedup, RowsOnly("OperatorsSpec")),
+    Query("q_audio_frames", qAudioFrames, Oracle(qAudioFramesSql)),
+    Query("q_multimodal_meta", qMultimodalMeta, Oracle(qMultimodalMetaSql)),
+    Query("q_media_geo", qMediaGeo, Oracle(qMediaGeoSql)),
+    // golden pixels
+    Query("q_media_pipeline", qMediaPipeline, RowsOnly("OperatorsSpec")),
+    // g2 per-row parity and the g5 batch plan
+    Query("q_media_batched", qMediaBatched, RowsOnly("OperatorsSpec")),
+    Query("q_frame_sample", qFrameSample, Oracle(qFrameSampleSql)),
+    Query("q_resize_plan", qResizePlan, Oracle(qResizePlanSql)),
+    Query("q_decode_batches", qDecodeBatches, Oracle(qDecodeBatchesSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, RowsOnly, Tables}
 
 /** §2 C — relational substrate (joins/aggs/windows the reference's
   * queue + progress-state flow relies on), TPC-H-shaped.
@@ -937,62 +937,34 @@ object Analytics {
                          WHERE o.o_custkey = c.c_custkey AND o.o_orderpriority = '1-URGENT')
        GROUP BY c_nationkey ORDER BY c_nationkey"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q22_no_orders" -> (q22NoOrders _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "q18_big_orders" -> (q18BigOrders _),
-    "q21_waiting" -> (q21Waiting _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_asof_salted" -> (qAsofSalted _),
-    "q_approx_quantiles" -> (qApproxQuantiles _),
-    "q_approx_distinct" -> (qApproxDistinct _),
-    "q_median" -> (qMedian _),
-    "q10_returns" -> (q10Returns _),
-    "q4_priority" -> (q4Priority _),
-    "q14_promo" -> (q14Promo _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q1_agg" -> (q1Agg _),
-    "q3_topk" -> (q3Topk _),
-    "q5_join" -> (q5Join _),
-    "q_window_rank" -> (qWindowRank _),
-    "q_rollup" -> (qRollup _),
-    "q_cube" -> (qCube _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_scalar_subq" -> (qScalarSubq _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_rolling_revenue" -> (qRollingRevenue _),
-    "q_pivot" -> (qPivot _),
-    "q_snapshot_diff" -> (qSnapshotDiff _),
-    "q_semi_anti" -> (qSemiAnti _),
-    "q_events_window" -> (qEventsWindow _),
-    "q_sessionize" -> (qSessionize _))
-
-  val oracles: Map[String, String] = Map(
-    "q22_no_orders" -> q22NoOrdersSql,
-    "q15_top_supplier" -> q15TopSupplierSql,
-    "q18_big_orders" -> q18BigOrdersSql,
-    "q21_waiting" -> q21WaitingSql,
-    "q_asof_join" -> qAsofJoinSql,
+  val registry: Seq[Query] = Seq(
+    Query("q22_no_orders", q22NoOrders, Oracle(q22NoOrdersSql)),
+    Query("q15_top_supplier", q15TopSupplier, Oracle(q15TopSupplierSql)),
+    Query("q18_big_orders", q18BigOrders, Oracle(q18BigOrdersSql)),
+    Query("q21_waiting", q21Waiting, Oracle(q21WaitingSql)),
+    Query("q_asof_join", qAsofJoin, Oracle(qAsofJoinSql)),
     // identical result contract to c21 ⇒ identical oracle
-    "q_asof_salted" -> qAsofJoinSql,
-    "q_median" -> qMedianSql,
-    "q10_returns" -> q10ReturnsSql,
-    "q4_priority" -> q4PrioritySql,
-    "q14_promo" -> q14PromoSql,
-    "q_salted_join" -> qSaltedJoinSql,
-    "q1_agg" -> q1AggSql,
-    "q3_topk" -> q3TopkSql,
-    "q5_join" -> q5JoinSql,
-    "q_window_rank" -> qWindowRankSql,
-    "q_rollup" -> qRollupSql,
-    "q_cube" -> qCubeSql,
-    "q_grouping_sets" -> qGroupingSetsSql,
-    "q_scalar_subq" -> qScalarSubqSql,
-    "q_range_join" -> qRangeJoinSql,
-    "q_rolling_revenue" -> qRollingRevenueSql,
-    "q_pivot" -> qPivotSql,
-    "q_snapshot_diff" -> qSnapshotDiffSql,
-    "q_semi_anti" -> qSemiAntiSql,
-    "q_events_window" -> qEventsWindowSql,
-    "q_sessionize" -> qSessionizeSql)
+    Query("q_asof_salted", qAsofSalted, Oracle(qAsofJoinSql)),
+    Query("q_approx_quantiles", qApproxQuantiles, RowsOnly("OperatorsSpec")),
+    Query("q_approx_distinct", qApproxDistinct, RowsOnly("OperatorsSpec")),
+    Query("q_median", qMedian, Oracle(qMedianSql)),
+    Query("q10_returns", q10Returns, Oracle(q10ReturnsSql)),
+    Query("q4_priority", q4Priority, Oracle(q4PrioritySql)),
+    Query("q14_promo", q14Promo, Oracle(q14PromoSql)),
+    Query("q_salted_join", qSaltedJoin, Oracle(qSaltedJoinSql)),
+    Query("q1_agg", q1Agg, Oracle(q1AggSql)),
+    Query("q3_topk", q3Topk, Oracle(q3TopkSql)),
+    Query("q5_join", q5Join, Oracle(q5JoinSql)),
+    Query("q_window_rank", qWindowRank, Oracle(qWindowRankSql)),
+    Query("q_rollup", qRollup, Oracle(qRollupSql)),
+    Query("q_cube", qCube, Oracle(qCubeSql)),
+    Query("q_grouping_sets", qGroupingSets, Oracle(qGroupingSetsSql)),
+    Query("q_scalar_subq", qScalarSubq, Oracle(qScalarSubqSql)),
+    Query("q_range_join", qRangeJoin, Oracle(qRangeJoinSql)),
+    Query("q_rolling_revenue", qRollingRevenue, Oracle(qRollingRevenueSql)),
+    Query("q_pivot", qPivot, Oracle(qPivotSql)),
+    Query("q_snapshot_diff", qSnapshotDiff, Oracle(qSnapshotDiffSql)),
+    Query("q_semi_anti", qSemiAnti, Oracle(qSemiAntiSql)),
+    Query("q_events_window", qEventsWindow, Oracle(qEventsWindowSql)),
+    Query("q_sessionize", qSessionize, Oracle(qSessionizeSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 C (continued) — the remaining classic TPC-H shapes (c30-c37),
   * adapted to the driver schema (no partsupp table, no
@@ -1203,55 +1203,29 @@ object AnalyticsExt {
         CAST(CAST(top10 AS HUGEINT) * 1000000 // total_cents AS BIGINT) AS top10_share_micro
       FROM s"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_basket" -> (qBasket _),
-    "q_recommend" -> (qRecommend _),
-    "q_basket_sig" -> (qBasketSig _),
-    "q_elasticity" -> (qElasticity _),
-    "q_gini" -> (qGini _),
-    "q_skyline" -> (qSkyline _),
-    "q_percentiles" -> (qPercentiles _),
-    "q_scd2_dim" -> (qScd2Dim _),
-    "q_funnel" -> (qFunnel _),
-    "q_bloom_join" -> (qBloomJoin _),
-    "q17_small_qty" -> (q17SmallQty _),
-    "q13_cust_dist" -> (q13CustDist _),
-    "q7_volume" -> (q7Volume _),
-    "q8_mkt_share" -> (q8MktShare _),
-    "q19_disjunctive" -> (q19Disjunctive _),
-    "q2_min_cost" -> (q2MinCost _),
-    "q_window_suite" -> (qWindowSuite _),
-    "q_multi_distinct" -> (qMultiDistinct _),
-    "q6_forecast" -> (q6Forecast _),
-    "q9_profit" -> (q9Profit _),
-    "q12_priority" -> (q12Priority _),
-    "q11_top_stock" -> (q11TopStock _),
-    "q16_supplier_cnt" -> (q16SupplierCnt _),
-    "q20_promo_suppliers" -> (q20PromoSuppliers _))
-
-  val oracles: Map[String, String] = Map(
-    "q_basket" -> qBasketSql,
-    "q_recommend" -> qRecommendSql,
-    "q_basket_sig" -> qBasketSigSql,
-    "q_elasticity" -> qElasticitySql,
-    "q_gini" -> qGiniSql,
-    "q_skyline" -> qSkylineSql,
-    "q_percentiles" -> qPercentilesSql,
-    "q_scd2_dim" -> qScd2DimSql,
-    "q_funnel" -> qFunnelSql,
-    "q_bloom_join" -> qBloomJoinSql,
-    "q17_small_qty" -> q17SmallQtySql,
-    "q13_cust_dist" -> q13CustDistSql,
-    "q7_volume" -> q7VolumeSql,
-    "q8_mkt_share" -> q8MktShareSql,
-    "q19_disjunctive" -> q19DisjunctiveSql,
-    "q2_min_cost" -> q2MinCostSql,
-    "q_window_suite" -> qWindowSuiteSql,
-    "q_multi_distinct" -> qMultiDistinctSql,
-    "q6_forecast" -> q6ForecastSql,
-    "q9_profit" -> q9ProfitSql,
-    "q12_priority" -> q12PrioritySql,
-    "q11_top_stock" -> q11TopStockSql,
-    "q16_supplier_cnt" -> q16SupplierCntSql,
-    "q20_promo_suppliers" -> q20PromoSuppliersSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_basket", qBasket, Oracle(qBasketSql)),
+    Query("q_recommend", qRecommend, Oracle(qRecommendSql)),
+    Query("q_basket_sig", qBasketSig, Oracle(qBasketSigSql)),
+    Query("q_elasticity", qElasticity, Oracle(qElasticitySql)),
+    Query("q_gini", qGini, Oracle(qGiniSql)),
+    Query("q_skyline", qSkyline, Oracle(qSkylineSql)),
+    Query("q_percentiles", qPercentiles, Oracle(qPercentilesSql)),
+    Query("q_scd2_dim", qScd2Dim, Oracle(qScd2DimSql)),
+    Query("q_funnel", qFunnel, Oracle(qFunnelSql)),
+    Query("q_bloom_join", qBloomJoin, Oracle(qBloomJoinSql)),
+    Query("q17_small_qty", q17SmallQty, Oracle(q17SmallQtySql)),
+    Query("q13_cust_dist", q13CustDist, Oracle(q13CustDistSql)),
+    Query("q7_volume", q7Volume, Oracle(q7VolumeSql)),
+    Query("q8_mkt_share", q8MktShare, Oracle(q8MktShareSql)),
+    Query("q19_disjunctive", q19Disjunctive, Oracle(q19DisjunctiveSql)),
+    Query("q2_min_cost", q2MinCost, Oracle(q2MinCostSql)),
+    Query("q_window_suite", qWindowSuite, Oracle(qWindowSuiteSql)),
+    Query("q_multi_distinct", qMultiDistinct, Oracle(qMultiDistinctSql)),
+    Query("q6_forecast", q6Forecast, Oracle(q6ForecastSql)),
+    Query("q9_profit", q9Profit, Oracle(q9ProfitSql)),
+    Query("q12_priority", q12Priority, Oracle(q12PrioritySql)),
+    Query("q11_top_stock", q11TopStock, Oracle(q11TopStockSql)),
+    Query("q16_supplier_cnt", q16SupplierCnt, Oracle(q16SupplierCntSql)),
+    Query("q20_promo_suppliers", q20PromoSuppliers, Oracle(q20PromoSuppliersSql)))
 }

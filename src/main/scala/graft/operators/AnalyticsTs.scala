@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 C (time-series / product analytics) — c48-c50: the event-stream
   * shapes a progress/telemetry table like the reference's ingest-event
@@ -1661,55 +1661,29 @@ object AnalyticsTs {
         (n_risk = deaths) AS survival_zero
       FROM h WHERE deaths > 0 ORDER BY t"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_survival" -> (qSurvival _),
-    "q_stickiness" -> (qStickiness _),
-    "q_kpi_dashboard" -> (qKpiDashboard _),
-    "q_rfm" -> (qRfm _),
-    "q_cohort_ltv" -> (qCohortLtv _),
-    "q_ewma" -> (qEwma _),
-    "q_entropy" -> (qEntropy _),
-    "q_spearman" -> (qSpearman _),
-    "q_chi2" -> (qChi2 _),
-    "q_acf" -> (qAcf _),
-    "q_bootstrap_poisson" -> (qBootstrapPoisson _),
-    "q_ab_test" -> (qAbTest _),
-    "q_cusum" -> (qCusum _),
-    "q_concurrency" -> (qConcurrency _),
-    "q_rolling_active" -> (qRollingActive _),
-    "q_attribution" -> (qAttribution _),
-    "q_anomaly" -> (qAnomaly _),
-    "q_trend" -> (qTrend _),
-    "q_session_paths" -> (qSessionPaths _),
-    "q_time_weighted_avg" -> (qTimeWeightedAvg _),
-    "q_segment_overlap" -> (qSegmentOverlap _),
-    "q_gap_fill" -> (qGapFill _),
-    "q_retention_cohorts" -> (qRetentionCohorts _),
-    "q_next_event_markov" -> (qNextEventMarkov _))
-
-  val oracles: Map[String, String] = Map(
-    "q_stickiness" -> qStickinessSql,
-    "q_survival" -> qSurvivalSql,
-    "q_kpi_dashboard" -> qKpiDashboardSql,
-    "q_rfm" -> qRfmSql,
-    "q_cohort_ltv" -> qCohortLtvSql,
-    "q_ewma" -> qEwmaSql,
-    "q_entropy" -> qEntropySql,
-    "q_spearman" -> qSpearmanSql,
-    "q_chi2" -> qChi2Sql,
-    "q_acf" -> qAcfSql,
-    "q_bootstrap_poisson" -> qBootstrapPoissonSql,
-    "q_ab_test" -> qAbTestSql,
-    "q_cusum" -> qCusumSql,
-    "q_concurrency" -> qConcurrencySql,
-    "q_rolling_active" -> qRollingActiveSql,
-    "q_attribution" -> qAttributionSql,
-    "q_anomaly" -> qAnomalySql,
-    "q_trend" -> qTrendSql,
-    "q_session_paths" -> qSessionPathsSql,
-    "q_time_weighted_avg" -> qTimeWeightedAvgSql,
-    "q_segment_overlap" -> qSegmentOverlapSql,
-    "q_gap_fill" -> qGapFillSql,
-    "q_retention_cohorts" -> qRetentionCohortsSql,
-    "q_next_event_markov" -> qNextEventMarkovSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_survival", qSurvival, Oracle(qSurvivalSql)),
+    Query("q_stickiness", qStickiness, Oracle(qStickinessSql)),
+    Query("q_kpi_dashboard", qKpiDashboard, Oracle(qKpiDashboardSql)),
+    Query("q_rfm", qRfm, Oracle(qRfmSql)),
+    Query("q_cohort_ltv", qCohortLtv, Oracle(qCohortLtvSql)),
+    Query("q_ewma", qEwma, Oracle(qEwmaSql)),
+    Query("q_entropy", qEntropy, Oracle(qEntropySql)),
+    Query("q_spearman", qSpearman, Oracle(qSpearmanSql)),
+    Query("q_chi2", qChi2, Oracle(qChi2Sql)),
+    Query("q_acf", qAcf, Oracle(qAcfSql)),
+    Query("q_bootstrap_poisson", qBootstrapPoisson, Oracle(qBootstrapPoissonSql)),
+    Query("q_ab_test", qAbTest, Oracle(qAbTestSql)),
+    Query("q_cusum", qCusum, Oracle(qCusumSql)),
+    Query("q_concurrency", qConcurrency, Oracle(qConcurrencySql)),
+    Query("q_rolling_active", qRollingActive, Oracle(qRollingActiveSql)),
+    Query("q_attribution", qAttribution, Oracle(qAttributionSql)),
+    Query("q_anomaly", qAnomaly, Oracle(qAnomalySql)),
+    Query("q_trend", qTrend, Oracle(qTrendSql)),
+    Query("q_session_paths", qSessionPaths, Oracle(qSessionPathsSql)),
+    Query("q_time_weighted_avg", qTimeWeightedAvg, Oracle(qTimeWeightedAvgSql)),
+    Query("q_segment_overlap", qSegmentOverlap, Oracle(qSegmentOverlapSql)),
+    Query("q_gap_fill", qGapFill, Oracle(qGapFillSql)),
+    Query("q_retention_cohorts", qRetentionCohorts, Oracle(qRetentionCohortsSql)),
+    Query("q_next_event_markov", qNextEventMarkov, Oracle(qNextEventMarkovSql)))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 import graft.functions.GraftFunctions
 
 /** §2 E — similarity search over `embeddings` (64-dim unit floats).
@@ -1860,51 +1860,27 @@ object Ann {
       FROM cost LEFT JOIN hits ON hits.np = cost.np
       ORDER BY nprobe"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ann_rebalance" -> (qAnnRebalance _),
-    "q_ann_rebalance_exec" -> (qAnnRebalanceExec _),
-    "q_ann_nprobe_sweep" -> (qAnnNprobeSweep _),
-    "q_ann_index_stats" -> (qAnnIndexStats _),
-    "q_ann_mrl" -> (qAnnMrl _),
-    "q_ann_range" -> (qAnnRange _),
-    "q_ann_sq8" -> (qAnnSq8 _),
-    "q_kmeans_step" -> (qKmeansStep _),
-    "q_kmeans_converge" -> (qKmeansConverge _),
-    "q_kmeans_probe" -> (qKmeansProbe _),
-    "q_pq_train_step" -> (qPqTrainStep _),
-    "q_ann_recall" -> (qAnnRecall _),
-    "q_ann_ivfpq" -> (qAnnIvfPq _),
-    "q_ann_ivfpq_res" -> (qAnnIvfPqRes _),
-    "q_ann_pq" -> (qAnnPq _),
-    "q_ann_brute" -> (qAnnBrute _),
-    "q_ann_filtered" -> (qAnnFiltered _),
-    "q_ann_filtered_ivf" -> (qAnnFilteredIvf _),
-    "q_ann_lsh" -> (qAnnLsh _),
-    "q_ann_ivf" -> (qAnnIvf _),
-    "q_ann_multiprobe" -> (qAnnMultiprobe _),
-    "q_ann_batch" -> (qAnnBatch _))
-
-  val oracles: Map[String, String] = Map(
-    "q_ann_rebalance" -> qAnnRebalanceSql,
-    "q_ann_rebalance_exec" -> qAnnRebalanceExecSql,
-    "q_ann_nprobe_sweep" -> qAnnNprobeSweepSql,
-    "q_ann_index_stats" -> qAnnIndexStatsSql,
-    "q_ann_mrl" -> qAnnMrlSql,
-    "q_ann_range" -> qAnnRangeSql,
-    "q_ann_sq8" -> qAnnSq8Sql,
-    "q_kmeans_step" -> qKmeansStepSql,
-    "q_kmeans_converge" -> qKmeansConvergeSql,
-    "q_kmeans_probe" -> qKmeansProbeSql,
-    "q_pq_train_step" -> qPqTrainStepSql,
-    "q_ann_recall" -> qAnnRecallSql,
-    "q_ann_ivfpq" -> qAnnIvfPqSql,
-    "q_ann_ivfpq_res" -> qAnnIvfPqResSql,
-    "q_ann_pq" -> qAnnPqSql,
-    "q_ann_brute" -> qAnnBruteSql,
-    "q_ann_filtered" -> qAnnFilteredSql,
-    "q_ann_filtered_ivf" -> qAnnFilteredIvfSql,
-    "q_ann_lsh" -> qAnnLshSql,
-    "q_ann_ivf" -> qAnnIvfSql,
-    "q_ann_multiprobe" -> qAnnMultiprobeSql,
-    "q_ann_batch" -> qAnnBatchSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_ann_rebalance", qAnnRebalance, Oracle(qAnnRebalanceSql)),
+    Query("q_ann_rebalance_exec", qAnnRebalanceExec, Oracle(qAnnRebalanceExecSql)),
+    Query("q_ann_nprobe_sweep", qAnnNprobeSweep, Oracle(qAnnNprobeSweepSql)),
+    Query("q_ann_index_stats", qAnnIndexStats, Oracle(qAnnIndexStatsSql)),
+    Query("q_ann_mrl", qAnnMrl, Oracle(qAnnMrlSql)),
+    Query("q_ann_range", qAnnRange, Oracle(qAnnRangeSql)),
+    Query("q_ann_sq8", qAnnSq8, Oracle(qAnnSq8Sql)),
+    Query("q_kmeans_step", qKmeansStep, Oracle(qKmeansStepSql)),
+    Query("q_kmeans_converge", qKmeansConverge, Oracle(qKmeansConvergeSql)),
+    Query("q_kmeans_probe", qKmeansProbe, Oracle(qKmeansProbeSql)),
+    Query("q_pq_train_step", qPqTrainStep, Oracle(qPqTrainStepSql)),
+    Query("q_ann_recall", qAnnRecall, Oracle(qAnnRecallSql)),
+    Query("q_ann_ivfpq", qAnnIvfPq, Oracle(qAnnIvfPqSql)),
+    Query("q_ann_ivfpq_res", qAnnIvfPqRes, Oracle(qAnnIvfPqResSql)),
+    Query("q_ann_pq", qAnnPq, Oracle(qAnnPqSql)),
+    Query("q_ann_brute", qAnnBrute, Oracle(qAnnBruteSql)),
+    Query("q_ann_filtered", qAnnFiltered, Oracle(qAnnFilteredSql)),
+    Query("q_ann_filtered_ivf", qAnnFilteredIvf, Oracle(qAnnFilteredIvfSql)),
+    Query("q_ann_lsh", qAnnLsh, Oracle(qAnnLshSql)),
+    Query("q_ann_ivf", qAnnIvf, Oracle(qAnnIvfSql)),
+    Query("q_ann_multiprobe", qAnnMultiprobe, Oracle(qAnnMultiprobeSql)),
+    Query("q_ann_batch", qAnnBatch, Oracle(qAnnBatchSql)))
 }

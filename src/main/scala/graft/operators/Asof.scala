@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftPlanBridge
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 import graft.plans.AsofJoin
 
 /** Public API + query entry for the FIRST-CLASS as-of join operator
@@ -136,12 +136,9 @@ object Asof {
       .orderBy("event_id")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_asof_native" -> (qAsofNative _),
-    "q_asof_salted_native" -> (qAsofSaltedNative _))
 
   /** Same result contract as c21 ⇒ same oracle (both variants). */
-  val oracles: Map[String, String] = Map(
-    "q_asof_native" -> Analytics.qAsofJoinSql,
-    "q_asof_salted_native" -> Analytics.qAsofJoinSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_asof_native", qAsofNative, Oracle(Analytics.qAsofJoinSql)),
+    Query("q_asof_salted_native", qAsofSaltedNative, Oracle(Analytics.qAsofJoinSql)))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 F (continued) — BPE tokenizer training (f24): the map-reduce
   * shape behind every production tokenizer (Sennrich et al. 2016 —
@@ -301,15 +301,9 @@ object Bpe {
       GROUP BY doc_id ORDER BY doc_id"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bpe_step" -> (qBpeStep _),
-    "q_bpe_encode" -> (qBpeEncode _),
-    "q_tokenize_corpus" -> (qTokenizeCorpus _),
-    "q_tokenizer_fertility" -> (qTokenizerFertility _))
-
-  val oracles: Map[String, String] = Map(
-    "q_bpe_step" -> qBpeStepSql,
-    "q_bpe_encode" -> qBpeEncodeSql,
-    "q_tokenize_corpus" -> qTokenizeCorpusSql,
-    "q_tokenizer_fertility" -> qTokenizerFertilitySql)
+  val registry: Seq[Query] = Seq(
+    Query("q_bpe_step", qBpeStep, Oracle(qBpeStepSql)),
+    Query("q_bpe_encode", qBpeEncode, Oracle(qBpeEncodeSql)),
+    Query("q_tokenize_corpus", qTokenizeCorpus, Oracle(qTokenizeCorpusSql)),
+    Query("q_tokenizer_fertility", qTokenizerFertility, Oracle(qTokenizerFertilitySql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 F/D — the published pretraining corpus-cleaning recipes the
   * text family was still missing, each over `documents`:
@@ -896,27 +896,15 @@ object CorpusClean {
       FROM m ORDER BY source"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_source_drift" -> (qSourceDrift _),
-    "q_contamination_matrix" -> (qContaminationMatrix _),
-    "q_filter_ablation" -> (qFilterAblation _),
-    "q_gopher_rules" -> (qGopherRules _),
-    "q_c4_filters" -> (qC4Filters _),
-    "q_dedup_paragraph" -> (qDedupParagraph _),
-    "q_ccnet_buckets" -> (qCcnetBuckets _),
-    "q_dedup_cross_source" -> (qDedupCrossSource _),
-    "q_split_leakage" -> (qSplitLeakage _),
-    "q_data_card" -> (qDataCard _))
-
-  val oracles: Map[String, String] = Map(
-    "q_source_drift" -> qSourceDriftSql,
-    "q_contamination_matrix" -> qContaminationMatrixSql,
-    "q_filter_ablation" -> qFilterAblationSql,
-    "q_gopher_rules" -> qGopherRulesSql,
-    "q_c4_filters" -> qC4FiltersSql,
-    "q_dedup_paragraph" -> qDedupParagraphSql,
-    "q_ccnet_buckets" -> qCcnetBucketsSql,
-    "q_dedup_cross_source" -> qDedupCrossSourceSql,
-    "q_split_leakage" -> qSplitLeakageSql,
-    "q_data_card" -> qDataCardSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_source_drift", qSourceDrift, Oracle(qSourceDriftSql)),
+    Query("q_contamination_matrix", qContaminationMatrix, Oracle(qContaminationMatrixSql)),
+    Query("q_filter_ablation", qFilterAblation, Oracle(qFilterAblationSql)),
+    Query("q_gopher_rules", qGopherRules, Oracle(qGopherRulesSql)),
+    Query("q_c4_filters", qC4Filters, Oracle(qC4FiltersSql)),
+    Query("q_dedup_paragraph", qDedupParagraph, Oracle(qDedupParagraphSql)),
+    Query("q_ccnet_buckets", qCcnetBuckets, Oracle(qCcnetBucketsSql)),
+    Query("q_dedup_cross_source", qDedupCrossSource, Oracle(qDedupCrossSourceSql)),
+    Query("q_split_leakage", qSplitLeakage, Oracle(qSplitLeakageSql)),
+    Query("q_data_card", qDataCard, Oracle(qDataCardSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftPlanBridge
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 import graft.functions.TextFns._
 
 /** §2 D — deduplication over `documents` / `embeddings`.
@@ -371,8 +371,8 @@ object Dedup {
   def qNgramJaccard(spark: SparkSession, dir: String): DataFrame =
     ngramStages(spark, dir).last._2
 
-  /** The d4 pipeline cut at its stage boundaries (probe surface for
-    * [[graft.dev.NgramProbe]]); the last entry is the full query. */
+  /** The d4 pipeline cut at its stage boundaries; the last entry is
+    * the full query. */
   private[graft] def ngramStages(spark: SparkSession, dir: String): Seq[(String, DataFrame)] = {
     graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
@@ -2037,59 +2037,32 @@ object Dedup {
       ORDER BY v.doc_a, v.doc_b"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dedup_tuned" -> (qDedupTuned _),
-    "q_dedup_bbit" -> (qDedupBbit _),
-    "q_lsh_tune" -> (qLshTune _),
-    "q_dedup_sweep" -> (qDedupSweep _),
-    "q_dedup_report" -> (qDedupReport _),
-    "q_dedup_bloom" -> (qDedupBloom _),
-    "q_dedup_e2e" -> (qDedupE2e _),
-    "q_dedup_pagerank" -> (qDedupPagerank _),
-    "q_dedup_url" -> (qDedupUrl _),
-    "q_dedup_substring" -> (qDedupSubstring _),
-    "q_dedup_semantic" -> (qDedupSemantic _),
-    "q_dedup_semantic_incr" -> (qDedupSemanticIncr _),
-    "q_dedup_recall" -> (qDedupRecall _),
-    "q_dedup_incremental" -> (qDedupIncremental _),
-    "q_dedup_keep_best" -> (qDedupKeepBest _),
-    "q_dedup_containment" -> (qDedupContainment _),
-    "q_dedup_cc" -> (qDedupCc _),
-    "q_dedup_cc_incr" -> (qDedupCcIncr _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_dedup_minhash" -> (qDedupMinhash _),
-    "q_dedup_simhash" -> (qDedupSimhash _),
-    "q_simhash_pairs" -> (qSimhashPairs _),
-    "q_simhash_near" -> (qSimhashNear _),
-    "q_ngram_jaccard" -> (qNgramJaccard _),
-    "q_dedup_embedding" -> (qDedupEmbedding _))
-
-  val oracles: Map[String, String] = Map(
-    "q_dedup_tuned" -> qDedupTunedSql,
-    "q_dedup_bbit" -> qDedupBbitSql,
-    "q_lsh_tune" -> qLshTuneSql,
-    "q_dedup_sweep" -> qDedupSweepSql,
-    "q_dedup_report" -> qDedupReportSql,
-    "q_dedup_bloom" -> qDedupBloomSql,
-    "q_dedup_e2e" -> qDedupE2eSql,
-    "q_dedup_pagerank" -> qDedupPagerankSql,
-    "q_dedup_url" -> qDedupUrlSql,
-    "q_dedup_substring" -> qDedupSubstringSql,
-    "q_dedup_semantic" -> qDedupSemanticSql,
-    "q_dedup_semantic_incr" -> qDedupSemanticIncrSql,
-    "q_dedup_recall" -> qDedupRecallSql,
-    "q_dedup_incremental" -> qDedupIncrementalSql,
-    "q_dedup_keep_best" -> qDedupKeepBestSql,
-    "q_dedup_containment" -> qDedupContainmentSql,
-    "q_dedup_cc" -> qDedupCcSql,
+  val registry: Seq[Query] = Seq(
+    Query("q_dedup_tuned", qDedupTuned, Oracle(qDedupTunedSql)),
+    Query("q_dedup_bbit", qDedupBbit, Oracle(qDedupBbitSql)),
+    Query("q_lsh_tune", qLshTune, Oracle(qLshTuneSql)),
+    Query("q_dedup_sweep", qDedupSweep, Oracle(qDedupSweepSql)),
+    Query("q_dedup_report", qDedupReport, Oracle(qDedupReportSql)),
+    Query("q_dedup_bloom", qDedupBloom, Oracle(qDedupBloomSql)),
+    Query("q_dedup_e2e", qDedupE2e, Oracle(qDedupE2eSql)),
+    Query("q_dedup_pagerank", qDedupPagerank, Oracle(qDedupPagerankSql)),
+    Query("q_dedup_url", qDedupUrl, Oracle(qDedupUrlSql)),
+    Query("q_dedup_substring", qDedupSubstring, Oracle(qDedupSubstringSql)),
+    Query("q_dedup_semantic", qDedupSemantic, Oracle(qDedupSemanticSql)),
+    Query("q_dedup_semantic_incr", qDedupSemanticIncr, Oracle(qDedupSemanticIncrSql)),
+    Query("q_dedup_recall", qDedupRecall, Oracle(qDedupRecallSql)),
+    Query("q_dedup_incremental", qDedupIncremental, Oracle(qDedupIncrementalSql)),
+    Query("q_dedup_keep_best", qDedupKeepBest, Oracle(qDedupKeepBestSql)),
+    Query("q_dedup_containment", qDedupContainment, Oracle(qDedupContainmentSql)),
+    Query("q_dedup_cc", qDedupCc, Oracle(qDedupCcSql)),
     // d19 is an ARCHITECTURE change (incremental, frontier-bounded),
     // not a semantics change — same fixpoint, same oracle as d6
-    "q_dedup_cc_incr" -> qDedupCcSql,
-    "q_dedup_exact" -> qDedupExactSql,
-    "q_dedup_minhash" -> qDedupMinhashSql,
-    "q_dedup_simhash" -> qDedupSimhashSql,
-    "q_simhash_pairs" -> qSimhashPairsSql,
-    "q_simhash_near" -> qSimhashNearSql,
-    "q_ngram_jaccard" -> qNgramJaccardSql,
-    "q_dedup_embedding" -> qDedupEmbeddingSql)
+    Query("q_dedup_cc_incr", qDedupCcIncr, Oracle(qDedupCcSql)),
+    Query("q_dedup_exact", qDedupExact, Oracle(qDedupExactSql)),
+    Query("q_dedup_minhash", qDedupMinhash, Oracle(qDedupMinhashSql)),
+    Query("q_dedup_simhash", qDedupSimhash, Oracle(qDedupSimhashSql)),
+    Query("q_simhash_pairs", qSimhashPairs, Oracle(qSimhashPairsSql)),
+    Query("q_simhash_near", qSimhashNear, Oracle(qSimhashNearSql)),
+    Query("q_ngram_jaccard", qNgramJaccard, Oracle(qNgramJaccardSql)),
+    Query("q_dedup_embedding", qDedupEmbedding, Oracle(qDedupEmbeddingSql)))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 B (depth) — SHARED-BORDER DETECTION + SIMPLIFY-ONCE: tippecanoe's
   * `--detect-shared-borders` (ref processing.py:246, 337 — passed to
@@ -157,9 +157,6 @@ object GeoBorders {
       ORDER BY o.f, o.side"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_shared_borders" -> (qSharedBorders _))
-
-  val oracles: Map[String, String] = Map(
-    "q_shared_borders" -> qSharedBordersSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_shared_borders", qSharedBorders, Oracle(qSharedBordersSql)))
 }

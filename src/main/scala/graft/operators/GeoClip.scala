@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 B (depth) — TILE-BOUNDARY GEOMETRY CLIPPING: tippecanoe does not
   * just ASSIGN features to tiles (b3), it CLIPS each geometry to the
@@ -184,11 +184,7 @@ object GeoClip {
         MAX(n_vert) AS max_vert
       FROM pieces GROUP BY xt, yt ORDER BY xt, yt"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tile_clip" -> (qTileClip _),
-    "q_tile_clip_stats" -> (qTileClipStats _))
-
-  val oracles: Map[String, String] = Map(
-    "q_tile_clip" -> qTileClipSql,
-    "q_tile_clip_stats" -> qTileClipStatsSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_tile_clip", qTileClip, Oracle(qTileClipSql)),
+    Query("q_tile_clip_stats", qTileClipStats, Oracle(qTileClipStatsSql)))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 B (depth) — general polygon geometry: containment for CONCAVE +
   * HOLED rings and true `-makevalid` self-intersection repair (ref
@@ -908,25 +908,14 @@ object GeoGeom {
       FROM lv6 ORDER BY user_id, layer"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fgb_index" -> (qFgbIndex _),
-    "q_point_in_concave" -> (qPointInConcave _),
-    "q_make_valid_geom" -> (qMakeValidGeom _),
-    "q_hilbert_key" -> (qHilbertKey _),
-    "q_pmtiles_order" -> (qPmtilesOrder _),
-    "q_pmtiles_leaves" -> (qPmtilesLeaves _),
-    "q_pmtiles_rle" -> (qPmtilesRle _),
-    "q_pmtiles_clustered" -> (qPmtilesClustered _),
-    "q_archive_layout" -> (qArchiveLayout _))
-
-  val oracles: Map[String, String] = Map(
-    "q_fgb_index" -> qFgbIndexSql,
-    "q_point_in_concave" -> qPointInConcaveSql,
-    "q_make_valid_geom" -> qMakeValidGeomSql,
-    "q_hilbert_key" -> qHilbertKeySql,
-    "q_pmtiles_order" -> qPmtilesOrderSql,
-    "q_pmtiles_leaves" -> qPmtilesLeavesSql,
-    "q_pmtiles_rle" -> qPmtilesRleSql,
-    "q_pmtiles_clustered" -> qPmtilesClusteredSql,
-    "q_archive_layout" -> qArchiveLayoutSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_fgb_index", qFgbIndex, Oracle(qFgbIndexSql)),
+    Query("q_point_in_concave", qPointInConcave, Oracle(qPointInConcaveSql)),
+    Query("q_make_valid_geom", qMakeValidGeom, Oracle(qMakeValidGeomSql)),
+    Query("q_hilbert_key", qHilbertKey, Oracle(qHilbertKeySql)),
+    Query("q_pmtiles_order", qPmtilesOrder, Oracle(qPmtilesOrderSql)),
+    Query("q_pmtiles_leaves", qPmtilesLeaves, Oracle(qPmtilesLeavesSql)),
+    Query("q_pmtiles_rle", qPmtilesRle, Oracle(qPmtilesRleSql)),
+    Query("q_pmtiles_clustered", qPmtilesClustered, Oracle(qPmtilesClusteredSql)),
+    Query("q_archive_layout", qArchiveLayout, Oracle(qArchiveLayoutSql)))
 }

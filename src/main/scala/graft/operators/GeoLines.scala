@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 B (depth) — POLYLINE TILE CLIPPING: the LineString half of
   * tippecanoe's per-tile cut (b41 covers polygon rings; a road/track
@@ -126,9 +126,6 @@ object GeoLines {
       S + math.abs(d)
     }.sum
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_line_clip" -> (qLineClip _))
-
-  val oracles: Map[String, String] = Map(
-    "q_line_clip" -> qLineClipSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_line_clip", qLineClip, Oracle(qLineClipSql)))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 import graft.functions.Synth
 
 /** §2 B (depth) — the two metadata/terrain legs the geo family was
@@ -422,17 +422,10 @@ object GeoMeta {
       FROM c, med m WHERE c.cnt > 4 * m.median ORDER BY c.xt, c.yt"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tilejson" -> (qTilejson _),
-    "q_slope_aspect" -> (qSlopeAspect _),
-    "q_hillshade" -> (qHillshade _),
-    "q_tile_buffer" -> (qTileBuffer _),
-    "q_tile_skew_plan" -> (qTileSkewPlan _))
-
-  val oracles: Map[String, String] = Map(
-    "q_tilejson" -> qTilejsonSql,
-    "q_slope_aspect" -> qSlopeAspectSql,
-    "q_hillshade" -> qHillshadeSql,
-    "q_tile_buffer" -> qTileBufferSql,
-    "q_tile_skew_plan" -> qTileSkewPlanSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_tilejson", qTilejson, Oracle(qTilejsonSql)),
+    Query("q_slope_aspect", qSlopeAspect, Oracle(qSlopeAspectSql)),
+    Query("q_hillshade", qHillshade, Oracle(qHillshadeSql)),
+    Query("q_tile_buffer", qTileBuffer, Oracle(qTileBufferSql)),
+    Query("q_tile_skew_plan", qTileSkewPlan, Oracle(qTileSkewPlanSql)))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 B (depth) — `-nlt PROMOTE_TO_MULTI` (ref processing.py:142):
   * every ogr2ogr vector conversion promotes Polygon→MultiPolygon so a
@@ -119,9 +119,6 @@ object GeoMulti {
       FROM pf GROUP BY layer ORDER BY layer"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_promote_multi" -> (qPromoteMulti _))
-
-  val oracles: Map[String, String] = Map(
-    "q_promote_multi" -> qPromoteMultiSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_promote_multi", qPromoteMulti, Oracle(qPromoteMultiSql)))
 }

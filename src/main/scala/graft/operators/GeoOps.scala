@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 import graft.functions.Synth
 
 /** §2 B — geospatial core: the reference's reprojection, tiling, COG
@@ -1794,79 +1794,41 @@ object GeoOps {
              THEN CASE WHEN join_vector_tiles THEN 'dataset' ELSE 'layer' END END AS error_scope
       FROM o ORDER BY user_id, layer"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_layer_isolation" -> (qLayerIsolation _),
-    "q_warp_grid" -> (qWarpGrid _),
-    "q_geohash_cover" -> (qGeohashCover _),
-    "q_nearest_poi" -> (qNearestPoi _),
-    "q_geohash" -> (qGeohash _),
-    "q_raster_e2e" -> (qRasterE2e _),
-    "q_geo_e2e" -> (qGeoE2e _),
-    "q_tile_diff" -> (qTileDiff _),
-    "q_hex_bin" -> (qHexBin _),
-    "q_polygon_metrics" -> (qPolygonMetrics _),
-    "q_polygon_join" -> (qPolygonJoin _),
-    "q_gdal_profile" -> (qGdalProfile _),
-    "q_tilestats_valid" -> (qTilestatsValid _),
-    "q_layer_names" -> (qLayerNames _),
-    "q_bbox_join" -> (qBboxJoin _),
-    "q_band_grouping" -> (qBandGrouping _),
-    "q_subdatasets" -> (qSubdatasets _),
-    "q_pmtiles_manifest" -> (qPmtilesManifest _),
-    "q_pmtiles_single" -> (qPmtilesSingle _),
-    "q_tippecanoe_plan" -> (qTippecanoePlan _),
-    "q_zorder_key" -> (qZorderKey _),
-    "q_quadkey" -> (qQuadkey _),
-    "q_quadkey_subtree" -> (qQuadkeySubtree _),
-    "q_tile_bounds" -> (qTileBounds _),
-    "q_reproject_mercator" -> (qReprojectMercator _),
-    "q_should_reproject" -> (qShouldReproject _),
-    "q_tile_assign" -> (qTileAssign _),
-    "q_tile_stats" -> (qTileStats _),
-    "q_zoom_guess" -> (qZoomGuess _),
-    "q_layer_bbox" -> (qLayerBbox _),
-    "q_make_valid" -> (qMakeValid _),
-    "q_feature_count_check" -> (qFeatureCountCheck _),
-    "q_overview_pyramid" -> (qOverviewPyramid _),
-    "q_band_stats" -> (qBandStats _),
-    "q_cog_layout" -> (qCogLayout _),
-    "q_cog_read_plan" -> (qCogReadPlan _))
-
-  val oracles: Map[String, String] = Map(
-    "q_layer_isolation" -> qLayerIsolationSql,
-    "q_warp_grid" -> qWarpGridSql,
-    "q_raster_e2e" -> qRasterE2eSql,
-    "q_geo_e2e" -> qGeoE2eSql,
-    "q_tile_diff" -> qTileDiffSql,
-    "q_hex_bin" -> qHexBinSql,
-    "q_polygon_metrics" -> qPolygonMetricsSql,
-    "q_polygon_join" -> qPolygonJoinSql,
-    "q_gdal_profile" -> qGdalProfileSql,
-    "q_tilestats_valid" -> qTilestatsValidSql,
-    "q_layer_names" -> qLayerNamesSql,
-    "q_bbox_join" -> qBboxJoinSql,
-    "q_band_grouping" -> qBandGroupingSql,
-    "q_subdatasets" -> qSubdatasetsSql,
-    "q_pmtiles_manifest" -> qPmtilesManifestSql,
-    "q_pmtiles_single" -> qPmtilesSingleSql,
-    "q_tippecanoe_plan" -> qTippecanoePlanSql,
-    "q_geohash" -> qGeohashSql,
-    "q_geohash_cover" -> qGeohashCoverSql,
-    "q_nearest_poi" -> qNearestPoiSql,
-    "q_zorder_key" -> qZorderKeySql,
-    "q_quadkey" -> qQuadkeySql,
-    "q_quadkey_subtree" -> qQuadkeySubtreeSql,
-    "q_tile_bounds" -> qTileBoundsSql,
-    "q_reproject_mercator" -> qReprojectMercatorSql,
-    "q_should_reproject" -> qShouldReprojectSql,
-    "q_tile_assign" -> qTileAssignSql,
-    "q_tile_stats" -> qTileStatsSql,
-    "q_zoom_guess" -> qZoomGuessSql,
-    "q_layer_bbox" -> qLayerBboxSql,
-    "q_make_valid" -> qMakeValidSql,
-    "q_feature_count_check" -> qFeatureCountCheckSql,
-    "q_overview_pyramid" -> qOverviewPyramidSql,
-    "q_band_stats" -> qBandStatsSql,
-    "q_cog_layout" -> qCogLayoutSql,
-    "q_cog_read_plan" -> qCogReadPlanSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_layer_isolation", qLayerIsolation, Oracle(qLayerIsolationSql)),
+    Query("q_warp_grid", qWarpGrid, Oracle(qWarpGridSql)),
+    Query("q_geohash_cover", qGeohashCover, Oracle(qGeohashCoverSql)),
+    Query("q_nearest_poi", qNearestPoi, Oracle(qNearestPoiSql)),
+    Query("q_geohash", qGeohash, Oracle(qGeohashSql)),
+    Query("q_raster_e2e", qRasterE2e, Oracle(qRasterE2eSql)),
+    Query("q_geo_e2e", qGeoE2e, Oracle(qGeoE2eSql)),
+    Query("q_tile_diff", qTileDiff, Oracle(qTileDiffSql)),
+    Query("q_hex_bin", qHexBin, Oracle(qHexBinSql)),
+    Query("q_polygon_metrics", qPolygonMetrics, Oracle(qPolygonMetricsSql)),
+    Query("q_polygon_join", qPolygonJoin, Oracle(qPolygonJoinSql)),
+    Query("q_gdal_profile", qGdalProfile, Oracle(qGdalProfileSql)),
+    Query("q_tilestats_valid", qTilestatsValid, Oracle(qTilestatsValidSql)),
+    Query("q_layer_names", qLayerNames, Oracle(qLayerNamesSql)),
+    Query("q_bbox_join", qBboxJoin, Oracle(qBboxJoinSql)),
+    Query("q_band_grouping", qBandGrouping, Oracle(qBandGroupingSql)),
+    Query("q_subdatasets", qSubdatasets, Oracle(qSubdatasetsSql)),
+    Query("q_pmtiles_manifest", qPmtilesManifest, Oracle(qPmtilesManifestSql)),
+    Query("q_pmtiles_single", qPmtilesSingle, Oracle(qPmtilesSingleSql)),
+    Query("q_tippecanoe_plan", qTippecanoePlan, Oracle(qTippecanoePlanSql)),
+    Query("q_zorder_key", qZorderKey, Oracle(qZorderKeySql)),
+    Query("q_quadkey", qQuadkey, Oracle(qQuadkeySql)),
+    Query("q_quadkey_subtree", qQuadkeySubtree, Oracle(qQuadkeySubtreeSql)),
+    Query("q_tile_bounds", qTileBounds, Oracle(qTileBoundsSql)),
+    Query("q_reproject_mercator", qReprojectMercator, Oracle(qReprojectMercatorSql)),
+    Query("q_should_reproject", qShouldReproject, Oracle(qShouldReprojectSql)),
+    Query("q_tile_assign", qTileAssign, Oracle(qTileAssignSql)),
+    Query("q_tile_stats", qTileStats, Oracle(qTileStatsSql)),
+    Query("q_zoom_guess", qZoomGuess, Oracle(qZoomGuessSql)),
+    Query("q_layer_bbox", qLayerBbox, Oracle(qLayerBboxSql)),
+    Query("q_make_valid", qMakeValid, Oracle(qMakeValidSql)),
+    Query("q_feature_count_check", qFeatureCountCheck, Oracle(qFeatureCountCheckSql)),
+    Query("q_overview_pyramid", qOverviewPyramid, Oracle(qOverviewPyramidSql)),
+    Query("q_band_stats", qBandStats, Oracle(qBandStatsSql)),
+    Query("q_cog_layout", qCogLayout, Oracle(qCogLayoutSql)),
+    Query("q_cog_read_plan", qCogReadPlan, Oracle(qCogReadPlanSql)))
 }

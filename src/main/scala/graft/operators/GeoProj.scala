@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 import graft.functions.Synth
 
 /** §2 B (depth) — arbitrary-source-CRS reprojection math. The
@@ -507,15 +507,9 @@ object GeoProj {
       FROM d GROUP BY src_epsg, method ORDER BY src_epsg, method"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_reproject_utm" -> (qReprojectUtm _),
-    "q_reproject_lcc" -> (qReprojectLcc _),
-    "q_reproject_dispatch" -> (qReprojectDispatch _),
-    "q_reproject_audit" -> (qReprojectAudit _))
-
-  val oracles: Map[String, String] = Map(
-    "q_reproject_utm" -> qReprojectUtmSql,
-    "q_reproject_lcc" -> qReprojectLccSql,
-    "q_reproject_dispatch" -> qReprojectDispatchSql,
-    "q_reproject_audit" -> qReprojectAuditSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_reproject_utm", qReprojectUtm, Oracle(qReprojectUtmSql)),
+    Query("q_reproject_lcc", qReprojectLcc, Oracle(qReprojectLccSql)),
+    Query("q_reproject_dispatch", qReprojectDispatch, Oracle(qReprojectDispatchSql)),
+    Query("q_reproject_audit", qReprojectAudit, Oracle(qReprojectAuditSql)))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.{Oracle, Query}
 
 /** §2 B (depth) — the three reference behaviors between "plan the
   * tiles" and "publish the archive" that the repo accounted for but
@@ -395,19 +396,11 @@ object GeoRaster {
              ELSE '' END AS message
       FROM v ORDER BY p_partkey"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tile_drop" -> (qTileDrop _),
-    "q_tile_budget" -> (qTileBudget _),
-    "q_tilestats_attrs" -> (qTilestatsAttrs _),
-    "q_overview_sample" -> (qOverviewSample _),
-    "q_overview_average" -> (qOverviewAverage _),
-    "q_cog_validate" -> (qCogValidate _))
-
-  val oracles: Map[String, String] = Map(
-    "q_tile_drop" -> qTileDropSql,
-    "q_tile_budget" -> qTileBudgetSql,
-    "q_tilestats_attrs" -> qTilestatsAttrsSql,
-    "q_overview_sample" -> qOverviewSampleSql,
-    "q_overview_average" -> qOverviewAverageSql,
-    "q_cog_validate" -> qCogValidateSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_tile_drop", qTileDrop, Oracle(qTileDropSql)),
+    Query("q_tile_budget", qTileBudget, Oracle(qTileBudgetSql)),
+    Query("q_tilestats_attrs", qTilestatsAttrs, Oracle(qTilestatsAttrsSql)),
+    Query("q_overview_sample", qOverviewSample, Oracle(qOverviewSampleSql)),
+    Query("q_overview_average", qOverviewAverage, Oracle(qOverviewAverageSql)),
+    Query("q_cog_validate", qCogValidate, Oracle(qCogValidateSql)))
 }

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 B (depth) — POLYLINE SIMPLIFICATION: tippecanoe's
   * `--simplify-only-low-zooms` vertex reduction (ref processing.py:244;
@@ -138,9 +138,6 @@ object GeoSimplify {
       ORDER BY k.line_id, k.zoom"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_simplify" -> (qSimplify _))
-
-  val oracles: Map[String, String] = Map(
-    "q_simplify" -> qSimplifySql)
+  val registry: Seq[Query] = Seq(
+    Query("q_simplify", qSimplify, Oracle(qSimplifySql)))
 }

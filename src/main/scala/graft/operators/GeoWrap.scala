@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 B (depth) — ANTIMERIDIAN WRAP SPLITTING (ogr2ogr
   * `-wrapdateline` / the dateline handling every world-spanning tiler
@@ -103,9 +103,6 @@ object GeoWrap {
         least((hi + $H - 1) // $T, 63) - (lo + $H) // $T + 1 AS n_tiles
       FROM b ORDER BY f, piece"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_wrap_split" -> (qWrapSplit _))
-
-  val oracles: Map[String, String] = Map(
-    "q_wrap_split" -> qWrapSplitSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_wrap_split", qWrapSplit, Oracle(qWrapSplitSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 import graft.functions.Synth
 
 /** §2 A — ingest & routing: the reference's queue-message handling,
@@ -1476,73 +1476,38 @@ object IngestOps {
       FROM b GROUP BY user_id, rotation
       ORDER BY user_id, rotation"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_azlog_rotation" -> (qAzlogRotation _),
-    "q_cli_local_route" -> (qCliLocalRoute _),
-    "q_pubsub_membership" -> (qPubsubMembership _),
-    "q_redelivery" -> (qRedelivery _),
-    "q_meta_merge" -> (qMetaMerge _),
-    "q_lifecycle_tiers" -> (qLifecycleTiers _),
-    "q_stage_latency" -> (qStageLatency _),
-    "q_storage_quota" -> (qStorageQuota _),
-    "q_retry_backoff" -> (qRetryBackoff _),
-    "q_pubsub_token" -> (qPubsubToken _),
-    "q_user_folder_sweep" -> (qUserFolderSweep _),
-    "q_log_lifecycle" -> (qLogLifecycle _),
-    "q_error_blobs" -> (qErrorBlobs _),
-    "q_sas_url" -> (qSasUrl _),
-    "q_log_blobs" -> (qLogBlobs _),
-    "q_arch_path" -> (qArchPath _),
-    "q_marker_blobs" -> (qMarkerBlobs _),
-    "q_pubsub_fanout" -> (qPubsubFanout _),
-    "q_compaction_plan" -> (qCompactionPlan _),
-    "q_download_chunks" -> (qDownloadChunks _),
-    "q_upload_blocks" -> (qUploadBlocks _),
-    "q_user_hash" -> (qUserHash _),
-    "q_parse_props" -> (qParseProps _),
-    "q_lock_schedule" -> (qLockSchedule _),
-    "q_copy_passthrough" -> (qCopyPassthrough _),
-    "q_parse_message" -> (qParseMessage _),
-    "q_route_format" -> (qRouteFormat _),
-    "q_chop_blob_url" -> (qChopBlobUrl _),
-    "q_dst_path" -> (qDstPath _),
-    "q_progress_plan" -> (qProgressPlan _),
-    "q_stage_latest" -> (qStageLatest _),
-    "q_cancel_match" -> (qCancelMatch _),
-    "q_deadletter_stats" -> (qDeadletterStats _))
-
-  val oracles: Map[String, String] = Map(
-    "q_azlog_rotation" -> qAzlogRotationSql,
-    "q_cli_local_route" -> qCliLocalRouteSql,
-    "q_pubsub_membership" -> qPubsubMembershipSql,
-    "q_redelivery" -> qRedeliverySql,
-    "q_meta_merge" -> qMetaMergeSql,
-    "q_lifecycle_tiers" -> qLifecycleTiersSql,
-    "q_stage_latency" -> qStageLatencySql,
-    "q_storage_quota" -> qStorageQuotaSql,
-    "q_retry_backoff" -> qRetryBackoffSql,
-    "q_pubsub_token" -> qPubsubTokenSql,
-    "q_user_folder_sweep" -> qUserFolderSweepSql,
-    "q_log_lifecycle" -> qLogLifecycleSql,
-    "q_error_blobs" -> qErrorBlobsSql,
-    "q_sas_url" -> qSasUrlSql,
-    "q_log_blobs" -> qLogBlobsSql,
-    "q_arch_path" -> qArchPathSql,
-    "q_marker_blobs" -> qMarkerBlobsSql,
-    "q_pubsub_fanout" -> qPubsubFanoutSql,
-    "q_compaction_plan" -> qCompactionPlanSql,
-    "q_download_chunks" -> qDownloadChunksSql,
-    "q_upload_blocks" -> qUploadBlocksSql,
-    "q_user_hash" -> qUserHashSql,
-    "q_parse_props" -> qParsePropsSql,
-    "q_lock_schedule" -> qLockScheduleSql,
-    "q_copy_passthrough" -> qCopyPassthroughSql,
-    "q_parse_message" -> qParseMessageSql,
-    "q_route_format" -> qRouteFormatSql,
-    "q_chop_blob_url" -> qChopBlobUrlSql,
-    "q_dst_path" -> qDstPathSql,
-    "q_progress_plan" -> qProgressPlanSql,
-    "q_stage_latest" -> qStageLatestSql,
-    "q_cancel_match" -> qCancelMatchSql,
-    "q_deadletter_stats" -> qDeadletterStatsSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_azlog_rotation", qAzlogRotation, Oracle(qAzlogRotationSql)),
+    Query("q_cli_local_route", qCliLocalRoute, Oracle(qCliLocalRouteSql)),
+    Query("q_pubsub_membership", qPubsubMembership, Oracle(qPubsubMembershipSql)),
+    Query("q_redelivery", qRedelivery, Oracle(qRedeliverySql)),
+    Query("q_meta_merge", qMetaMerge, Oracle(qMetaMergeSql)),
+    Query("q_lifecycle_tiers", qLifecycleTiers, Oracle(qLifecycleTiersSql)),
+    Query("q_stage_latency", qStageLatency, Oracle(qStageLatencySql)),
+    Query("q_storage_quota", qStorageQuota, Oracle(qStorageQuotaSql)),
+    Query("q_retry_backoff", qRetryBackoff, Oracle(qRetryBackoffSql)),
+    Query("q_pubsub_token", qPubsubToken, Oracle(qPubsubTokenSql)),
+    Query("q_user_folder_sweep", qUserFolderSweep, Oracle(qUserFolderSweepSql)),
+    Query("q_log_lifecycle", qLogLifecycle, Oracle(qLogLifecycleSql)),
+    Query("q_error_blobs", qErrorBlobs, Oracle(qErrorBlobsSql)),
+    Query("q_sas_url", qSasUrl, Oracle(qSasUrlSql)),
+    Query("q_log_blobs", qLogBlobs, Oracle(qLogBlobsSql)),
+    Query("q_arch_path", qArchPath, Oracle(qArchPathSql)),
+    Query("q_marker_blobs", qMarkerBlobs, Oracle(qMarkerBlobsSql)),
+    Query("q_pubsub_fanout", qPubsubFanout, Oracle(qPubsubFanoutSql)),
+    Query("q_compaction_plan", qCompactionPlan, Oracle(qCompactionPlanSql)),
+    Query("q_download_chunks", qDownloadChunks, Oracle(qDownloadChunksSql)),
+    Query("q_upload_blocks", qUploadBlocks, Oracle(qUploadBlocksSql)),
+    Query("q_user_hash", qUserHash, Oracle(qUserHashSql)),
+    Query("q_parse_props", qParseProps, Oracle(qParsePropsSql)),
+    Query("q_lock_schedule", qLockSchedule, Oracle(qLockScheduleSql)),
+    Query("q_copy_passthrough", qCopyPassthrough, Oracle(qCopyPassthroughSql)),
+    Query("q_parse_message", qParseMessage, Oracle(qParseMessageSql)),
+    Query("q_route_format", qRouteFormat, Oracle(qRouteFormatSql)),
+    Query("q_chop_blob_url", qChopBlobUrl, Oracle(qChopBlobUrlSql)),
+    Query("q_dst_path", qDstPath, Oracle(qDstPathSql)),
+    Query("q_progress_plan", qProgressPlan, Oracle(qProgressPlanSql)),
+    Query("q_stage_latest", qStageLatest, Oracle(qStageLatestSql)),
+    Query("q_cancel_match", qCancelMatch, Oracle(qCancelMatchSql)),
+    Query("q_deadletter_stats", qDeadletterStats, Oracle(qDeadletterStatsSql)))
 }

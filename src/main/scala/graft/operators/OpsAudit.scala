@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, RowsOnly, Tables}
 
 /** §2 cross-family audit & eval operators (c62-c64, f32, d18): the
   * pre-flight and post-hoc checks a 100 TB pipeline runs against its
@@ -753,26 +753,16 @@ object OpsAudit {
       FROM j ORDER BY digit"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_benford" -> (qBenford _),
-    "q_equidepth" -> (qEquidepth _),
-    "q_ks_drift" -> (qKsDrift _),
-    "q_salted_auto" -> (qSaltedAuto _),
-    "q_fk_audit" -> (qFkAudit _),
-    "q_skew_audit" -> (qSkewAudit _),
-    "q_profile" -> (qProfile _),
-    "q_profile_approx" -> (qProfileApprox _), // rows-only: sketch estimates (spec-gated ±10%)
-    "q_lang_id_eval" -> (qLangIdEval _),
-    "q_triangles" -> (qTriangles _))
-
-  val oracles: Map[String, String] = Map(
-    "q_benford" -> qBenfordSql,
-    "q_equidepth" -> qEquidepthSql,
-    "q_ks_drift" -> qKsDriftSql,
-    "q_salted_auto" -> qSaltedAutoSql,
-    "q_fk_audit" -> qFkAuditSql,
-    "q_skew_audit" -> qSkewAuditSql,
-    "q_profile" -> qProfileSql,
-    "q_lang_id_eval" -> qLangIdEvalSql,
-    "q_triangles" -> qTrianglesSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_benford", qBenford, Oracle(qBenfordSql)),
+    Query("q_equidepth", qEquidepth, Oracle(qEquidepthSql)),
+    Query("q_ks_drift", qKsDrift, Oracle(qKsDriftSql)),
+    Query("q_salted_auto", qSaltedAuto, Oracle(qSaltedAutoSql)),
+    Query("q_fk_audit", qFkAudit, Oracle(qFkAuditSql)),
+    Query("q_skew_audit", qSkewAudit, Oracle(qSkewAuditSql)),
+    Query("q_profile", qProfile, Oracle(qProfileSql)),
+    // sketch estimates: the spec gates each within ±10% of q_profile
+    Query("q_profile_approx", qProfileApprox, RowsOnly("OperatorsSpec")),
+    Query("q_lang_id_eval", qLangIdEval, Oracle(qLangIdEvalSql)),
+    Query("q_triangles", qTriangles, Oracle(qTrianglesSql)))
 }

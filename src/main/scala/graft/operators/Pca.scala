@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 E (continued) — e16: distributed PCA training by power
   * iteration, the dimensionality-reduction step FAISS-style pipelines
@@ -152,9 +152,6 @@ object Pca {
       FROM w$iters ORDER BY dim"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pca_power" -> (qPcaPower _))
-
-  val oracles: Map[String, String] = Map(
-    "q_pca_power" -> qPcaPowerSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_pca_power", qPcaPower, Oracle(qPcaPowerSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 import graft.functions.GraftFunctions
 
 /** §2 F/E (continued) — retrieval composition and selection ops:
@@ -185,13 +185,8 @@ object Retrieval {
         round(CAST(SUM(coalesce(rel, 0) * ${discCase("pos")}) AS DOUBLE) / $idcgMicro.0, 6) AS ndcg
       FROM j"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hybrid_rrf" -> (qHybridRrf _),
-    "q_weighted_sample" -> (qWeightedSample _),
-    "q_ndcg_eval" -> (qNdcgEval _))
-
-  val oracles: Map[String, String] = Map(
-    "q_hybrid_rrf" -> qHybridRrfSql,
-    "q_weighted_sample" -> qWeightedSampleSql,
-    "q_ndcg_eval" -> qNdcgEvalSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_hybrid_rrf", qHybridRrf, Oracle(qHybridRrfSql)),
+    Query("q_weighted_sample", qWeightedSample, Oracle(qWeightedSampleSql)),
+    Query("q_ndcg_eval", qNdcgEval, Oracle(qNdcgEvalSql)))
 }

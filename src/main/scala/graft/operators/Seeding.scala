@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 E (depth) — e28 `q_kcenter_seed`: deterministic k-center /
   * farthest-point seeding (Gonzalez 1985 — the public 2-approximation
@@ -110,9 +110,6 @@ object Seeding {
       ORDER BY step"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_kcenter_seed" -> (qKcenterSeed _))
-
-  val oracles: Map[String, String] = Map(
-    "q_kcenter_seed" -> qKcenterSeedSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_kcenter_seed", qKcenterSeed, Oracle(qKcenterSeedSql)))
 }

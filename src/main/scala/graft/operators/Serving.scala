@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 import graft.functions.GraftFunctions
 import graft.functions.TextFns._
 import graft.sources.{DatasetsSink, VersionedTable}
@@ -762,20 +762,14 @@ object Serving {
       s"$ix/tombstones/batch_id=$batchId", Seq("vec_id"), Seq("vec_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_ann_absorb" -> (qAnnAbsorb _),
-    "q_ann_filtered_indexed" -> (qAnnFilteredIndexed _),
-    "q_ann_ivfpq_indexed" -> (qAnnIvfPqIndexed _),
-    "q_ann_batch_indexed" -> (qAnnBatchIndexed _),
-    "q_dedup_served" -> (qDedupServed _))
 
   /** The serve queries are result-identical to their rebuild twins,
     * so they share those oracles — the driver then hash-verifies that
     * the persisted-index architecture changes nothing semantically. */
-  val oracles: Map[String, String] = Map(
-    "q_ann_absorb" -> qAnnAbsorbSql,
-    "q_ann_filtered_indexed" -> Ann.qAnnFilteredIvfSql,
-    "q_ann_ivfpq_indexed" -> Ann.qAnnIvfPqSql,
-    "q_ann_batch_indexed" -> qAnnBatchIndexedSql,
-    "q_dedup_served" -> Dedup.qDedupIncrementalSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_ann_absorb", qAnnAbsorb, Oracle(qAnnAbsorbSql)),
+    Query("q_ann_filtered_indexed", qAnnFilteredIndexed, Oracle(Ann.qAnnFilteredIvfSql)),
+    Query("q_ann_ivfpq_indexed", qAnnIvfPqIndexed, Oracle(Ann.qAnnIvfPqSql)),
+    Query("q_ann_batch_indexed", qAnnBatchIndexed, Oracle(qAnnBatchIndexedSql)),
+    Query("q_dedup_served", qDedupServed, Oracle(Dedup.qDedupIncrementalSql)))
 }

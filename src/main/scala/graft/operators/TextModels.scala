@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 
 /** §2 F (continued) — f25/f26: the two model-based corpus-selection
   * passes every web-scale training pipeline runs between the rule
@@ -380,15 +380,9 @@ object TextModels {
       FROM mr CROSS JOIN auc
       GROUP BY decile, auc_micro ORDER BY decile"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_calibration" -> (qCalibration _),
-    "q_quality_classifier" -> (qQualityClassifier _),
-    "q_dsir" -> (qDsir _),
-    "q_pipeline_e2e" -> (qPipelineE2e _))
-
-  val oracles: Map[String, String] = Map(
-    "q_calibration" -> qCalibrationSql,
-    "q_quality_classifier" -> qQualityClassifierSql,
-    "q_dsir" -> qDsirSql,
-    "q_pipeline_e2e" -> qPipelineE2eSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_calibration", qCalibration, Oracle(qCalibrationSql)),
+    Query("q_quality_classifier", qQualityClassifier, Oracle(qQualityClassifierSql)),
+    Query("q_dsir", qDsir, Oracle(qDsirSql)),
+    Query("q_pipeline_e2e", qPipelineE2e, Oracle(qPipelineE2eSql)))
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Oracle, Query, Tables}
 import graft.functions.TextFns._
 
 /** §2 F — text analysis over `documents`: language-ID heuristic,
@@ -1529,73 +1529,38 @@ object TextOps {
       GROUP BY split ORDER BY split"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_group_split" -> (qGroupSplit _),
-    "q_span_corruption" -> (qSpanCorruption _),
-    "q_ttr" -> (qTtr _),
-    "q_bigram_entropy" -> (qBigramEntropy _),
-    "q_head_mass" -> (qHeadMass _),
-    "q_oov_rate" -> (qOovRate _),
-    "q_quality_sweep" -> (qQualitySweep _),
-    "q_pmi_pairs" -> (qPmiPairs _),
-    "q_lang_mix" -> (qLangMix _),
-    "q_ngram_novelty" -> (qNgramNovelty _),
-    "q_lm_backoff" -> (qLmBackoff _),
-    "q_tfidf" -> (qTfidf _),
-    "q_span_dedup" -> (qSpanDedup _),
-    "q_perplexity" -> (qPerplexity _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_chunk_docs" -> (qChunkDocs _),
-    "q_pack_sequences" -> (qPackSequences _),
-    "q_repetition" -> (qRepetition _),
-    "q_decontaminate_fuzzy" -> (qDecontaminateFuzzy _),
-    "q_decontaminate" -> (qDecontaminate _),
-    "q_domain_cap" -> (qDomainCap _),
-    "q_bm25" -> (qBm25 _),
-    "q_length_histogram" -> (qLengthHistogram _),
-    "q_sample_mix" -> (qSampleMix _),
-    "q_temperature_mix" -> (qTemperatureMix _),
-    "q_epoch_plan" -> (qEpochPlan _),
-    "q_redact_pii" -> (qRedactPii _),
-    "q_vocab" -> (qVocab _),
-    "q_corpus_filter" -> (qCorpusFilter _),
-    "q_lang_id" -> (qLangId _),
-    "q_quality_score" -> (qQualityScore _),
-    "q_token_count" -> (qTokenCount _),
-    "q_fingerprint" -> (qFingerprint _))
-
-  val oracles: Map[String, String] = Map(
-    "q_group_split" -> qGroupSplitSql,
-    "q_span_corruption" -> qSpanCorruptionSql,
-    "q_ttr" -> qTtrSql,
-    "q_bigram_entropy" -> qBigramEntropySql,
-    "q_head_mass" -> qHeadMassSql,
-    "q_oov_rate" -> qOovRateSql,
-    "q_quality_sweep" -> qQualitySweepSql,
-    "q_pmi_pairs" -> qPmiPairsSql,
-    "q_lang_mix" -> qLangMixSql,
-    "q_ngram_novelty" -> qNgramNoveltySql,
-    "q_lm_backoff" -> qLmBackoffSql,
-    "q_tfidf" -> qTfidfSql,
-    "q_span_dedup" -> qSpanDedupSql,
-    "q_perplexity" -> qPerplexitySql,
-    "q_heavy_hitters" -> qHeavyHittersSql,
-    "q_chunk_docs" -> qChunkDocsSql,
-    "q_pack_sequences" -> qPackSequencesSql,
-    "q_repetition" -> qRepetitionSql,
-    "q_decontaminate_fuzzy" -> qDecontaminateFuzzySql,
-    "q_decontaminate" -> qDecontaminateSql,
-    "q_domain_cap" -> qDomainCapSql,
-    "q_bm25" -> qBm25Sql,
-    "q_length_histogram" -> qLengthHistogramSql,
-    "q_sample_mix" -> qSampleMixSql,
-    "q_temperature_mix" -> qTemperatureMixSql,
-    "q_epoch_plan" -> qEpochPlanSql,
-    "q_redact_pii" -> qRedactPiiSql,
-    "q_vocab" -> qVocabSql,
-    "q_corpus_filter" -> qCorpusFilterSql,
-    "q_lang_id" -> qLangIdSql,
-    "q_quality_score" -> qQualityScoreSql,
-    "q_token_count" -> qTokenCountSql,
-    "q_fingerprint" -> qFingerprintSql)
+  val registry: Seq[Query] = Seq(
+    Query("q_group_split", qGroupSplit, Oracle(qGroupSplitSql)),
+    Query("q_span_corruption", qSpanCorruption, Oracle(qSpanCorruptionSql)),
+    Query("q_ttr", qTtr, Oracle(qTtrSql)),
+    Query("q_bigram_entropy", qBigramEntropy, Oracle(qBigramEntropySql)),
+    Query("q_head_mass", qHeadMass, Oracle(qHeadMassSql)),
+    Query("q_oov_rate", qOovRate, Oracle(qOovRateSql)),
+    Query("q_quality_sweep", qQualitySweep, Oracle(qQualitySweepSql)),
+    Query("q_pmi_pairs", qPmiPairs, Oracle(qPmiPairsSql)),
+    Query("q_lang_mix", qLangMix, Oracle(qLangMixSql)),
+    Query("q_ngram_novelty", qNgramNovelty, Oracle(qNgramNoveltySql)),
+    Query("q_lm_backoff", qLmBackoff, Oracle(qLmBackoffSql)),
+    Query("q_tfidf", qTfidf, Oracle(qTfidfSql)),
+    Query("q_span_dedup", qSpanDedup, Oracle(qSpanDedupSql)),
+    Query("q_perplexity", qPerplexity, Oracle(qPerplexitySql)),
+    Query("q_heavy_hitters", qHeavyHitters, Oracle(qHeavyHittersSql)),
+    Query("q_chunk_docs", qChunkDocs, Oracle(qChunkDocsSql)),
+    Query("q_pack_sequences", qPackSequences, Oracle(qPackSequencesSql)),
+    Query("q_repetition", qRepetition, Oracle(qRepetitionSql)),
+    Query("q_decontaminate_fuzzy", qDecontaminateFuzzy, Oracle(qDecontaminateFuzzySql)),
+    Query("q_decontaminate", qDecontaminate, Oracle(qDecontaminateSql)),
+    Query("q_domain_cap", qDomainCap, Oracle(qDomainCapSql)),
+    Query("q_bm25", qBm25, Oracle(qBm25Sql)),
+    Query("q_length_histogram", qLengthHistogram, Oracle(qLengthHistogramSql)),
+    Query("q_sample_mix", qSampleMix, Oracle(qSampleMixSql)),
+    Query("q_temperature_mix", qTemperatureMix, Oracle(qTemperatureMixSql)),
+    Query("q_epoch_plan", qEpochPlan, Oracle(qEpochPlanSql)),
+    Query("q_redact_pii", qRedactPii, Oracle(qRedactPiiSql)),
+    Query("q_vocab", qVocab, Oracle(qVocabSql)),
+    Query("q_corpus_filter", qCorpusFilter, Oracle(qCorpusFilterSql)),
+    Query("q_lang_id", qLangId, Oracle(qLangIdSql)),
+    Query("q_quality_score", qQualityScore, Oracle(qQualityScoreSql)),
+    Query("q_token_count", qTokenCount, Oracle(qTokenCountSql)),
+    Query("q_fingerprint", qFingerprint, Oracle(qFingerprintSql)))
 }

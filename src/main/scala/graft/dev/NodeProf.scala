@@ -63,7 +63,6 @@ object NodeProf {
       def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
     })
     args.foreach { n =>
-      graft.operators.Dedup.clearShared()
       lastQe = null
       // t0 BEFORE construction: eager localCheckpoints (memo builds,
       // chained-leg materializations) run inside the builder call, and

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.GraftPlanBridge
 import graft.{Oracle, Query, Tables}
 import graft.functions.TextFns._
 
@@ -14,6 +13,11 @@ import graft.functions.TextFns._
   * carries the embedding near-dup. At 100 TB the band join is the only
   * wide stage and its key space (band, bkey) is uniform by
   * construction (md5), so no skew salting is needed.
+  *
+  * Nothing is kept between calls: a query checkpoints the
+  * intermediates its plan reads more than once (shingle sets, pair
+  * graph, CC labels) and passes them on as values, so every call reads
+  * the files under `dir` as they are then.
   */
 object Dedup {
 
@@ -29,42 +33,6 @@ object Dedup {
   val qDedupExactSql: String =
     s"""SELECT md5($normDuck) AS content_key, COUNT(*) AS n_copies, MIN(doc_id) AS keeper
       FROM documents GROUP BY 1 ORDER BY content_key"""
-
-  /** Session-level cache of shared dedup intermediates, keyed by
-    * (session UUID, sf dir, plan name). The UUID, unlike an identity
-    * hash, is unique among live sessions, so two sessions never serve
-    * each other's builds. The MinHash pair graph
-    * feeds THREE queries (d2 pairs, d6 components, d7 canonical
-    * selection); without sharing, d7 re-runs d6's whole iterative CC
-    * which re-runs d2's signature+verify pipeline. A production
-    * pipeline would persist the pair graph once and every consumer
-    * would read it — this is the in-session equivalent (eager
-    * localCheckpoint = materialized once, plans downstream read the
-    * checkpointed blocks). Entries are tiny (verified pairs + labels,
-    * not documents). */
-  private val sharedPlans =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-
-  /** Drop all memoized intermediates. The bench calls this before each
-    * timed run so d2/d6/d7 each report their full standalone pipeline
-    * cost instead of a cache hit on the first dedup query's build;
-    * dropped checkpoints are reclaimed by the ContextCleaner once
-    * unreferenced. Results are identical either way. */
-  private[graft] def clearShared(): Unit = sharedPlans.clear()
-
-  private def memo(spark: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame = {
-    // bounded: a long-lived JVM cycling many sessions/dirs must not pin
-    // checkpointed blocks forever — past 64 entries the cache resets
-    // (worst case is one recompute per consumer, never wrong results)
-    if (sharedPlans.size > 64) sharedPlans.clear()
-    sharedPlans.getOrElseUpdate((GraftPlanBridge.sessionUUID(spark), dir, key),
-      build.localCheckpoint(true))
-  }
-
-  /** Verified MinHash near-dup pairs (doc_a, doc_b, jaccard), unordered
-    * — the shared pair graph. See [[qDedupMinhash]] for the LSH notes. */
-  private[graft] def minhashPairs(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "minhash_pairs") { minhashPairsPlan(spark, dir) }
 
   /** d2 — MinHash+LSH near-dup: 3-gram shingles → 8 minhashes → 4
     * bands of 2 → band-bucket join → verified shingle-Jaccard ≥ 0.2.
@@ -86,14 +54,14 @@ object Dedup {
     * it several times (band sides + verify sides) and Catalyst does
     * not share non-exchange subplans across self-join branches — at
     * 100 TB you'd persist the shingle table for the same reason. */
-  private[graft] def shingleSets(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "shingle_sets") {
-      graft.functions.GraftFunctions.register(spark)
-      val d = Tables(spark, dir, "documents")
-      Tables.fanout(d.select(col("doc_id"), col("text")))
-        .select(col("doc_id"), expr(shSpark).as("sh"))
-        .filter(size(col("sh")) > 0)
-    }
+  private[graft] def shingleSets(spark: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(spark)
+    val d = Tables(spark, dir, "documents")
+    Tables.fanout(d.select(col("doc_id"), col("text")))
+      .select(col("doc_id"), expr(shSpark).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .localCheckpoint(true)
+  }
 
   /** 8-minhash signature per doc (4-hex-digit slices of ONE md5 per
     * shingle — see [[qDedupMinhash]] for why slicing one hash is
@@ -146,8 +114,8 @@ object Dedup {
     * (t = 0.2), ties to smaller r. Pure arithmetic over a 4×39
     * literal grid — no table scan — so the result is data-independent
     * and cached for the JVM (the index build and the served screen
-    * both consult it; clearShared leaves it alone because it is a
-    * planner constant, not a corpus-derived memo). Lands on (2, 4),
+    * both consult it; it is a planner constant, not derived from any
+    * corpus, so it can never go stale). Lands on (2, 4),
     * d2's shipped config — see [[qDedupTuned]] for why the verify
     * weight is what kills the candidate-exploding (1, 8) pick. */
   private[graft] def tunedBanding(spark: SparkSession): (Int, Int) = {
@@ -174,8 +142,14 @@ object Dedup {
     }
   }
 
-  private def minhashPairsPlan(spark: SparkSession, dir: String): DataFrame = {
-    val sh = shingleSets(spark, dir)
+  /** Verified MinHash near-dup pairs (doc_a, doc_b, jaccard), unordered
+    * — the pair graph of the d-family. Checkpointed eagerly because its
+    * consumers read it several times (both edge directions, every CC
+    * round). It is built from the caller's shingle sets, so a query
+    * that needs both binds [[shingleSets]] once and passes it here:
+    * each intermediate is built once per query, from the files under
+    * `dir` as they are at that call. */
+  private[graft] def minhashPairs(sh: DataFrame): DataFrame = {
     val bands = minhashBands4x2(minhashSig(sh))
     val cand = bands.as("x").join(bands.as("y"),
         col("x.b") === col("y.b") && col("x.bkey") === col("y.bkey") &&
@@ -190,10 +164,11 @@ object Dedup {
         (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 6))
     withSets.filter(col("jaccard") >= 0.2)
       .select("doc_a", "doc_b", "jaccard")
+      .localCheckpoint(true)
   }
 
   def qDedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    minhashPairs(spark, dir).orderBy("doc_a", "doc_b")
+    minhashPairs(shingleSets(spark, dir)).orderBy("doc_a", "doc_b")
 
   val qDedupMinhashSql: String =
     s"""WITH s AS (
@@ -641,29 +616,31 @@ object Dedup {
     * between rounds). Driver-side logic is loop CONTROL only (a
     * per-round convergence count), never data. Oracle: DuckDB
     * recursive CTE reaching the same fixpoint. */
-  /** per-doc connected-component labels over the MinHash pair graph
-    * (see [[qDedupCc]] for the algorithm notes); only docs appearing
-    * in at least one pair are returned. */
-  private[graft] def ccLabels(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, dir, "cc_labels") { ccLabelsPlan(spark, dir) }
+  def qDedupCc(spark: SparkSession, dir: String): DataFrame =
+    ccOver(minhashPairs(shingleSets(spark, dir)))._1
+      .groupBy(col("label").as("component"))
+      .agg(count(lit(1)).as("n_docs"), max("id").as("max_doc"))
+      .orderBy("component")
 
-  private def ccLabelsPlan(spark: SparkSession, dir: String): DataFrame =
-    ccOver(minhashPairs(spark, dir).select("doc_a", "doc_b"))._1
-
-  /** d6's min-label propagation over an arbitrary (doc_a, doc_b) pair
-    * frame — returns (labels, rounds run). Shared by the cold pass
-    * (d6) and the standing-side seed of the incremental pass (d19). */
-  private[graft] def ccOver(pairs0: DataFrame): (DataFrame, Int) = {
-    val pairs = pairs0
-    // symmetric edge set, pre-partitioned on the per-round join key so
-    // the checkpointed LogicalRDD carries HashPartitioning(dst) and
-    // every round's message join reuses it instead of re-shuffling the
-    // (at scale, huge) edge table — only the tiny label side moves
-    val edges = pairs
+  /** Symmetric edge set (src, dst) of a (doc_a, doc_b) pair frame,
+    * pre-partitioned on the per-round join key so the checkpointed
+    * LogicalRDD carries HashPartitioning(dst) and every round's message
+    * join reuses it instead of re-shuffling the (at scale, huge) edge
+    * table — only the tiny label side moves. Shared by d6 and d19. */
+  private def symmetricEdges(pairs: DataFrame): DataFrame =
+    pairs.select("doc_a", "doc_b")
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .toDF("src", "dst")
       .repartition(col("dst"))
       .localCheckpoint(false)
+
+  /** d6's min-label propagation over a (doc_a, doc_b) pair frame —
+    * returns (per-doc labels, rounds run); only docs appearing in at
+    * least one pair are labelled. Shared by the cold pass (d6 and its
+    * consumers) and the standing-side seed of the incremental pass
+    * (d19). */
+  private[graft] def ccOver(pairs: DataFrame): (DataFrame, Int) = {
+    val edges = symmetricEdges(pairs)
     // seed = round 1 fused into one agg: label0(id) = min(id, min
     // neighbor). groupBy(dst) matches the edge partitioning — map-side
     // only, no exchange. Every node appears as a dst (symmetry).
@@ -706,12 +683,6 @@ object Dedup {
     (labels, rounds)
   }
 
-  def qDedupCc(spark: SparkSession, dir: String): DataFrame =
-    ccLabels(spark, dir)
-      .groupBy(col("label").as("component"))
-      .agg(count(lit(1)).as("n_docs"), max("id").as("max_doc"))
-      .orderBy("component")
-
   /** d19 core — INCREMENTAL connected components with FRONTIER
     * propagation (the daily graph-maintenance twin of d8: yesterday's
     * components are paid for; today's batch must not re-run CC over
@@ -729,17 +700,13 @@ object Dedup {
     * volume). */
   private[graft] def incrLabels(spark: SparkSession, dir: String)
       : (DataFrame, Int, Long) = {
-    val pairs = minhashPairs(spark, dir).select("doc_a", "doc_b")
+    val pairs = minhashPairs(shingleSets(spark, dir)).select("doc_a", "doc_b")
     val isBatch = (c: org.apache.spark.sql.Column) => c % 10 === 7
     val standingPairs = pairs.filter(!isBatch(col("doc_a")) && !isBatch(col("doc_b")))
     val newPairs = pairs.filter(isBatch(col("doc_a")) || isBatch(col("doc_b")))
       .localCheckpoint(false)
     val standing = ccOver(standingPairs)._1 // yesterday's converged labels
-    val edges = pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst")
-      .repartition(col("dst"))
-      .localCheckpoint(false)
+    val edges = symmetricEdges(pairs)
     var labels = edges.select(col("dst").as("id")).distinct()
       .join(standing.select(col("id"), col("label").as("seed")), Seq("id"), "left")
       .select(col("id"), coalesce(col("seed"), col("id")).as("label"))
@@ -820,7 +787,7 @@ object Dedup {
   def qDedupKeepBest(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = Tables(spark, dir, "documents").select(col("doc_id"))
-    val labels = ccLabels(spark, dir)
+    val labels = ccOver(minhashPairs(shingleSets(spark, dir)))._1
       .select(col("id").as("doc_id"), col("label"))
     val scores = TextOps.qQualityScore(spark, dir).select(col("doc_id"), col("score"))
     val comp = d.join(labels, Seq("doc_id"), "left")
@@ -866,7 +833,7 @@ object Dedup {
     * batch is tiny next to the index, so the band/key joins broadcast
     * the BATCH side and the index streams map-only past it — per-day
     * cost is O(batch + index scan), with the index signature table
-    * persisted in practice (memoized here). */
+    * persisted in practice (checkpointed here). */
   def qDedupIncremental(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables(spark, dir, "documents")
     val isNew = col("doc_id") % 10 === 7
@@ -979,7 +946,7 @@ object Dedup {
         (col("sa.n") + col("sb.n") - col("inter")), 6))
       .filter(col("jaccard") >= 0.2)
       .select("doc_a", "doc_b", "jaccard")
-    val caught = minhashPairs(spark, dir)
+    val caught = minhashPairs(sh)
       .select(col("doc_a"), col("doc_b"), lit(1).as("caught"))
     withJ.join(caught, Seq("doc_a", "doc_b"), "left")
       .withColumn("bucket", (floor(col("jaccard") * 10) / 10).cast("double"))
@@ -1267,7 +1234,7 @@ object Dedup {
     * each document leaves with a verdict: `exact_dup` (and its
     * keeper), `near_dup` (and its component's canonical), or `kept`
     * (with its token counts after substring cleaning). Every stage is
-    * the gated component verbatim (shared memoized pair graph, d7's
+    * the gated component verbatim (the checkpointed pair graph, d7's
     * exact quality ranking, d14's coverage-delta machinery); the
     * composition is itself oracle-gated at both scales — the oracle
     * replays exact keying, the recursive-CTE components, the quality
@@ -1296,7 +1263,8 @@ object Dedup {
       .select(col("doc_id"), lit("exact_dup").as("verdict"), col("ek").as("dup_of"),
         lit(null).cast("long").as("n_tokens"), lit(null).cast("long").as("n_removed"))
     val keepers1 = s1.filter(col("doc_id") === col("ek")).select("doc_id", "text")
-    val labels = ccLabels(spark, dir).select(col("id").as("doc_id"), col("label"))
+    val labels = ccOver(minhashPairs(shingleSets(spark, dir)))._1
+      .select(col("id").as("doc_id"), col("label"))
     val scores = TextOps.qQualityScore(spark, dir).select(col("doc_id"), col("score"))
     val w = Window.partitionBy("component").orderBy(col("score").desc, col("doc_id"))
     val ranked = keepers1.join(labels, Seq("doc_id"), "left")
@@ -1389,7 +1357,7 @@ object Dedup {
     * the d2 pair graph you already persisted. Undirected ⇒ no
     * dangling nodes. */
   def qDedupPagerank(spark: SparkSession, dir: String): DataFrame =
-    pagerankOf(minhashPairs(spark, dir).select("doc_a", "doc_b"))
+    pagerankOf(minhashPairs(shingleSets(spark, dir)).select("doc_a", "doc_b"))
 
   /** d16 core over any (doc_a, doc_b) undirected pair frame — the
     * spec drives hand-built graphs against an in-memory replay of the
@@ -1709,7 +1677,7 @@ object Dedup {
     * dedup it describes. */
   def qDedupReport(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables(spark, dir, "documents").select(col("doc_id"), col("n_chars"))
-    val labels = ccLabels(spark, dir)
+    val labels = ccOver(minhashPairs(shingleSets(spark, dir)))._1
       .select(col("id").as("doc_id"), col("label"))
     val comp = d.join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -1767,11 +1735,11 @@ object Dedup {
     * candidate recall is the LSH band config's, not the threshold's
     * (d9 measures that axis). Thresholds compare as j/10.0 doubles
     * against the round(,6) jaccards — identical IEEE values both
-    * engines (f34's argument). Plan: the memoized verified pair table
+    * engines (f34's argument). Plan: the checkpointed verified pair table
     * (bounded) crossed with a broadcast 8-row threshold dim, two
     * bounded aggs — nothing re-touches shingles. */
   def qDedupSweep(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashPairs(spark, dir)
+    val pairs = minhashPairs(shingleSets(spark, dir))
     val ts = spark.range(2, 10).select((col("id") / 10.0).as("t"))
     pairs.crossJoin(broadcast(ts))
       .filter(col("jaccard") >= col("t"))
@@ -1804,11 +1772,13 @@ object Dedup {
     * estimator is deliberately coarse (variance ∝ 1/hashes — the spec
     * gates the identical-doc and ordering invariants, not tightness;
     * production runs ≥64 hashes where it concentrates). Plan: the
-    * memoized pair graph + the memoized signature table joined twice
-    * — nothing re-touches shingles, the bit math is map-only. */
+    * checkpointed pair graph + the signature of the same shingle sets
+    * joined twice — nothing re-touches shingles, the bit math is
+    * map-only. */
   def qDedupBbit(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashPairs(spark, dir)
-    val sig = minhashSig(shingleSets(spark, dir))
+    val sh = shingleSets(spark, dir)
+    val pairs = minhashPairs(sh)
+    val sig = minhashSig(sh)
     val bitCols = (0 until 8).map(k =>
       expr(s"(locate(substr(h$k, 4, 1), '0123456789abcdef') - 1) % 2").as(s"b$k"))
     val bits = sig.select(col("doc_id") +: bitCols: _*)

@@ -6,8 +6,7 @@ import org.apache.spark.sql.classic
 
 /** Minimal bridge into the `org.apache.spark.sql` package namespace:
   * `Dataset.ofRows` is `private[sql]`, and building a DataFrame from a
-  * custom LogicalPlan (graft.plans.AsofJoin) requires it; per-session
-  * memos key on the equally private `sessionUUID`. This is the
+  * custom LogicalPlan (graft.plans.AsofJoin) requires it. This is the
   * standard technique Spark extension libraries use to expose custom
   * operators through the public DataFrame API.
   */
@@ -17,9 +16,4 @@ object GraftPlanBridge {
 
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
-
-  /** The session's `private[sql]` UUID, the key for per-session memos:
-    * unique among live sessions, which `System.identityHashCode` is not. */
-  def sessionUUID(spark: SparkSession): String =
-    spark.asInstanceOf[classic.SparkSession].sessionUUID
 }

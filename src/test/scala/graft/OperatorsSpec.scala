@@ -894,6 +894,28 @@ class OperatorsSpec extends SparkTestBase {
         "(batch-incident components only)")
   }
 
+  test("d6 reads the files under dir on every call: a rewritten corpus is not served a previous call's components") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-stale-input")
+    val docs = Tables(spark, sfDir, "documents")
+    def writeCorpus(keep: org.apache.spark.sql.Column): Unit =
+      docs.filter(keep).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def components(s: org.apache.spark.sql.SparkSession) =
+      SparkEntry.queries("q_dedup_cc")(s, dir.toString).collect().map(_.toSeq).toSeq
+    try {
+      writeCorpus(col("doc_id") % 3 =!= 0)
+      val first = components(spark)
+      writeCorpus(col("doc_id") % 3 =!= 1)
+      val second = components(spark)
+      val fresh = components(spark.newSession())
+      assert(fresh.nonEmpty, "the rewritten corpus must still have components")
+      assert(second == fresh,
+        "the second call in one session must equal a fresh session's result on the new files")
+      assert(second != first, "the two corpora must yield different components")
+    } finally {
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
+
   test("a32 cli local route: subdataset parse strips quotes, band/joined branches populate, no upload legs") {
     val rows = operators.IngestOps.qCliLocalRoute(spark, sfDir).collect()
     assert(rows.nonEmpty)

@@ -725,10 +725,10 @@ class PlanAuditSpec extends SparkTestBase {
   }
 
   test("library-wide window audit: unpartitioned windows only where the input is provably bounded") {
-    // Bench silences the 'No Partition Defined for Window operation!'
-    // WARN class for signal/noise; THIS assertion is the real gate — a
-    // NEW unpartitioned window in ANY registered query fails here
-    // instead of regressing silently in bench logs. The whitelist is
+    // GraftSession.local silences the 'No Partition Defined for Window
+    // operation!' WARN class for signal/noise; THIS assertion is the
+    // real gate — a NEW unpartitioned window in ANY registered query
+    // fails here instead of regressing silently in muted logs. The whitelist is
     // the round-11 bounded-input audit: every entry's global window
     // reads a top-N cut, a value-range histogram, or a ≤k-row control
     // table — NEVER corpus-scale rows (those ride TwoPhase). Adding a

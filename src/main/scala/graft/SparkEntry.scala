@@ -32,9 +32,16 @@ object SparkEntry {
     Retrieval.registry, Bpe.registry, Pca.registry, Asof.registry, Serving.registry,
     Seeding.registry, OpsAudit.registry, graft.multimodal.Media.registry).flatten)
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each build
+    * first registers graft's functions, so a query runs on a session
+    * built without `graft.GraftExtensions` too. */
   val queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map { case (name, q) => name -> q.build }
+    registry.map { case (name, q) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        graft.functions.GraftFunctions.register(spark)
+        q.build(spark, dir)
+      }
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables; rows-only queries have none. */

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -159,82 +158,4 @@ case class QuantDist2(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): QuantDist2 =
     copy(left = newLeft, right = newRight)
-}
-
-object GraftFunctions {
-  /** Register graft-native expressions and rules on an EXISTING
-    * session (idempotent) — the runtime fallback for sessions built
-    * without `spark.sql.extensions=graft.GraftExtensions`. */
-  def register(spark: SparkSession): Unit = {
-    // fast idempotence: operators call this defensively from query
-    // builders, so skip the 12 createOrReplace calls (and their
-    // "replaced a previously registered function" warn spam) once the
-    // session has the graft surface; graft_geohash8 is the sentinel
-    // (last name registered below, and also present when the session
-    // was built with GraftExtensions)
-    // sentinel = the newest-registered function: adding a function and
-    // forgetting to bump this would silently skip it in any session
-    // that registered the older set first
-    if (spark.sessionState.functionRegistry.functionExists(
-        org.apache.spark.sql.catalyst.FunctionIdentifier("graft_qdist2")))
-      return
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_qdot", exprs => QuantDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_intersect_count", exprs => IntersectCount(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle3", exprs => Shingle3(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", exprs => SimHash64(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hyperband", exprs => HyperBand(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sid60", exprs => Sid60(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingle_sids", exprs => ShingleSids(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_posting_records", exprs => PostingRecords(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_window_sids", exprs => WindowSids(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_capped_list", exprs => CappedList(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mg_topk", exprs => MisraGries(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv", exprs => Kmv(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_repstats", exprs => RepStats(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_geohash8", exprs => Geohash8(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hilbert", exprs => HilbertD(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pair_codes", exprs => PairCodes(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ray_cross", exprs => RayCrossings(exprs(0), exprs(1), exprs(2), exprs(3)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_clip", exprs => ClipBox(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dp", exprs => DpSimplify(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_reproject", exprs => Reproject(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk_min", exprs => TopKMin(exprs(0), exprs(1)), "built-in")
-    // graft_qdist2 is the registration sentinel (newest function) —
-    // keep it LAST here and mirrored in GraftExtensions
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_qdist2", exprs => QuantDist2(exprs(0), exprs(1)), "built-in")
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.IntersectCountRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.IntersectCountRewrite
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RangeJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RangeJoinRewrite
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsofJoinStrategy
-  }
 }

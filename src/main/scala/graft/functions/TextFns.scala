@@ -20,8 +20,8 @@ object TextFns {
     * zip_with'd together then array_distinct — is interpreted
     * per-element and was the hottest projection in the dedup family;
     * a window/lead formulation is codegen'd but shuffles the token
-    * stream. Requires graft_shingle3 (GraftExtensions or
-    * GraftFunctions.register). */
+    * stream. Needs graft's functions on the session (see
+    * [[GraftFunctions]]). */
   val shSpark: String = "graft_shingle3(split(text, ' '))"
 
   val shDuck: String =

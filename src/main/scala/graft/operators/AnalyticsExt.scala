@@ -865,7 +865,6 @@ object AnalyticsExt {
     * the lineitem scan + set-agg up to 9 times when left to
     * ReuseExchange (subtree drift defeats reuse). */
   private def basketsOf(spark: SparkSession, dir: String, dim: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val li = Tables(spark, dir, "lineitem").select("l_orderkey", "l_partkey")
     val p = Tables(spark, dir, "part").select("p_partkey", "p_brand")
     li.join(broadcast(p), col("l_partkey") === col("p_partkey"))

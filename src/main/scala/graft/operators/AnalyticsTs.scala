@@ -193,7 +193,6 @@ object AnalyticsTs {
   // corpus' 150 users exercise; sf0.1's 1500 users exercise genuine
   // estimation).
   def qSegmentOverlap(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val k = 256
     val e = Tables.events(spark, dir)
       .select(col("event_type"), expr("graft_sid60(CAST(user_id AS STRING))").as("h"))
@@ -875,7 +874,6 @@ object AnalyticsTs {
   // partition of 64 rows. At 100 TB: one extra map pass over exposed
   // users, constant-size everything after.
   def qBootstrapPoisson(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val reps = 64
     // floor(CDF_Poisson(1)(k) * 2^60), k = 0..7
     val thresholds = Seq(

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Oracle, Query, Tables}
-import graft.functions.GraftFunctions
 
 /** §2 E — similarity search over `embeddings` (64-dim unit floats).
   *
@@ -21,8 +20,8 @@ object Ann {
     * array<float> columns, rounded to 6 dp, via the native graft_dot
     * Catalyst expression (codegen'd primitive loop; left-to-right
     * accumulation matches the oracle's list_sum fold bit-for-bit).
-    * Requires GraftFunctions.register(spark) — every operator here
-    * does it. */
+    * Needs graft's functions on the session (see
+    * [[graft.functions.GraftFunctions]]). */
   def cosineSpark(a: String, b: String): String =
     s"round(graft_dot($a, $b), 6)"
 
@@ -83,7 +82,6 @@ object Ann {
     * the exact baseline every ANN variant is judged against. The
     * single-row query side is broadcast — no shuffle of the corpus. */
   def qAnnBrute(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     e.crossJoin(broadcast(q))
@@ -110,7 +108,6 @@ object Ann {
     * unfiltered ANN result — the naive alternative — breaks exactly
     * when the filter is selective, which is when it matters. */
   def qAnnFiltered(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val admissible = Tables(spark, dir, "documents")
       .filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
@@ -147,7 +144,6 @@ object Ann {
     * shuffle-free, and the cosine touches 1/nlist of the admissible
     * rows. */
   def qAnnFilteredIvf(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val admissible = Tables(spark, dir, "documents")
       .filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
@@ -211,7 +207,6 @@ object Ann {
   /** e2 — LSH-bucketed ANN: search only the query's bucket, exact
     * cosine inside it, top-5. */
   def qAnnLsh(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val bucketed = e.withColumn("bucket", expr(bucketSpark))
     val q = bucketed.filter(col("vec_id") === 0)
@@ -239,7 +234,6 @@ object Ann {
     * table; the probe list prunes the scan to 1/nlist of the corpus.
     */
   def qAnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     // per-(cell, dim) exact centroid numerators + cell sizes
     val pe = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "v")))
@@ -291,7 +285,6 @@ object Ann {
     * single-bucket e2 loses become reachable. Probe list is a pure
     * explode on the broadcast query side. */
   def qAnnMultiprobe(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val bucketed = e.withColumn("bucket", expr(bucketSpark))
     val q = bucketed.filter(col("vec_id") === 0)
@@ -322,7 +315,6 @@ object Ann {
     * via a rank window keyed by query id — with production batch
     * sizes the key space saturates the cluster. */
   def qAnnBatch(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val e = Tables(spark, dir, "embeddings")
     val qs = e.filter(col("vec_id") < 8)
@@ -375,7 +367,6 @@ object Ann {
     * fan-out + per-vector min aggs; nothing but the 10 finalists ever
     * touches full vectors again. */
   def qAnnPq(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val anchors = e.filter(col("vec_id").between(1, 4))
       .select(col("vec_id").as("a_id"), col("embedding").as("a"))
@@ -452,7 +443,6 @@ object Ann {
     * deterministic cross-engine, so the composition is oracle-exact
     * like e3/e6 separately. */
   def qAnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     // probe: exact decimal centroid numerators, best cell by query dot
     val pe = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "v")))
@@ -579,7 +569,6 @@ object Ann {
     * encode is one map-only pass at ingest; int64 holds through
     * ~10⁹-vector cells (q·s ≤ 5·10⁵ · n·5·10⁵ per dim · 64). */
   def qAnnIvfPqRes(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val micro = "v -> CAST(round(round(CAST(v AS DOUBLE), 6) * 1000000, 0) AS BIGINT)"
     val eq = e.select(col("vec_id"), col("label"), col("embedding"),
@@ -690,7 +679,6 @@ object Ann {
     * the only exact-scan component, which is precisely why recall
     * evaluation is a batch job and not an online check. */
   def qAnnRecall(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val exact = e.crossJoin(broadcast(q))
@@ -1238,7 +1226,6 @@ object Ann {
   def trainCentroids(vectors: DataFrame, k: Int, maxIters: Int = 20,
       tol: Double = 1e-4): (Map[Int, IndexedSeq[Double]], Int, Double) = {
     val spark = vectors.sparkSession
-    GraftFunctions.register(spark)
     val pe = quantized(vectors)
     var cents: Map[Int, IndexedSeq[Double]] =
       pe.filter(col("vec_id") < k)
@@ -1294,7 +1281,6 @@ object Ann {
     * bytes-per-vector instead of floats, and only 32 raw vectors are
     * touched for the rerank — the same serve shape e12 persists. */
   def qAnnSq8(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val eq = e.select(col("vec_id"), col("label"), col("embedding"),
       expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))").as("qvec"))
@@ -1363,7 +1349,6 @@ object Ann {
     * so the whole funnel is oracle-gated; recall vs brute is the
     * corpus's prefix-informativeness, measured in the spec. */
   def qAnnMrl(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     mrlTopK(Tables(spark, dir, "embeddings"), qId = 0)
   }
 
@@ -1415,7 +1400,6 @@ object Ann {
     * geometry); the spec proves the prune fires on the clustered
     * GenVecs corpus and still matches brute force exactly. */
   def qAnnRange(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     rangeSearch(Tables(spark, dir, "embeddings"), tau = 0.3)
   }
 
@@ -1767,7 +1751,6 @@ object Ann {
     * is the one exact-scan component, which is exactly why this is a
     * batch eval and not an online check (e10's argument). */
   def qAnnNprobeSweep(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val pe = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "v")))
     val cent = pe.groupBy("label", "i")

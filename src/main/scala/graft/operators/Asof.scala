@@ -62,7 +62,6 @@ object Asof {
     * dedup the c21 plan pays a shuffle + hash-agg for is folded into
     * the zipper's sort via the tiebreak ordering. */
   def qAsofNative(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.events(spark, dir)
     val o = Tables(spark, dir, "orders")
     val ev = e.filter(col("event_type") === "purchase")
@@ -97,7 +96,6 @@ object Asof {
     * -15..15 together; TPC-H-era data is all post-1970).
     * Semantics and oracle are exactly c21's. */
   def qAsofSaltedNative(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val bucketDays = 16L
     val e = Tables.events(spark, dir)
     val o = Tables(spark, dir, "orders")

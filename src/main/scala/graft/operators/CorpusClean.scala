@@ -742,7 +742,6 @@ object CorpusClean {
     * bounded totals×suites cross (broadcast both), so clean sources
     * REPORT 0 rather than vanish — the datasheet's point. */
   def qContaminationMatrix(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
     val sh = d.select(col("doc_id"), col("source"),
       explode(expr(graft.functions.TextFns.shSpark)).as("shingle"))

@@ -55,7 +55,6 @@ object Dedup {
     * not share non-exchange subplans across self-join branches — at
     * 100 TB you'd persist the shingle table for the same reason. */
   private[graft] def shingleSets(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
     Tables.fanout(d.select(col("doc_id"), col("text")))
       .select(col("doc_id"), expr(shSpark).as("sh"))
@@ -198,7 +197,6 @@ object Dedup {
     * oracle keeps the explicit 16-lambda-fold formulation, proving the
     * equivalence every run. */
   def qDedupSimhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
     d.select(col("doc_id"),
         expr("graft_simhash64(split(text, ' '))")(0).as("simhash"))
@@ -244,7 +242,6 @@ object Dedup {
     * 64-partial-agg formulation paid two shuffles and a heavy codegen
     * unit for what is a pure per-row computation. */
   private[graft] def simhash64(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
     d.select(col("doc_id"), expr("graft_simhash64(split(text, ' '))").as("ch"))
       .select(col("doc_id"),
@@ -349,7 +346,6 @@ object Dedup {
   /** The d4 pipeline cut at its stage boundaries; the last entry is
     * the full query. */
   private[graft] def ngramStages(spark: SparkSession, dir: String): Seq[(String, DataFrame)] = {
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
     // fan the narrow scan out BEFORE the shingle pass so the md5-heavy
     // sid computation uses every core (no-op on a real multi-split
@@ -554,7 +550,6 @@ object Dedup {
     * sf0.01 it yields 29× fewer candidate pairs than exhaustive while
     * finding 3.5× the pairs the old 4-bit bucket did. */
   def qDedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings").select("vec_id", "embedding")
     val emb = e.localCheckpoint(false)
     embCandidates(emb)
@@ -915,7 +910,6 @@ object Dedup {
     * anyway, because the production screen (d4) lives in the same
     * capped vocabulary. */
   def qDedupRecall(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val sh = shingleSets(spark, dir)
     val ex = sh.select(col("doc_id"), explode(col("sh")).as("s"))
     // posting lists with the cap witnessed in ONE aggregation: ≤ cap
@@ -1109,7 +1103,6 @@ object Dedup {
     * ref capability: beyond the reference — the LLM-training-data
     * semantic-dedup stage (SURVEY §2 D). */
   def qDedupSemantic(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     semanticVictims(Tables(spark, dir, "embeddings")
       .select("vec_id", "embedding", "label"))
   }
@@ -1128,7 +1121,6 @@ object Dedup {
     * standing side would read from d10's cluster-partitioned index
     * layout so a batch touches only its clusters' partitions. */
   def qDedupSemanticIncr(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val tau = 0.4
     val e = Tables(spark, dir, "embeddings")
       .select("vec_id", "embedding", "label")
@@ -1524,7 +1516,6 @@ object Dedup {
     * covers, whole-doc dups). L = 10 tokens. */
   private[graft] def substringDedup(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val L = 10
     val toks = Tables.fanout(
       docs.select(col("doc_id"), split(col("text"), " ").as("toks")))

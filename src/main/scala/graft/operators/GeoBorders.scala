@@ -58,7 +58,6 @@ object GeoBorders {
     * verdict (kept-vertex bitmask + kept count at z6 tol²=1024) both
     * owners share. */
   def qSharedBorders(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val owners = Tables(spark, dir, "part")
       .select(col("p_partkey").cast("long").as("f"))
       .withColumn("side", explode(expr("array('B', 'L', 'R', 'T')")))

@@ -53,7 +53,6 @@ object GeoClip {
   /** Per-piece pipeline shared by both queries: polygons → bounded
     * tile explode → kernel clip → non-empty pieces. */
   private def pieces(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val s = Tables(spark, dir, "supplier")
     val g = clipGenCols.foldLeft(
       s.select(col("s_suppkey").as("poly_id"), col("s_suppkey"))) {

@@ -111,7 +111,6 @@ object GeoGeom {
     * exact cross join over the SAME template strings: blocking must
     * not change results. */
   def qPointInConcave(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val cell = 16777216L
     val s = Tables(spark, dir, "supplier")
     val g0 = starGenCols.foldLeft(
@@ -292,7 +291,6 @@ object GeoGeom {
     * proves bijectivity + adjacency independently of both. Map-only at
     * any scale. */
   def qHilbertKey(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     GeoOps.tiled(spark, dir, 12)
       .select(col("event_id"), col("xt"), col("yt"),
         expr("graft_hilbert(12, CAST(xt AS BIGINT), CAST(yt AS BIGINT))").as("hilbert_d"))
@@ -336,7 +334,6 @@ object GeoGeom {
     * i12's Hilbert-clustered rewrite. */
   def qPmtilesOrder(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val zoomOffset = (math.pow(4, 8).toLong - 1) / 3
     val tiles = GeoOps.tiled(spark, dir, 8)
       .groupBy("user_id", "xt", "yt")
@@ -467,7 +464,6 @@ object GeoGeom {
     * spec), one bounded agg. Oracle: the recursive-CTE hilbert chain +
     * the identical lag/varint algebra. */
   def qPmtilesLeaves(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     dirEntries(GeoOps.tiled(spark, dir, 8)
         .groupBy("user_id", "xt", "yt")
         .agg(count(lit(1)).as("n_features")))
@@ -527,7 +523,6 @@ object GeoGeom {
     * user_id, nf, tile_id, tile_bytes, flat_bytes, run_id. */
   private[graft] def rleCover(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(spark)
     val occ = GeoOps.tiled(spark, dir, 4)
       .groupBy("user_id", "xt", "yt")
       .agg(count(lit(1)).as("n_features"))
@@ -839,7 +834,6 @@ object GeoGeom {
     * Oracle: the b37 recursive-CTE recurrence carrying (user, layer)
     * through the recursion + the same unrolled chain. */
   def qFgbIndex(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val chain =
       """n + CASE WHEN n > 1 THEN t1 ELSE 0 END
            + CASE WHEN t1 > 1 THEN t2 ELSE 0 END

@@ -1373,7 +1373,6 @@ object GeoOps {
   private val GeohashB32 = "0123456789bcdefghjkmnpqrstuvwxyz"
 
   def qGeohash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables.events(spark, dir)
     val lon = Synth.lon(col("event_id"))
     val lat = Synth.lat(col("event_id"))

@@ -377,7 +377,6 @@ object GeoProj {
     * event columns (e.g. user_id) through for downstream stages. */
   private[graft] def dispatched(spark: SparkSession, dir: String,
       keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // transform legs ride the codegen'd graft_reproject kernel — ONE
     // compiled method per row. The declarative fusion of all three
     // chains in one projection produced a 13 KB-bytecode consume

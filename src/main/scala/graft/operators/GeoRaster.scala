@@ -50,7 +50,6 @@ object GeoRaster {
     * non-negative, id < 2^43) so lexicographic order == numeric order
     * and the payload rides the heap for free. */
   def qTileDrop(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     GeoOps.tiled(spark, dir, 6)
       .withColumn("packed",
         expr(s"(event_id * 2654435761 % $DkMod) * $Pack + event_id"))
@@ -107,7 +106,6 @@ object GeoRaster {
     * nothing extra rides the shuffle). One scan, one tile-bounded agg,
     * no window. */
   def qTileBudget(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     GeoOps.tiled(spark, dir, 6)
       .withColumn("packed",
         expr(s"(event_id * 2654435761 % $DkMod) * $Pack + event_id"))
@@ -276,7 +274,6 @@ object GeoRaster {
     * layer-bounded agg where `graft_topk_min` hands the sample as a
     * ≤10-long array. No windows. */
   def qTilestatsAttrs(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = graft.Tables.events(spark, dir)
     e.select(col("event_type").as("layer"),
         expr("stack(2, 'user_id', user_id, 'value_floor', CAST(floor(value) AS BIGINT))")

@@ -44,7 +44,6 @@ object GeoSimplify {
 
   /** b42 — `q_simplify`: per (line, zoom) Douglas–Peucker verdict. */
   def qSimplify(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val p = Tables(spark, dir, "part")
     p.select(col("p_partkey").as("line_id"))
       .withColumn("k", col("line_id").cast("long"))

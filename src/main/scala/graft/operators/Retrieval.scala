@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Oracle, Query, Tables}
-import graft.functions.GraftFunctions
 
 /** §2 F/E (continued) — retrieval composition and selection ops:
   * hybrid lexical+dense fusion (f22), weighted sampling without
@@ -35,7 +34,6 @@ object Retrieval {
   // e12's serving path) and the fusion cost is O(k), independent of
   // corpus size.
   def qHybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val lex = TextOps.qBm25(spark, dir).select(col("doc_id"), col("bm25"))
       .withColumn("lex_rank",
         row_number().over(Window.orderBy(col("bm25").desc, col("doc_id"))))
@@ -140,7 +138,6 @@ object Retrieval {
       s"WHEN $p THEN CAST(${discMicro(p - 1)} AS BIGINT)").mkString(" ") + " END"
 
   def qNdcgEval(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     val truth = e.crossJoin(broadcast(q))

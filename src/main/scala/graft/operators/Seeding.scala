@@ -49,7 +49,6 @@ object Seeding {
 
   def qKcenterSeed(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val q = Tables(spark, dir, "embeddings").select(col("vec_id"), col("embedding"))
     // seed: vec_id 0 (the deterministic init every engine reproduces)
     def centerVec(id: Long): Array[Long] =

@@ -6,7 +6,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Oracle, Query, Tables}
-import graft.functions.GraftFunctions
 import graft.functions.TextFns._
 import graft.sources.{DatasetsSink, VersionedTable}
 
@@ -85,7 +84,6 @@ object Serving {
     * point: e9 pays the centroid pass + code assignment on EVERY
     * query; here they amortize over the index lifetime. */
   def annIndexDir(spark: SparkSession, dir: String): String = {
-    GraftFunctions.register(spark)
     ensure("ann", fingerprint(dir, Seq("embeddings"))) { ix =>
       buildAnnIndex(Tables(spark, dir, "embeddings"), ix)
     }
@@ -128,7 +126,6 @@ object Serving {
     * consulted for the query vector). Result is byte-identical to e9,
     * so it shares e9's oracle. */
   def qAnnIvfPqIndexed(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     qAnnIvfPqIndexedAt(spark, Tables(spark, dir, "embeddings"),
       annIndexDir(spark, dir), queryVecId = 0L)
   }
@@ -143,7 +140,6 @@ object Serving {
   private[graft] def qAnnIvfPqIndexedAt(spark: SparkSession, e: DataFrame,
       ix: String, queryVecId: Long, rerankDepth: Int = 10,
       deltaDirs: Seq[String] = Nil, tombstoneDirs: Seq[String] = Nil): DataFrame = {
-    GraftFunctions.register(spark)
     val q = e.filter(col("vec_id") === queryVecId).select(col("embedding").as("qv"))
     val qe = e.filter(col("vec_id") === queryVecId)
       .select(posexplode(col("embedding")).as(Seq("i", "qv")))
@@ -206,7 +202,6 @@ object Serving {
     * partitions. Fully oracle-gated (the per-query math is e9's,
     * generalized over the batch). */
   def qAnnBatchIndexed(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val ix = annIndexDir(spark, dir)
     val e = Tables(spark, dir, "embeddings")
@@ -323,7 +318,6 @@ object Serving {
     * the signature store is written once at ingest and each daily
     * batch only hashes ITSELF. */
   def dedupIndexDir(spark: SparkSession, dir: String): String = {
-    GraftFunctions.register(spark)
     ensure("dedup", fingerprint(dir, Seq("documents")))(buildDedupIndex(spark, dir, _))
   }
 
@@ -333,7 +327,6 @@ object Serving {
     * fingerprint-keyed dir stays byte-identical to what the d10
     * oracle expects. */
   private[graft] def buildDedupIndex(spark: SparkSession, dir: String, ix: String): Unit = {
-    GraftFunctions.register(spark)
     val idx = Tables(spark, dir, "documents").filter(col("doc_id") % 10 =!= 7)
     writeSignatures(idx.select(col("doc_id"), col("text")), ix, batchId = 0L)
   }
@@ -369,7 +362,6 @@ object Serving {
     * idempotent per batch id, atomic enough for a daily job (readers
     * see a batch entirely or not at all once its files commit). */
   def absorbBatch(spark: SparkSession, dir: String, ix: String, batchId: Long): Unit = {
-    GraftFunctions.register(spark)
     // screen EXCLUDING this batch's own partition: a retried absorb
     // must recompute the same keeper set from the pre-absorb index —
     // screening against its own half-written (or complete) first
@@ -398,7 +390,6 @@ object Serving {
     * retry path's self-exclusion. */
   private[graft] def qDedupServedAt(spark: SparkSession, dir: String, ix: String,
       excludeBatch: Option[Long] = None): DataFrame = {
-    GraftFunctions.register(spark)
     def ixRead(table: String): DataFrame = {
       val t = spark.read.parquet(s"$ix/$table")
       excludeBatch.fold(t)(b => t.where(col("batch_id") =!= b))
@@ -451,7 +442,6 @@ object Serving {
     * hash-verifies that filtered serving changes nothing
     * semantically. */
   def qAnnFilteredIndexed(spark: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.register(spark)
     val ix = annIndexDir(spark, dir)
     val e = Tables(spark, dir, "embeddings")
     val admissible = Tables(spark, dir, "documents")
@@ -713,7 +703,6 @@ object Serving {
     * partition-pruned. The serve path reads base ∪ deltas
     * ([[qAnnIvfPqIndexedAt]]'s `deltaDirs`). */
   def absorbAnnBatch(spark: SparkSession, dir: String, ix: String, batchId: Long): Unit = {
-    GraftFunctions.register(spark)
     val e = Tables(spark, dir, "embeddings")
     val batch = e.filter(col("vec_id") % 10 === 7)
     val cent = spark.read.parquet(s"$ix/centroids")

@@ -101,7 +101,6 @@ object TextOps {
   /** f4 — document fingerprinting: md5 of normalized text + minimum
     * shingle hash (rolling-fingerprint analog). */
   def qFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
     d.select(col("doc_id"), col("text"))
       .withColumn("fp", md5(expr(normSpark)))
@@ -159,7 +158,6 @@ object TextOps {
     * (ceil(N/200) = (N+199) div 200) so both engines agree to the
     * row. */
   def qHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
     val toks = d.select(explode(split(col("text"), " ")).as("token"))
       .filter(length(col("token")) > 0)
@@ -520,7 +518,6 @@ object TextOps {
     * broadcast hash probe) and the only shuffle carries the matched
     * rows, not the corpus. */
   def qDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
     val sh = d.select(col("doc_id"), explode(expr(shSpark)).as("shingle"))
     val bench = sh.filter(col("doc_id") % 50 === 0)
@@ -652,7 +649,6 @@ object TextOps {
     * formulation needed. A 500-page outlier still can't stall a task
     * beyond its own O(length) work.) */
   def qRepetition(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, dir, "documents")
     Tables.fanout(d.select(col("doc_id"), split(col("text"), " ").as("toks")))
       .select(col("doc_id"), expr("graft_repstats(toks)").as("s"))
@@ -1026,7 +1022,6 @@ object TextOps {
     * Docs with < 3 tokens have no shingles and emit no row (both
     * engines). */
   def qNgramNovelty(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val src = Tables.fanout(
       Tables(spark, dir, "documents").select(col("doc_id"), col("text")))
     val inv = src.select(col("doc_id"),

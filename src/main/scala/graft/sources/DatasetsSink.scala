@@ -101,7 +101,6 @@ object DatasetsSink {
   def writeHilbertClustered(df: DataFrame, path: String, xCol: String,
       yCol: String, z: Int = 8, files: Int = 32): Unit = {
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.withColumn("_hkey",
         expr(s"graft_hilbert($z, CAST($xCol AS BIGINT), CAST($yCol AS BIGINT))"))
       .repartitionByRange(files, col("_hkey"))

@@ -1196,7 +1196,6 @@ object IngestStream {
     * StreamingSpec pins stream output ≡ the batch kernel row-for-row
     * and asserts zero state operators. */
   def reprojectStream(features: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(features.sparkSession)
     import org.apache.spark.sql.functions.{col, expr}
     features
       // branch ids follow the batch dispatch; the mercator leg clamps

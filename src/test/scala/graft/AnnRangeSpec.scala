@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.Ann
-import graft.functions.GraftFunctions
 
 /** e19 (Matryoshka coarse-to-fine) and e20 (range search with the
   * lossless cell prune) on the clustered GenVecs corpus — the driver's
@@ -14,7 +13,6 @@ class AnnRangeSpec extends SparkTestBase {
   // tight clusters (within-cluster cosine ≈ 0.9) + planted cosine ≈ 1
   // copies: vec 47 copies vec 17 with 1% jitter
   private lazy val vecs = {
-    GraftFunctions.register(spark)
     graft.dev.GenVecs.synthesize(spark, 2000, 0.35).localCheckpoint(true)
   }
 

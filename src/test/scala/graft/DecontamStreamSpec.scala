@@ -13,7 +13,6 @@ class DecontamStreamSpec extends SparkTestBase {
   test("h38: stream verdicts equal the batch ≥3-shared-shingles rule; the guard holds no state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val d = Tables(spark, sfDir, "documents")
     // the static eval-suite index (f50's suites)
     val sh = d.select(col("doc_id"), explode(expr(graft.functions.TextFns.shSpark)).as("shingle"))

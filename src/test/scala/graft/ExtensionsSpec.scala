@@ -4,9 +4,67 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.GraftFunctions
 import graft.sources.DatasetsSink
 
 class ExtensionsSpec extends AnyFunSuite {
+
+  /** A session built without graft's extension, as a plain user builds it. */
+  private def plainSession(): SparkSession = SparkSession.builder().master("local[2]")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .appName("graft-plain").getOrCreate()
+
+  test("register adds each missing function and rule, replaces none, and is idempotent") {
+    val spark = plainSession()
+    try {
+      val registry = spark.sessionState.functionRegistry
+      // a user's own function under a graft name
+      spark.udf.register("graft_qdist2", (x: Int) => x + 1)
+      GraftFunctions.register(spark)
+      assert(spark.sql("SELECT graft_dot(array(1.0f, 2.0f), array(3.0f, 4.0f))")
+        .head().getDouble(0) == 11.0)
+      assert(spark.sql("SELECT graft_geohash8(CAST(524288 AS BIGINT), CAST(524288 AS BIGINT))")
+        .head().getString(0) == "s0000000")
+      assert(spark.sql("SELECT graft_qdist2(41)").head().getInt(0) == 42,
+        "register must not replace a function the session already has")
+      val exp = spark.experimental
+      assert(Seq(graft.plans.IntersectCountRewrite, graft.plans.RangeJoinRewrite)
+        .forall(exp.extraOptimizations.contains))
+      assert(exp.extraStrategies.contains(graft.plans.AsofJoinStrategy))
+      def state = (registry.listFunction().toSet, exp.extraOptimizations, exp.extraStrategies)
+      val once = state
+      GraftFunctions.register(spark)
+      assert(state == once)
+    } finally spark.stop()
+  }
+
+  test("the extension and register give a session the same functions: the table's") {
+    val table = GraftFunctions.functions.map(_.name)
+    assert(table.distinct.size == table.size, "a name is declared twice")
+    def check(spark: SparkSession): Unit = {
+      val registry = spark.sessionState.functionRegistry
+      GraftFunctions.functions.foreach(f => assert(registry.functionExists(f.id), f.name))
+      assert(registry.listFunction().map(_.funcName).filter(_.startsWith("graft_")).toSet ==
+        table.toSet)
+    }
+    val withExt = GraftSession.local(2)
+    try {
+      check(withExt)
+      val optimizer = withExt.sessionState.optimizer.extendedOperatorOptimizationRules
+      assert(GraftFunctions.optimizerRules.forall(optimizer.contains))
+      assert(GraftFunctions.strategies.forall(withExt.sessionState.planner.strategies.contains))
+      // the extension already placed every rule, so register adds none
+      GraftFunctions.register(withExt)
+      assert(withExt.experimental.extraOptimizations.isEmpty)
+      assert(withExt.experimental.extraStrategies.isEmpty)
+    } finally withExt.stop()
+    val plain = plainSession()
+    try {
+      GraftFunctions.register(plain)
+      check(plain)
+    } finally plain.stop()
+  }
 
   test("GraftExtensions injects graft_dot into a fresh session") {
     val spark = GraftSession.local(2)

@@ -223,7 +223,6 @@ class GeoInvariantsSpec extends SparkTestBase {
   }
 
   test("b41: Sutherland–Hodgman clip — corner probes and the exact partition invariant") {
-    graft.functions.GraftFunctions.register(spark)
     def probe(xs: Seq[Long], ys: Seq[Long], box: Seq[Long]): Option[Seq[Long]] = {
       val r = spark.sql(
         s"""SELECT graft_clip(array(${xs.map(v => s"${v}L").mkString(",")}),
@@ -589,7 +588,6 @@ class GeoInvariantsSpec extends SparkTestBase {
     // the native kernel must agree with the declarative template on
     // every probe (the serving path runs graft_ray_cross; the oracle
     // runs the template — this is where they are pinned together)
-    graft.functions.GraftFunctions.register(spark)
     val nativeDf = df
       .withColumn("n_outer", expr(
         """graft_ray_cross(px, py,
@@ -618,7 +616,6 @@ class GeoInvariantsSpec extends SparkTestBase {
   }
 
   test("b37: graft_hilbert is a bijection onto [0, 4^z) and consecutive ids are adjacent cells") {
-    graft.functions.GraftFunctions.register(spark)
     // exhaustive at z=4: all 256 cells through the codegen'd expression
     val cells = spark.range(256)
       .selectExpr("id % 16 AS x", "id div 16 AS y",

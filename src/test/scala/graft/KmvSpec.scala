@@ -16,7 +16,6 @@ class KmvSpec extends SparkTestBase {
 
   test("below k the sketch is the exact distinct set; set algebra is exact") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val segA = (0 until 100).map(i => ("a", sid(s"user$i")))
     val segB = (70 until 150).map(i => ("b", sid(s"user$i")))
     val df = (segA ++ segB ++ segA).toDF("seg", "h") // dup rows: distinctness
@@ -31,7 +30,6 @@ class KmvSpec extends SparkTestBase {
 
   test("above k the estimate lands within the KMV error bound") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val n = 20000
     val rows = (0 until n).map(i => sid(s"id$i")).toDF("h")
     rows.createOrReplaceTempView("kmv_big")
@@ -45,7 +43,6 @@ class KmvSpec extends SparkTestBase {
 
   test("the sketch is partitioning-independent (lossless merge)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rows = (0 until 5000).map(i => sid(s"p$i"))
     def sketch(parts: Int): Seq[Long] = {
       rows.toDF("h").repartition(parts).createOrReplaceTempView("kmv_p")

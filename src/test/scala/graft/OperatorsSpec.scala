@@ -181,7 +181,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("embedding LSH recall: planted near-dup pairs survive the banding") {
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     def unit(v: Array[Float]): Array[Float] = {
       val n = math.sqrt(v.map(x => x.toDouble * x).sum)
@@ -204,7 +203,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("heavy hitters: exact over a vocabulary far above the sketch cap") {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // 50,000 distinct rare tokens (vocab 100x the 512-counter cap) +
@@ -237,7 +235,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("embedding LSH dense-region guard: hot buckets widen keys, dups survive") {
-    graft.functions.GraftFunctions.register(spark)
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val rnd = new scala.util.Random(13)
@@ -279,7 +276,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("embedding dedup recall on the clustered GenVecs corpus (hot-bucket regime)") {
-    graft.functions.GraftFunctions.register(spark)
     // the corpus that caught the original O(bucket²) regression: 10
     // tight topic clusters (amp 0.35 ⇒ within-cluster cosine ≈ 0.9),
     // clusters of ~200 ≫ the 64-row bucket cap, so candidate
@@ -301,7 +297,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("semantic dedup drops exactly one member of each planted near-identical pair") {
-    graft.functions.GraftFunctions.register(spark)
     // high-amp GenVecs: cluster mates sit well below the 0.4 cosine
     // threshold, so the ONLY redundancy is the planted cosine ≈ 1
     // copies (vec_id % 20 == 7, id ≥ 30, copying id - 30) — the
@@ -329,7 +324,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("semantic dedup under trained k: pair budget collapses, planted recall holds") {
-    graft.functions.GraftFunctions.register(spark)
     // the k ∝ n contract measured in §5: growing k must shrink the
     // within-cluster pair budget Σ|c|² (the quadratic term) while the
     // planted cosine ≈ 1 copies keep co-assigning and getting caught
@@ -361,7 +355,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("semantic dedup on tight clusters: planted pairs resolve to one victim each") {
-    graft.functions.GraftFunctions.register(spark)
     // tight 10-cluster corpus (amp 0.35, ~400-member clusters): the
     // regime where an LSH hot path was measured counterproductive
     // (members share hyperplane signs) — plain within-cluster pairing
@@ -399,7 +392,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("embedding LSH prunes: candidate pairs well below exhaustive") {
-    graft.functions.GraftFunctions.register(spark)
     val e = Tables(spark, sfDir, "embeddings").select("vec_id", "embedding")
     val n = e.count()
     val cand = Dedup.embCandidates(e).count()
@@ -519,7 +511,6 @@ class OperatorsSpec extends SparkTestBase {
     // GENUINELY clustered corpus — the data IVF is built for — the
     // probe must recall nearly all of the filtered brute-force top-10
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val rnd = new scala.util.Random(11)
     def unit(v: Array[Float]): Array[Float] = {
@@ -605,7 +596,6 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("capped list aggregate: complete below cap, truncated witness above") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     // key 1 has 3 members (< cap 5 → complete set), key 2 has 7 (> cap → 5-element witness)
     val df = ((1 to 3).map(i => (1L, i.toLong)) ++ (1 to 7).map(i => (2L, i.toLong)))
@@ -756,7 +746,6 @@ class OperatorsSpec extends SparkTestBase {
 
   test("graft_repstats matches hand-computed signals on edge cases") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rows = Seq(
       (1L, Seq("only")),                            // 1 token: no bigrams
       (2L, Seq("a", "a", "a", "a")),                // max repetition
@@ -800,7 +789,6 @@ class OperatorsSpec extends SparkTestBase {
     // every distinct shingle is novel in exactly one doc
     val totalNovel = rows.map(_.getLong(2)).sum
     val distinctSids = {
-      graft.functions.GraftFunctions.register(spark)
       Tables(spark, sfDir, "documents")
         .select(explode(expr("graft_shingle_sids(split(text, ' '))")).as("sid"))
         .distinct().count()

@@ -115,7 +115,6 @@ class PropertySpec extends SparkTestBase {
 
   test("native as-of join equals an in-memory reference model on random data") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val genCase = for {
       nl <- Gen.choose(1, 120)
       nr <- Gen.choose(0, 120)
@@ -151,7 +150,6 @@ class PropertySpec extends SparkTestBase {
     // compare must match per-(k1,k2) as-of semantics exactly,
     // including ties on every component
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val genCase = for {
       nl <- Gen.choose(1, 100)
       nr <- Gen.choose(0, 100)

@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.GraftFunctions
 
 /** The query registry itself: no Spark session, so it runs in seconds
   * and can precede a full Verify. */
@@ -46,5 +49,23 @@ class RegistrySpec extends AnyFunSuite {
     assert(e.getMessage.contains("q1_aggg, q_nope"))
     assert(SparkEntry.select(Some(Set("q1_agg"))).keySet == Set("q1_agg"))
     assert(SparkEntry.select(None).keySet == SparkEntry.queries.keySet)
+  }
+
+  test("graft functions are declared once and registered only at the two front doors") {
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repo root: no ${root.toAbsolutePath}")
+    val sources: Map[String, String] = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map((p: Path) => root.relativize(p).toString -> Files.readString(p)).toMap
+    // Tables.registerViews and SparkEntry.queries retrofit a session
+    // built without the extension; anything else relies on the contract
+    val callers = sources.collect { case (f, src) if src.contains("GraftFunctions.register(") => f }
+    assert(callers.toSet -- Set("functions/GraftFunctions.scala") ==
+      Set("Tables.scala", "SparkEntry.scala"))
+    // every graft function the code calls is in the table
+    val declared = GraftFunctions.functions.map(_.name).toSet
+    val used = sources.values.flatMap(raw"\bgraft_[a-z0-9_]+(?=\()".r.findAllIn(_)).toSet
+    assert(used.nonEmpty && (used -- declared).isEmpty,
+      s"used but not declared: ${(used -- declared).toSeq.sorted.mkString(", ")}")
   }
 }

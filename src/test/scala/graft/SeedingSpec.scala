@@ -38,7 +38,6 @@ class SeedingSpec extends SparkTestBase {
 
   test("e28 kernel: graft_qdist2 equals the declarative quantize-zip-fold template") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val q = Tables(spark, sfDir, "embeddings").limit(50)
     val c = q.filter(col("vec_id") === 7)
       .select(expr("transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1048576.0) AS BIGINT))"))

@@ -305,7 +305,6 @@ class SinkSpec extends SparkTestBase {
     DatasetsSink.writeHilbertClustered(pts, out, "xt", "yt", z = 8, files = 16)
     val files = new File(out).listFiles.filter(_.getName.endsWith(".parquet"))
     assert(files.length >= 8, s"expected several clustered files, got ${files.length}")
-    graft.functions.GraftFunctions.register(spark)
     val ranges = files.toSeq.map { f =>
       val r = spark.read.parquet(f.getPath)
         .selectExpr("min(graft_hilbert(8, CAST(xt AS BIGINT), CAST(yt AS BIGINT))) AS lo",

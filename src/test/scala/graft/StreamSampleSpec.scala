@@ -61,7 +61,6 @@ class StreamSampleSpec extends SparkTestBase {
   test("h18: streaming KMV sketch equals the batch graft_kmv, any batching") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val k = 64
     // segments with partial overlap, enough members to exceed k
     def sid(s: String): Long = {

@@ -50,7 +50,6 @@ class TileBudgetStreamSpec extends SparkTestBase {
   test("h34: streaming FGB index accounting equals b50 row-for-row, any batching") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
     val all = operators.GeoOps.tiled(spark, sfDir, 12)
       .withColumn("h", expr("graft_hilbert(12, CAST(xt AS BIGINT), CAST(yt AS BIGINT))"))
       .select("user_id", "event_type", "h").collect()

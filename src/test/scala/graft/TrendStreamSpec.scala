@@ -235,7 +235,6 @@ class TrendStreamSpec extends SparkTestBase {
     import spark.implicits._
     import graft.streaming.IngestStream.{FieldSample, FieldProfile}
     implicit val sqlCtx = spark.sqlContext
-    graft.functions.GraftFunctions.register(spark)
 
     // payload fields from the events stream: `k` (json prop), `value`
     // (cents), plus a late-appearing `beta` field (schema drift) and

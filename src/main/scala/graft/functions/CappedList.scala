@@ -40,11 +40,7 @@ case class CappedList(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[CappedLongVec] {
 
-  private lazy val cap: Int = capExpr.eval(InternalRow.empty) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(s"cap must be an integer literal, got $other")
-  }
+  private lazy val cap: Int = IntLiteral(capExpr, "cap")
 
   override def children: Seq[Expression] = Seq(child, capExpr)
   override def nullable: Boolean = false
@@ -98,4 +94,14 @@ case class CappedList(
     copy(inputAggBufferOffset = offset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): CappedList =
     copy(child = newChildren(0), capExpr = newChildren(1))
+}
+
+/** The integer-literal argument of an aggregate (a cap or a k),
+  * evaluated once at plan time. */
+private[functions] object IntLiteral {
+  def apply(e: Expression, name: String): Int = e.eval(InternalRow.empty) match {
+    case i: Int => i
+    case l: Long => l.toInt
+    case other => throw new IllegalArgumentException(s"$name must be an integer literal, got $other")
+  }
 }

@@ -15,41 +15,19 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, I
   * doGenCode emits a tight primitive loop that stays inside
   * whole-stage codegen, no boxing, no per-element virtual calls.
   */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+case class DotProduct(left: Expression, right: Expression) extends ArrayPairFold {
 
   // (return type inferred — AbstractDataType is private[sql] in Spark 4)
   override def inputTypes = Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def prettyName: String = "graft_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    fold(a, b, 0.0)((s, x, y, i) => s + x.getFloat(i).toDouble * y.getFloat(i).toDouble)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        double $s = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          $s += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-        }
-        ${ev.value} = $s;
-      """
-    })
+  override protected def accJava: (String, String) = ("double", "0.0")
+  override protected def stepJava(ctx: CodegenContext, a: String, b: String, i: String, s: String): String =
+    s"$s += (double) $a.getFloat($i) * (double) $b.getFloat($i);"
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
@@ -66,40 +44,19 @@ case class DotProduct(left: Expression, right: Expression)
   * double is exact, ·2²⁰ is exact (24-bit mantissa), floor is exact:
   * no rounding-mode subtleties anywhere.
   */
-case class QuantDot(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+case class QuantDot(left: Expression, right: Expression) extends ArrayPairFold {
 
   override def inputTypes = Seq(ArrayType(FloatType), ArrayType(IntegerType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_qdot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      s += math.floor(x.getFloat(i).toDouble * 1048576.0).toLong * y.getInt(i)
-      i += 1
-    }
-    s
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    fold(a, b, 0L)((s, x, y, i) =>
+      s + math.floor(x.getFloat(i).toDouble * 1048576.0).toLong * y.getInt(i))
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-        int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        long $s = 0L;
-        for (int $i = 0; $i < $n; $i++) {
-          $s += (long) java.lang.Math.floor((double) $a.getFloat($i) * 1048576.0) * $b.getInt($i);
-        }
-        ${ev.value} = $s;
-      """
-    })
+  override protected def accJava: (String, String) = ("long", "0L")
+  override protected def stepJava(ctx: CodegenContext, a: String, b: String, i: String, s: String): String =
+    s"$s += (long) java.lang.Math.floor((double) $a.getFloat($i) * 1048576.0) * $b.getInt($i);"
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): QuantDot =
     copy(left = newLeft, right = newRight)
@@ -118,22 +75,49 @@ case class QuantDot(left: Expression, right: Expression)
   * distance inside whole-stage codegen). The spec pins kernel ≡ the
   * declarative template on planted probes (the graft_geohash8
   * discipline). */
-case class QuantDist2(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+case class QuantDist2(left: Expression, right: Expression) extends ArrayPairFold {
 
   override def inputTypes = Seq(ArrayType(FloatType), ArrayType(LongType))
   override def dataType: DataType = LongType
   override def prettyName: String = "graft_qdist2"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
+  override def nullSafeEval(a: Any, b: Any): Any =
+    fold(a, b, 0L) { (s, x, y, i) =>
+      val d = math.floor(x.getFloat(i).toDouble * 1048576.0).toLong - y.getLong(i)
+      s + d * d
+    }
+
+  override protected def accJava: (String, String) = ("long", "0L")
+  override protected def stepJava(ctx: CodegenContext, a: String, b: String, i: String, s: String): String = {
+    val d = ctx.freshName("d")
+    s"""long $d = (long) java.lang.Math.floor((double) $a.getFloat($i) * 1048576.0) - $b.getLong($i);
+          $s += $d * $d;"""
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): QuantDist2 =
+    copy(left = newLeft, right = newRight)
+}
+
+/** The loop the three kernels above share: a left-to-right fold over
+  * the common prefix of two arrays, interpreted ([[fold]]) and as one
+  * primitive loop of generated Java whose accumulator type and step
+  * each kernel supplies. */
+private[functions] trait ArrayPairFold extends BinaryExpression with ExpectsInputTypes {
+
+  /** The Java type and zero literal of the accumulator. */
+  protected def accJava: (String, String)
+
+  /** Java statements folding element `i` of arrays `a` and `b` into `s`. */
+  protected def stepJava(ctx: CodegenContext, a: String, b: String, i: String, s: String): String
+
+  protected def fold[S](a: Any, b: Any, zero: S)(step: (S, ArrayData, ArrayData, Int) => S): S = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
-    var s = 0L
+    var s = zero
     var i = 0
     while (i < n) {
-      val d = math.floor(x.getFloat(i).toDouble * 1048576.0).toLong - y.getLong(i)
-      s += d * d
+      s = step(s, x, y, i)
       i += 1
     }
     s
@@ -144,18 +128,14 @@ case class QuantDist2(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
+      val (tpe, zero) = accJava
       s"""
         int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-        long $s = 0L;
+        $tpe $s = $zero;
         for (int $i = 0; $i < $n; $i++) {
-          long $d = (long) java.lang.Math.floor((double) $a.getFloat($i) * 1048576.0) - $b.getLong($i);
-          $s += $d * $d;
+          ${stepJava(ctx, a, b, i, s)}
         }
         ${ev.value} = $s;
       """
     })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): QuantDist2 =
-    copy(left = newLeft, right = newRight)
 }

@@ -36,11 +36,7 @@ case class Kmv(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[KmvBuffer] {
 
-  private lazy val k: Int = kExpr.eval(InternalRow.empty) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(s"k must be an integer literal, got $other")
-  }
+  private lazy val k: Int = IntLiteral(kExpr, "k")
 
   override def children: Seq[Expression] = Seq(child, kExpr)
   override def nullable: Boolean = false

@@ -37,11 +37,7 @@ case class MisraGries(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[MgBuffer] {
 
-  private lazy val cap: Int = capExpr.eval(InternalRow.empty) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(s"cap must be an integer literal, got $other")
-  }
+  private lazy val cap: Int = IntLiteral(capExpr, "cap")
 
   override def children: Seq[Expression] = Seq(child, capExpr)
   override def nullable: Boolean = false

@@ -94,14 +94,7 @@ class ShingleSidsHelper extends Serializable {
   private val sep = UTF8String.fromString(" ")
 
   def compute(a: ArrayData): ArrayData = {
-    val n = a.numElements()
-    val set = new java.util.LinkedHashSet[UTF8String]()
-    var i = 0
-    while (i + 2 < n) {
-      set.add(UTF8String.concatWs(sep,
-        a.getUTF8String(i), a.getUTF8String(i + 1), a.getUTF8String(i + 2)))
-      i += 1
-    }
+    val set = Shingle3.trigrams(a, sep)
     val out = new Array[Any](set.size)
     val it = set.iterator()
     var k = 0

@@ -46,12 +46,7 @@ class RepStatsHelper extends Serializable {
 
   def compute(a: ArrayData): ArrayData = {
     val n = a.numElements()
-    val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
-    var i = 0
-    while (i < n) {
-      counts.merge(a.getUTF8String(i), Integer.valueOf(1), (x, y) => x + y)
-      i += 1
-    }
+    val counts = RepStats.tokenCounts(a)
     var top = 0L
     val it = counts.values().iterator()
     while (it.hasNext) {
@@ -76,4 +71,17 @@ class RepStatsHelper extends Serializable {
 object RepStats {
   val helper = new RepStatsHelper
   def compute(a: ArrayData): ArrayData = helper.compute(a)
+
+  /** Each distinct token of `a` with its count (graft_repstats and
+    * graft_simhash64 both fold over distinct tokens). */
+  def tokenCounts(a: ArrayData): java.util.HashMap[UTF8String, Integer] = {
+    val n = a.numElements()
+    val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
+    var i = 0
+    while (i < n) {
+      counts.merge(a.getUTF8String(i), Integer.valueOf(1), (x, y) => x + y)
+      i += 1
+    }
+    counts
+  }
 }

@@ -30,18 +30,9 @@ case class Shingle3(child: Expression)
 
   private val sep = UTF8String.fromString(" ")
 
-  override def nullSafeEval(input: Any): Any = {
-    val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    val set = new java.util.LinkedHashSet[UTF8String]()
-    var i = 0
-    while (i + 2 < n) {
-      set.add(UTF8String.concatWs(sep,
-        a.getUTF8String(i), a.getUTF8String(i + 1), a.getUTF8String(i + 2)))
-      i += 1
-    }
-    new GenericArrayData(set.toArray.asInstanceOf[Array[Any]])
-  }
+  override def nullSafeEval(input: Any): Any =
+    new GenericArrayData(
+      Shingle3.trigrams(input.asInstanceOf[ArrayData], sep).toArray.asInstanceOf[Array[Any]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val sepRef = ctx.addReferenceObj("sep", sep, classOf[UTF8String].getName)
@@ -63,4 +54,21 @@ case class Shingle3(child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Shingle3 =
     copy(child = newChild)
+}
+
+object Shingle3 {
+  /** The distinct space-joined token trigrams of `a`, in first-seen
+    * order (the interpreted path of graft_shingle3 and the shingle
+    * source of graft_shingle_sids). */
+  def trigrams(a: ArrayData, sep: UTF8String): java.util.LinkedHashSet[UTF8String] = {
+    val n = a.numElements()
+    val set = new java.util.LinkedHashSet[UTF8String]()
+    var i = 0
+    while (i + 2 < n) {
+      set.add(UTF8String.concatWs(sep,
+        a.getUTF8String(i), a.getUTF8String(i + 1), a.getUTF8String(i + 2)))
+      i += 1
+    }
+    set
+  }
 }

@@ -53,14 +53,8 @@ class SimHash64Helper extends Serializable {
       java.security.MessageDigest.getInstance("MD5"))
 
   def compute(a: ArrayData): ArrayData = {
-    val n = a.numElements()
     // count DISTINCT tokens so each is hashed once (md5 dominates)
-    val counts = new java.util.HashMap[UTF8String, Integer](n * 2)
-    var i = 0
-    while (i < n) {
-      counts.merge(a.getUTF8String(i), Integer.valueOf(1), (x, y) => x + y)
-      i += 1
-    }
+    val counts = RepStats.tokenCounts(a)
     val s = new Array[Int](64)
     val digest = md.get()
     val it = counts.entrySet().iterator()

@@ -72,11 +72,7 @@ case class TopKMin(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TopKMinHeap] {
 
-  private lazy val k: Int = kExpr.eval(InternalRow.empty) match {
-    case i: Int => i
-    case l: Long => l.toInt
-    case other => throw new IllegalArgumentException(s"k must be an integer literal, got $other")
-  }
+  private lazy val k: Int = IntLiteral(kExpr, "k")
 
   override def children: Seq[Expression] = Seq(child, kExpr)
   override def nullable: Boolean = false

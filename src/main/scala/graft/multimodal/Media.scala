@@ -4,9 +4,10 @@ import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Oracle, Query, RowsOnly, Tables}
+import graft.operators.Dedup
 
 /** Real image codec on the JDK's built-in PNG support (javax.imageio —
   * no extra dependency). The testdata has no image files, so each
@@ -122,6 +123,14 @@ object ImageCodec {
   */
 object Media {
 
+  /** The magic-byte sniff over a documents frame: the payload's
+    * leading byte picks the mime class. */
+  private def sniffMime: Column =
+    when(ascii(substring(col("text"), 1, 1)).between(97, 104), "image/fake-png")
+      .when(ascii(substring(col("text"), 1, 1)).between(105, 112), "audio/fake-wav")
+      .when(ascii(substring(col("text"), 1, 1)).between(113, 120), "video/fake-mp4")
+      .otherwise("text/plain")
+
   /** g1 — binary column + magic-byte sniff + typed metadata. The
     * binary payload is the utf-8 encoded text (stands in for image
     * bytes); sniffing reads the leading byte exactly as a real
@@ -131,11 +140,7 @@ object Media {
     d.select(col("doc_id"), col("n_chars"), col("text"))
       .withColumn("payload", encode(col("text"), "UTF-8"))
       .withColumn("nbytes", length(col("payload")).cast("int"))
-      .withColumn("mime",
-        when(ascii(substring(col("text"), 1, 1)).between(97, 104), "image/fake-png")
-          .when(ascii(substring(col("text"), 1, 1)).between(105, 112), "audio/fake-wav")
-          .when(ascii(substring(col("text"), 1, 1)).between(113, 120), "video/fake-mp4")
-          .otherwise("text/plain"))
+      .withColumn("mime", sniffMime)
       .withColumn("width", col("n_chars") % 640 + 16)
       .withColumn("height", (col("doc_id") % 480 + 16))
       .withColumn("frames", col("n_chars") % 24 + 1)
@@ -169,11 +174,7 @@ object Media {
   def qMediaGeo(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables(spark, dir, "documents")
     d.select(col("doc_id"), col("n_chars"), col("text"))
-      .withColumn("mime",
-        when(ascii(substring(col("text"), 1, 1)).between(97, 104), "image/fake-png")
-          .when(ascii(substring(col("text"), 1, 1)).between(105, 112), "audio/fake-wav")
-          .when(ascii(substring(col("text"), 1, 1)).between(113, 120), "video/fake-mp4")
-          .otherwise("text/plain"))
+      .withColumn("mime", sniffMime)
       .withColumn("nbytes", length(encode(col("text"), "UTF-8")).cast("long"))
       .withColumn("lon", expr("CAST(doc_id * 2654435761 % 360000 AS DOUBLE) / 1000.0 - 180.0"))
       .withColumn("lat", expr("CAST(doc_id * 1327217873 % 170000 AS DOUBLE) / 1000.0 - 85.0"))
@@ -436,16 +437,11 @@ object Media {
   def qDecodeBatches(spark: SparkSession, dir: String): DataFrame = {
     val budget = 4096L // bytes per decode batch (scaled to the testdata)
     val d = Tables(spark, dir, "documents")
-    val mime =
-      when(ascii(substring(col("text"), 1, 1)).between(97, 104), "image/fake-png")
-        .when(ascii(substring(col("text"), 1, 1)).between(105, 112), "audio/fake-wav")
-        .when(ascii(substring(col("text"), 1, 1)).between(113, 120), "video/fake-mp4")
-        .otherwise("text/plain")
     // the packing cumsum rides the two-phase keyed prefix sum: a plain
     // `PARTITION BY mime` window is the single-partition degradation in
     // camouflage (4 mime classes ⇒ 4 tasks carry the whole corpus)
     graft.operators.TwoPhase.globalCumSumByKey(
-        d.select(col("doc_id"), mime.as("mime"),
+        d.select(col("doc_id"), sniffMime.as("mime"),
           length(encode(col("text"), "UTF-8")).cast("long").as("nbytes")),
         Seq(col("mime")), Seq(col("doc_id")), col("nbytes"), "cum")
       .withColumn("batch_id", expr(s"(cum - 1) div $budget").cast("long"))
@@ -566,18 +562,7 @@ object Media {
         } else orig :: Nil
       }
     }.toDF().localCheckpoint(false) // hash once, not once per join side
-    val blocks = sig.withColumn("idx", explode(sequence(lit(0), lit(3))))
-      .withColumn("chunk",
-        element_at(array(col("c0"), col("c1"), col("c2"), col("c3")), col("idx") + 1))
-    blocks.as("x").join(blocks.as("y"),
-        col("x.idx") === col("y.idx") && col("x.chunk") === col("y.chunk") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        expr("bit_count(x.c0 ^ y.c0) + bit_count(x.c1 ^ y.c1) + " +
-          "bit_count(x.c2 ^ y.c2) + bit_count(x.c3 ^ y.c3)").cast("int").as("hamming"))
-      .filter(col("hamming") <= 3)
-      .distinct()
-      .orderBy("doc_a", "doc_b")
+    Dedup.hammingPairs(sig).distinct().orderBy("doc_a", "doc_b")
   }
 
   /** One decoded + perceptually-hashed image with its batch context. */
@@ -655,16 +640,8 @@ object Media {
         }
       }.toDF().localCheckpoint(false)
     // g8's pigeonhole dedup over the decode output
-    val blocks = decoded.withColumn("idx", explode(sequence(lit(0), lit(3))))
-      .withColumn("chunk",
-        element_at(array(col("c0"), col("c1"), col("c2"), col("c3")), col("idx") + 1))
-      .select("doc_id", "idx", "chunk", "c0", "c1", "c2", "c3")
-    val pairs = blocks.as("x").join(blocks.as("y"),
-        col("x.idx") === col("y.idx") && col("x.chunk") === col("y.chunk") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .filter(expr("bit_count(x.c0 ^ y.c0) + bit_count(x.c1 ^ y.c1) + " +
-        "bit_count(x.c2 ^ y.c2) + bit_count(x.c3 ^ y.c3)") <= 3)
-      .select(col("x.doc_id").as("dup_of"), col("y.doc_id").as("doc_id"))
+    val pairs = Dedup.hammingPairs(decoded)
+      .select(col("doc_a").as("dup_of"), col("doc_b").as("doc_id"))
       .groupBy("doc_id").agg(min(col("dup_of")).as("dup_of"))
     decoded.join(pairs, Seq("doc_id"), "left_outer")
       .select(col("doc_id"), col("batch_id"), col("batch_items"),
@@ -1003,11 +980,7 @@ object Media {
       .mkString("array(", ", ", ")")
     val d = graft.Tables(spark, dir, "documents")
     d.select(col("doc_id"), col("n_chars"), col("text"))
-      .withColumn("mime",
-        when(ascii(substring(col("text"), 1, 1)).between(97, 104), "image/fake-png")
-          .when(ascii(substring(col("text"), 1, 1)).between(105, 112), "audio/fake-wav")
-          .when(ascii(substring(col("text"), 1, 1)).between(113, 120), "video/fake-mp4")
-          .otherwise("text/plain"))
+      .withColumn("mime", sniffMime)
       .filter(col("mime") === "video/fake-mp4")
       .withColumn("source_h", expr("CAST(240 + (doc_id % 10) * 240 AS INT)"))
       .withColumn("duration_s", expr("CAST((n_chars % 24 + 1) * 10 AS BIGINT)"))
@@ -1064,11 +1037,7 @@ object Media {
   def qExifPrivacy(spark: SparkSession, dir: String): DataFrame = {
     val d = graft.Tables(spark, dir, "documents")
     d.select(col("doc_id"), col("text"))
-      .withColumn("mime",
-        when(ascii(substring(col("text"), 1, 1)).between(97, 104), "image/fake-png")
-          .when(ascii(substring(col("text"), 1, 1)).between(105, 112), "audio/fake-wav")
-          .when(ascii(substring(col("text"), 1, 1)).between(113, 120), "video/fake-mp4")
-          .otherwise("text/plain"))
+      .withColumn("mime", sniffMime)
       .withColumn("nbytes", length(col("text")).cast("long"))
       .withColumn("lonm", expr("doc_id * 2654435761 % 360000 - 180000"))
       .withColumn("latm", expr("doc_id * 1327217873 % 170000 - 85000"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.{Oracle, Query, RowsOnly, Tables}
 
@@ -646,20 +646,8 @@ object Analytics {
     * is otherwise nondeterministic (the oracle's ASOF JOIN has the
     * same requirement). Oracle: DuckDB's native ASOF JOIN. */
   def qAsofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-    val o = Tables(spark, dir, "orders")
-    val ev = e.filter(col("event_type") === "purchase")
-      .select((col("user_id") + 1).as("k"),
-        expr("unix_millis(ts) div 86400000").as("t"), col("event_id"))
-    val od = o.select(col("o_custkey").as("k"),
-        // o_orderdate is TIMESTAMP_NTZ in the parquet; day-granularity
-        // epoch days via DATE (TZ-free on both engines)
-        unix_date(to_date(col("o_orderdate"))).cast("long").as("t"),
-        col("o_orderkey"), col("o_totalprice"))
-      .groupBy("k", "t")
-      .agg(max(struct(col("o_orderkey"), col("o_totalprice"))).as("s"))
-      .select(col("k"), col("t"),
-        col("s.o_orderkey").as("o_orderkey"), col("s.o_totalprice").as("o_totalprice"))
+    val ev = asofEvents(spark, dir)
+    val od = latestPerDay(asofOrders(spark, dir, "k", "t"))
     val tagged = od
       .select(col("k"), col("t"), lit(0).as("tag"),
         col("o_orderkey"), col("o_totalprice"),
@@ -668,7 +656,39 @@ object Analytics {
         lit(null).cast("long").as("o_orderkey"),
         lit(null).cast("double").as("o_totalprice"),
         col("event_id")))
-    val w = Window.partitionBy("k").orderBy(col("t"), col("tag"))
+    carryForward(tagged, Window.partitionBy("k"))
+  }
+
+  /** c21's probe side: purchase events as (k = user_id + 1, t = epoch
+    * day, event_id). Shared by c21/c22/c24/c25. */
+  private[graft] def asofEvents(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir).filter(col("event_type") === "purchase")
+      .select((col("user_id") + 1).as("k"),
+        expr("unix_millis(ts) div 86400000").as("t"), col("event_id"))
+
+  /** c21's build side: orders as (`k` = customer, `t` = epoch day,
+    * o_orderkey, o_totalprice). o_orderdate is TIMESTAMP_NTZ in the
+    * parquet; day-granularity epoch days via DATE (TZ-free on both
+    * engines). */
+  private[graft] def asofOrders(spark: SparkSession, dir: String, k: String, t: String): DataFrame =
+    Tables(spark, dir, "orders").select(col("o_custkey").as(k),
+      unix_date(to_date(col("o_orderdate"))).cast("long").as(t),
+      col("o_orderkey"), col("o_totalprice"))
+
+  /** One order per (k, t) — argmax orderkey via struct max: as-of over
+    * duplicate timestamps is otherwise nondeterministic. */
+  private def latestPerDay(od: DataFrame): DataFrame =
+    od.groupBy("k", "t")
+      .agg(max(struct(col("o_orderkey"), col("o_totalprice"))).as("s"))
+      .select(col("k"), col("t"),
+        col("s.o_orderkey").as("o_orderkey"), col("s.o_totalprice").as("o_totalprice"))
+
+  /** The window formulation's tail (c21, c24): over the tagged union
+    * (orders tag 0, events tag 1), carry the latest order forward in
+    * each `partition` ordered by (t, tag), and keep the matched event
+    * rows. */
+  private def carryForward(tagged: DataFrame, partition: WindowSpec): DataFrame = {
+    val w = partition.orderBy(col("t"), col("tag"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     tagged
       .withColumn("o_key", last(col("o_orderkey"), ignoreNulls = true).over(w))
@@ -718,20 +738,9 @@ object Analytics {
     // one bucket and break the carry-in "t < bucket start" invariant;
     // the TPC-H-era testdata and any post-1970 feed satisfy this)
     val bucketDays = 16L
-    val e = Tables.events(spark, dir)
-    val o = Tables(spark, dir, "orders")
-    val ev = e.filter(col("event_type") === "purchase")
-      .select((col("user_id") + 1).as("k"),
-        expr("unix_millis(ts) div 86400000").as("t"), col("event_id"))
-      .withColumn("bkt", expr(s"t div $bucketDays"))
+    val ev = asofEvents(spark, dir).withColumn("bkt", expr(s"t div $bucketDays"))
     // same per-(key, day) determinism dedup as c21
-    val od = o.select(col("o_custkey").as("k"),
-        unix_date(to_date(col("o_orderdate"))).cast("long").as("t"),
-        col("o_orderkey"), col("o_totalprice"))
-      .groupBy("k", "t")
-      .agg(max(struct(col("o_orderkey"), col("o_totalprice"))).as("s"))
-      .select(col("k"), col("t"),
-        col("s.o_orderkey").as("o_orderkey"), col("s.o_totalprice").as("o_totalprice"))
+    val od = latestPerDay(asofOrders(spark, dir, "k", "t"))
       .withColumn("bkt", expr(s"t div $bucketDays"))
     // latest order per active (key, bucket) — the ONLY data the
     // cross-bucket pass touches
@@ -758,17 +767,7 @@ object Analytics {
       .unionByName(ev.select(col("k"), col("bkt"), col("t"), lit(1).as("tag"),
         lit(null).cast("long").as("o_orderkey"),
         lit(null).cast("double").as("o_totalprice"), col("event_id")))
-    val w = Window.partitionBy("k", "bkt").orderBy(col("t"), col("tag"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      .withColumn("o_key", last(col("o_orderkey"), ignoreNulls = true).over(w))
-      .withColumn("o_day", last(when(col("tag") === 0, col("t")), ignoreNulls = true).over(w))
-      .withColumn("o_price", last(col("o_totalprice"), ignoreNulls = true).over(w))
-      .filter(col("tag") === 1 && col("o_key").isNotNull)
-      .select(col("event_id"), col("k"), col("t").as("event_day"),
-        col("o_day").as("order_day"), col("o_key").as("o_orderkey"),
-        col("o_price").as("o_totalprice"))
-      .orderBy("event_id")
+    carryForward(tagged, Window.partitionBy("k", "bkt"))
   }
 
   /** c26 — large-volume orders (TPC-H q18 shape): the agg-filter-

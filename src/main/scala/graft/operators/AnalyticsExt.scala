@@ -903,16 +903,22 @@ object AnalyticsExt {
       .select(col("brand"), col("n_item"))
   }
 
-  private def basketAssoc(baskets: DataFrame, dim: DataFrame, nBrands: Int): DataFrame = {
+  /** Each (brand_a, brand_b) row of `pairs` with its brands' order
+    * counts n_a, n_b and the basket total n_orders. */
+  private def withMargins(pairs: DataFrame, baskets: DataFrame, dim: DataFrame,
+      nBrands: Int): DataFrame = {
     val n = baskets.agg(count(lit(1)).as("n_orders"))
     val itemCnt = basketItemCnt(baskets, dim, nBrands)
-    val pairs = basketPairs(baskets, dim)
     pairs
       .join(broadcast(itemCnt.withColumnRenamed("brand", "brand_a")
         .withColumnRenamed("n_item", "n_a")), Seq("brand_a"))
       .join(broadcast(itemCnt.withColumnRenamed("brand", "brand_b")
         .withColumnRenamed("n_item", "n_b")), Seq("brand_b"))
       .crossJoin(broadcast(n))
+  }
+
+  private def basketAssoc(baskets: DataFrame, dim: DataFrame, nBrands: Int): DataFrame = {
+    withMargins(basketPairs(baskets, dim), baskets, dim, nBrands)
       .select(col("brand_a"), col("brand_b"), col("support"),
         expr("CAST(CAST(support AS DECIMAL(38,0)) * 1000000 DIV n_a AS BIGINT)")
           .as("conf_ab_micro"),
@@ -1013,15 +1019,7 @@ object AnalyticsExt {
     // stage)
     val (dim, nBrands) = brandDim(spark, dir)
     val baskets = basketsOf(spark, dir, dim)
-    val pairs = basketAssoc(baskets, dim, nBrands)
-    val n = baskets.agg(count(lit(1)).as("n_orders"))
-    val itemCnt = basketItemCnt(baskets, dim, nBrands)
-    pairs
-      .join(broadcast(itemCnt.withColumnRenamed("brand", "brand_a")
-        .withColumnRenamed("n_item", "n_a")), Seq("brand_a"))
-      .join(broadcast(itemCnt.withColumnRenamed("brand", "brand_b")
-        .withColumnRenamed("n_item", "n_b")), Seq("brand_b"))
-      .crossJoin(broadcast(n))
+    withMargins(basketAssoc(baskets, dim, nBrands), baskets, dim, nBrands)
       .withColumn("a", col("support"))
       .withColumn("b", col("n_a") - col("support"))
       .withColumn("c", col("n_b") - col("support"))

@@ -778,6 +778,22 @@ object AnalyticsTs {
          MIN(CASE WHEN s > 20000 THEN ts_ms END) AS first_alarm_ms
        FROM c GROUP BY user_id ORDER BY user_id"""
 
+  /** c66's cohorts: every exposed user (first view) with its variant
+    * (user_id % 2) and `conv` = 1 if it purchased within 7 days after
+    * that first view, else NULL. Shared by c66, c67 and c71. */
+  private def abExposed(spark: SparkSession, dir: String): DataFrame = {
+    val e = Tables.events(spark, dir)
+      .select(col("user_id"), col("event_type"), unix_millis(col("ts")).as("ms"))
+    val exposed = e.filter(col("event_type") === "view")
+      .groupBy("user_id").agg(min(col("ms")).as("fv"))
+    val converted = e.filter(col("event_type") === "purchase")
+      .join(exposed, "user_id")
+      .filter(col("ms") > col("fv") && col("ms") <= col("fv") + 604800000L)
+      .select("user_id").distinct()
+    exposed.select(col("user_id"), (col("user_id") % 2).as("variant"))
+      .join(converted.withColumn("conv", lit(1L)), Seq("user_id"), "left")
+  }
+
   // c66 — A/B conversion test (the experimentation readout every
   // product pipeline ends in): deterministic variant assignment
   // (user_id % 2), exposure = the user's FIRST view, conversion = any
@@ -791,16 +807,7 @@ object AnalyticsTs {
   // the two keyed shuffles. At 100 TB: the exposed/converted sets
   // never materialize as rows, only counts.
   def qAbTest(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_millis(col("ts")).as("ms"))
-    val exposed = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min(col("ms")).as("fv"))
-    val converted = e.filter(col("event_type") === "purchase")
-      .join(exposed, "user_id")
-      .filter(col("ms") > col("fv") && col("ms") <= col("fv") + 604800000L)
-      .select("user_id").distinct()
-    val stats = exposed.select(col("user_id"), (col("user_id") % 2).as("variant"))
-      .join(converted.withColumn("conv", lit(1L)), Seq("user_id"), "left")
+    val stats = abExposed(spark, dir)
       .groupBy("variant")
       .agg(count(lit(1)).as("n_exposed"),
         sum(coalesce(col("conv"), lit(0L))).as("n_converted"))
@@ -880,16 +887,7 @@ object AnalyticsTs {
       424136118829305329L, 848272237658610659L, 1060340297073263324L,
       1131029650211480879L, 1148701988496035267L, 1152236456152946145L,
       1152825534095764625L, 1152909688087595836L)
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_millis(col("ts")).as("ms"))
-    val exposed = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min(col("ms")).as("fv"))
-    val converted = e.filter(col("event_type") === "purchase")
-      .join(exposed, "user_id")
-      .filter(col("ms") > col("fv") && col("ms") <= col("fv") + 604800000L)
-      .select("user_id").distinct()
-    val users = exposed.select(col("user_id"), (col("user_id") % 2).as("variant"))
-      .join(converted.withColumn("conv", lit(1L)), Seq("user_id"), "left")
+    val users = abExposed(spark, dir)
       .select(col("user_id"), col("variant"),
         coalesce(col("conv"), lit(0L)).as("conv"))
     val tArr = thresholds.mkString("array(", ", ", ")")
@@ -1078,16 +1076,7 @@ object AnalyticsTs {
   // two keyed shuffles fold to one 4-count row; the statistic is
   // driver-free scalar math on it.
   def qChi2(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type"), unix_millis(col("ts")).as("ms"))
-    val exposed = e.filter(col("event_type") === "view")
-      .groupBy("user_id").agg(min(col("ms")).as("fv"))
-    val converted = e.filter(col("event_type") === "purchase")
-      .join(exposed, "user_id")
-      .filter(col("ms") > col("fv") && col("ms") <= col("fv") + 604800000L)
-      .select("user_id").distinct()
-    exposed.select(col("user_id"), (col("user_id") % 2).as("variant"))
-      .join(converted.withColumn("conv", lit(1L)), Seq("user_id"), "left")
+    abExposed(spark, dir)
       .agg(
         sum(when(col("variant") === 0 && col("conv").isNotNull, 1L).otherwise(0L)).as("a"),
         sum(when(col("variant") === 0 && col("conv").isNull, 1L).otherwise(0L)).as("b"),
@@ -1128,6 +1117,23 @@ object AnalyticsTs {
           AS BIGINT) AS chi2_micro
       FROM cells"""
 
+  /** The DENSE daily purchase series (day, x = cents): missing days
+    * are real zeros — skipping them would splice non-adjacent days
+    * together (c48's grid argument). One scan → per-day agg (bounded
+    * by span) → dense grid off the 1-row span agg. Shared by c72 and
+    * c78. */
+  private def dailyPurchases(spark: SparkSession, dir: String): DataFrame = {
+    val e = Tables.events(spark, dir)
+      .filter(col("event_type") === "purchase")
+      .select((unix_millis(col("ts")) / 86400000L).cast("long").as("day"),
+        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+    val daily = e.groupBy("day").agg(sum(col("cents")).as("x"))
+    val grid = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
+      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
+    grid.join(daily, Seq("day"), "left")
+      .select(col("day"), coalesce(col("x"), lit(0L)).as("x"))
+  }
+
   // c72 — autocorrelation function of the daily revenue series at
   // lags 1..7 (the seasonality probe run before any forecast is
   // trusted — a weekly cycle shows as an ACF spike at lag 7). The
@@ -1143,15 +1149,7 @@ object AnalyticsTs {
   // input is one row per DAY — bounded by calendar span, never rows
   // (c68's boundedness argument).
   def qAcf(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select((unix_millis(col("ts")) / 86400000L).cast("long").as("day"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-    val daily = e.groupBy("day").agg(sum(col("cents")).as("x"))
-    val grid = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val series = grid.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("x"), lit(0L)).as("x"))
+    val series = dailyPurchases(spark, dir)
     val tot = series.agg(count(lit(1)).as("n"), sum(col("x")).as("s"))
     val w = Window.orderBy("day")
     val dev = series.crossJoin(broadcast(tot))
@@ -1276,15 +1274,7 @@ object AnalyticsTs {
   // for days with a full 16-day history, abs error alongside for the
   // backtest readout.
   def qEwma(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-      .filter(col("event_type") === "purchase")
-      .select((unix_millis(col("ts")) / 86400000L).cast("long").as("day"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-    val daily = e.groupBy("day").agg(sum(col("cents")).as("x"))
-    val grid = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
-      .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val series = grid.join(daily, Seq("day"), "left")
-      .select(col("day"), coalesce(col("x"), lit(0L)).as("x"))
+    val series = dailyPurchases(spark, dir)
     val w = Window.orderBy("day")
     val withLags = (1 to 16).foldLeft(series)((df, j) =>
       df.withColumn(s"l$j", lag(col("x"), j).over(w)))

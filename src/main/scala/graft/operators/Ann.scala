@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Oracle, Query, Tables}
 
@@ -160,17 +160,7 @@ object Ann {
   private[graft] def filteredIvfTopK(e: DataFrame, admissible: DataFrame,
       k: Int): DataFrame = {
     // full-corpus IVF centroids + probe — identical math to e3
-    val pe = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "v")))
-    val cent = pe.groupBy("label", "i")
-      .agg(sum(round(col("v").cast("double"), 6).cast("decimal(8,6)"))
-        .cast("decimal(12,6)").as("s"), count(lit(1)).as("n"))
-    val qe = e.filter(col("vec_id") === 0)
-      .select(posexplode(col("embedding")).as(Seq("i", "qv")))
-    val dots = cent.join(broadcast(qe), "i")
-      .groupBy("label")
-      .agg((sum(round(col("qv").cast("double"), 6).cast("decimal(8,6)") * col("s"))
-        .cast("double") / max(col("n"))).as("dot"))
-    val best = dots.orderBy(col("dot").desc, col("label")).limit(1).select("label")
+    val best = ivfBest(ivfQueryDots(e)).select("label")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     e.join(broadcast(best), "label")   // geometry prune: only the probed cell
       .join(admissible, "vec_id")      // metadata prune BEFORE distance math
@@ -235,19 +225,9 @@ object Ann {
     */
   def qAnnIvf(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
-    // per-(cell, dim) exact centroid numerators + cell sizes
-    val pe = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "v")))
-    val cent = pe.groupBy("label", "i")
-      .agg(sum(round(col("v").cast("double"), 6).cast("decimal(8,6)"))
-        .cast("decimal(12,6)").as("s"), count(lit(1)).as("n"))
-    // query vector, position-exploded, broadcast to the centroid table
-    val qe = e.filter(col("vec_id") === 0)
-      .select(posexplode(col("embedding")).as(Seq("i", "qv")))
-    val dots = cent.join(broadcast(qe), "i")
-      .groupBy("label")
-      .agg((sum(round(col("qv").cast("double"), 6).cast("decimal(8,6)") * col("s"))
-        .cast("double") / max(col("n"))).as("dot"))
-    val best = dots.orderBy(col("dot").desc, col("label")).limit(1).select("label")
+    // per-(cell, dim) exact centroid numerators + cell sizes, probed
+    // by the position-exploded query vector broadcast to them
+    val best = ivfBest(ivfQueryDots(e)).select("label")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     e.join(broadcast(best), "label")
       .crossJoin(broadcast(q))
@@ -352,6 +332,118 @@ object Ann {
     s"list_sum(list_transform(generate_series(1, 8), i -> " +
       s"CAST($a[${8 * j} + i] AS DOUBLE) * CAST($b[${8 * j} + i] AS DOUBLE)))"
 
+  // ---- the IVF coarse quantizer and the PQ encode/ADC, one home each:
+  // e3/e8/e9/e20/e26 and Serving's persisted index (e12/e13/e18) call
+  // these, so a served result and its rebuild-every-time twin cannot
+  // drift apart ----
+
+  /** The IVF index side: per (label, i) the exact decimal centroid
+    * numerator `s` and the cell size `n` of a position-exploded
+    * (label, i, v) frame. Decimal sums are order-insensitive, so the
+    * centroids are deterministic under any partitioning. */
+  private[graft] def ivfCentroids(pe: DataFrame): DataFrame =
+    pe.groupBy("label", "i")
+      .agg(sum(round(col("v").cast("double"), 6).cast("decimal(8,6)"))
+        .cast("decimal(12,6)").as("s"), count(lit(1)).as("n"))
+
+  /** The position-exploded (i, qv) components of query vector `vecId`. */
+  private[graft] def queryDims(e: DataFrame, vecId: Long = 0L): DataFrame =
+    e.filter(col("vec_id") === vecId)
+      .select(posexplode(col("embedding")).as(Seq("i", "qv")))
+
+  /** The IVF probe side: per `by` group, the exact-decimal dot of the
+    * query components `qv` of `qe` (i, qv) with each cell's centroid. */
+  private[graft] def ivfDots(cent: DataFrame, qe: DataFrame, qv: String = "qv",
+      by: Seq[String] = Seq("label")): DataFrame =
+    cent.join(broadcast(qe), "i")
+      .groupBy(by.map(col): _*)
+      .agg((sum(round(col(qv).cast("double"), 6).cast("decimal(8,6)") * col("s"))
+        .cast("double") / max(col("n"))).as("dot"))
+
+  /** e3's probe over (vec_id, label, embedding): query vector 0's dot
+    * with every cell centroid of the same frame. */
+  private[graft] def ivfQueryDots(e: DataFrame): DataFrame =
+    ivfDots(ivfCentroids(e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "v")))),
+      queryDims(e))
+
+  /** The probed cell: the best dot, the lower label on a tie. */
+  private[graft] def ivfBest(dots: DataFrame): DataFrame =
+    dots.orderBy(col("dot").desc, col("label")).limit(1)
+
+  /** e6's integer argmin key per subspace: dist² − |v_j|² =
+    * |a_j|² − 2·v_j·a_j (the |v_j|² term is constant per vector, so
+    * dropping it preserves the argmin), quantized to 1e-6 and packed
+    * with the anchor id so MIN() is the deterministic argmin. */
+  private[graft] def pqKeys: Seq[Column] = (0 until 8).map { j =>
+    expr(s"CAST(round(round(${subDotSpark("a", "a", j)} - 2 * ${subDotSpark("embedding", "a", j)}, 6) * 1000000, 0) AS BIGINT) * 16 + a_id")
+  }
+
+  /** e6's LUT entry per subspace: query · anchor, on the 1e-6 grid. */
+  private[graft] def pqLutDots: Seq[Column] = (0 until 8).map { j =>
+    expr(s"CAST(round(round(${subDotSpark("qv", "a", j)}, 6) * 1000000, 0) AS BIGINT)")
+  }
+
+  /** The anchors of the PQ codebook: vectors 1..4. */
+  private[graft] def pqAnchors(e: DataFrame): DataFrame =
+    e.filter(col("vec_id").between(1, 4))
+      .select(col("vec_id").as("a_id"), col("embedding").as("a"))
+
+  /** PQ encode: each vector's codes c0..c7, the argmin anchor of the
+    * packed per-subspace `keys` (one broadcast fan-out, per-vector
+    * min aggs). */
+  private[graft] def pqEncode(vecs: DataFrame, anchors: DataFrame, keys: Seq[Column]): DataFrame = {
+    val scored = vecs.crossJoin(broadcast(anchors))
+      .select(col("vec_id") +: keys.zipWithIndex.map { case (k, j) => k.as(s"k$j") }: _*)
+    val codeAggs = (0 until 8).map(j => pmod(min(col(s"k$j")), lit(16L)).as(s"c$j"))
+    scored.groupBy("vec_id").agg(codeAggs.head, codeAggs.tail: _*)
+  }
+
+  /** A codes row in long form: (j, code) per subspace. */
+  private[graft] def pqCodeCells: Column =
+    posexplode(array((0 until 8).map(j => col(s"c$j")): _*)).as(Seq("j", "code"))
+
+  /** The ADC lookup table (keys…, a_id, j, dot_i) of query frame `q`
+    * against `anchors`, one `dots` entry per subspace. */
+  private[graft] def pqLut(anchors: DataFrame, q: DataFrame, dots: Seq[Column],
+      keys: Column*): DataFrame = {
+    val wide = anchors.crossJoin(broadcast(q)).select(keys ++ (col("a_id") +:
+      dots.zipWithIndex.map { case (d, j) => d.as(s"l$j") }): _*)
+    wide.select(keys ++ Seq(col("a_id"),
+      posexplode(array((0 until 8).map(j => col(s"l$j")): _*)).as(Seq("j", "dot_i"))): _*)
+  }
+
+  /** ADC search then exact rerank: score every `codes` row by its LUT
+    * adds (`adc` folds dot_i), keep the top `depth`, and rerank them
+    * by exact cosine against `q` on the raw vectors of `raw`. */
+  private[graft] def adcRerank(codes: DataFrame, lut: DataFrame, adc: Column,
+      raw: DataFrame, q: DataFrame, depth: Int): DataFrame = {
+    val cl = codes.select(col("vec_id"), pqCodeCells)
+    cl.as("cl").join(broadcast(lut.as("lt")),
+        col("cl.code") === col("lt.a_id") && col("cl.j") === col("lt.j"))
+      .groupBy(col("cl.vec_id").as("vec_id"))
+      .agg(adc.as("adc"))
+      .orderBy(col("adc").desc, col("vec_id")).limit(depth)
+      .join(raw.select(col("vec_id"), col("embedding")), "vec_id")
+      .crossJoin(broadcast(q))
+      .select(col("vec_id"), col("adc"), expr(cosineSpark("embedding", "qv")).as("cos_sim"))
+      .orderBy(col("adc").desc, col("vec_id"))
+  }
+
+  /** e6's ADC fold: the LUT sum back on the 1e-6 grid. */
+  private[graft] def pqAdc: Column = round(sum("dot_i").cast("double") / 1000000, 6)
+
+  /** The DuckDB twins of [[pqKeys]], the code aggs, [[pqLutDots]] and
+    * the LUT unpivot, shared by the e6/e9/e9-res/e13 oracles. */
+  private[graft] val pqKeysDuck: String = (0 until 8).map(j =>
+    s"CAST(round(round(${subDotDuck("a", "a", j)} - 2 * ${subDotDuck("e.embedding", "a", j)}, 6) * 1000000, 0) AS BIGINT) * 16 + a_id AS k$j")
+    .mkString(", ")
+  private[graft] val pqCodeColsDuck: String =
+    (0 until 8).map(j => s"((MIN(k$j) % 16) + 16) % 16 AS c$j").mkString(", ")
+  private[graft] val pqLutsDuck: String = (0 until 8).map(j =>
+    s"CAST(round(round(${subDotDuck("qv", "a", j)}, 6) * 1000000, 0) AS BIGINT) AS l$j")
+    .mkString(", ")
+  private[graft] val pqLutCaseDuck: String = (0 until 8).map(j => s"WHEN $j THEN l$j").mkString(" ")
+
   /** e6 — product-quantization ANN (the memory-scale path: a 100 TB
     * corpus can't hold raw vectors in RAM, but 8 one-byte codes per
     * vector can). 64 dims → 8 subspaces × 8 dims; the codebook is 4
@@ -368,56 +460,20 @@ object Ann {
     * touches full vectors again. */
   def qAnnPq(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
-    val anchors = e.filter(col("vec_id").between(1, 4))
-      .select(col("vec_id").as("a_id"), col("embedding").as("a"))
+    val anchors = pqAnchors(e)
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    // squared-distance argmin key per subspace: dist² − |v_j|² =
-    // |a_j|² − 2·v_j·a_j (the |v_j|² term is constant per vector, so
-    // dropping it preserves the argmin); quantized to 1e-6 and packed
-    // with the anchor id so MIN() is the deterministic argmin
-    val ks = (0 until 8).map { j =>
-      expr(s"CAST(round(round(${subDotSpark("a", "a", j)} - 2 * ${subDotSpark("embedding", "a", j)}, 6) * 1000000, 0) AS BIGINT) * 16 + a_id")
-        .as(s"k$j")
-    }
-    val scored = e.crossJoin(broadcast(anchors)).select(col("vec_id") +: ks: _*)
-    val codeAggs = (0 until 8).map(j => pmod(min(col(s"k$j")), lit(16L)).as(s"c$j"))
-    val codes = scored.groupBy("vec_id").agg(codeAggs.head, codeAggs.tail: _*)
-    val cl = codes.select(col("vec_id"),
-      posexplode(array((0 until 8).map(j => col(s"c$j")): _*)).as(Seq("j", "code")))
-    val lutWide = anchors.crossJoin(broadcast(q)).select(col("a_id") +:
-      (0 until 8).map { j =>
-        expr(s"CAST(round(round(${subDotSpark("qv", "a", j)}, 6) * 1000000, 0) AS BIGINT)").as(s"l$j")
-      }: _*)
-    val lut = lutWide.select(col("a_id"),
-      posexplode(array((0 until 8).map(j => col(s"l$j")): _*)).as(Seq("j", "dot_i")))
-    val adc = cl.as("cl").join(broadcast(lut.as("lt")),
-        col("cl.code") === col("lt.a_id") && col("cl.j") === col("lt.j"))
-      .groupBy(col("cl.vec_id").as("vec_id"))
-      .agg(round(sum("dot_i").cast("double") / 1000000, 6).as("adc"))
-    adc.orderBy(col("adc").desc, col("vec_id")).limit(10)
-      .join(e.select(col("vec_id"), col("embedding")), "vec_id")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("adc"), expr(cosineSpark("embedding", "qv")).as("cos_sim"))
-      .orderBy(col("adc").desc, col("vec_id"))
+    adcRerank(pqEncode(e, anchors, pqKeys), pqLut(anchors, q, pqLutDots), pqAdc, e, q, 10)
   }
 
   val qAnnPqSql: String = {
-    val ds = (0 until 8).map(j =>
-      s"CAST(round(round(${subDotDuck("a", "a", j)} - 2 * ${subDotDuck("e.embedding", "a", j)}, 6) * 1000000, 0) AS BIGINT) * 16 + a_id AS k$j")
-      .mkString(", ")
-    val codeCols = (0 until 8).map(j => s"((MIN(k$j) % 16) + 16) % 16 AS c$j").mkString(", ")
-    val luts = (0 until 8).map(j =>
-      s"CAST(round(round(${subDotDuck("qv", "a", j)}, 6) * 1000000, 0) AS BIGINT) AS l$j")
-      .mkString(", ")
-    val lutCase = (0 until 8).map(j => s"WHEN $j THEN l$j").mkString(" ")
     s"""WITH anchors AS (SELECT vec_id AS a_id, embedding AS a FROM embeddings WHERE vec_id BETWEEN 1 AND 4),
       q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      scored AS (SELECT e.vec_id, a_id, $ds FROM embeddings e, anchors),
-      codes AS (SELECT vec_id, $codeCols FROM scored GROUP BY vec_id),
+      scored AS (SELECT e.vec_id, a_id, ${pqKeysDuck} FROM embeddings e, anchors),
+      codes AS (SELECT vec_id, ${pqCodeColsDuck} FROM scored GROUP BY vec_id),
       cl AS (SELECT vec_id, unnest([0,1,2,3,4,5,6,7]) AS j,
         unnest([c0,c1,c2,c3,c4,c5,c6,c7]) AS code FROM codes),
-      lut AS (SELECT a_id, j, CASE j $lutCase END AS dot_i
-        FROM (SELECT a_id, $luts, unnest([0,1,2,3,4,5,6,7]) AS j FROM anchors, q) x),
+      lut AS (SELECT a_id, j, CASE j ${pqLutCaseDuck} END AS dot_i
+        FROM (SELECT a_id, ${pqLutsDuck}, unnest([0,1,2,3,4,5,6,7]) AS j FROM anchors, q) x),
       adc AS (
         SELECT cl.vec_id AS vec_id,
           round(CAST(CAST(SUM(lut.dot_i) AS BIGINT) AS DOUBLE) / 1000000, 6) AS adc
@@ -445,57 +501,15 @@ object Ann {
   def qAnnIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
     // probe: exact decimal centroid numerators, best cell by query dot
-    val pe = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "v")))
-    val cent = pe.groupBy("label", "i")
-      .agg(sum(round(col("v").cast("double"), 6).cast("decimal(8,6)"))
-        .cast("decimal(12,6)").as("s"), count(lit(1)).as("n"))
-    val qe = e.filter(col("vec_id") === 0)
-      .select(posexplode(col("embedding")).as(Seq("i", "qv")))
-    val dots = cent.join(broadcast(qe), "i")
-      .groupBy("label")
-      .agg((sum(round(col("qv").cast("double"), 6).cast("decimal(8,6)") * col("s"))
-        .cast("double") / max(col("n"))).as("dot"))
-    val best = dots.orderBy(col("dot").desc, col("label")).limit(1).select("label")
+    val best = ivfBest(ivfQueryDots(e)).select("label")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     // the compressed-domain scan is restricted to the probed cell
     val cell = e.join(broadcast(best), "label")
-    val anchors = e.filter(col("vec_id").between(1, 4))
-      .select(col("vec_id").as("a_id"), col("embedding").as("a"))
-    val ks = (0 until 8).map { j =>
-      expr(s"CAST(round(round(${subDotSpark("a", "a", j)} - 2 * ${subDotSpark("embedding", "a", j)}, 6) * 1000000, 0) AS BIGINT) * 16 + a_id")
-        .as(s"k$j")
-    }
-    val scored = cell.crossJoin(broadcast(anchors)).select(col("vec_id") +: ks: _*)
-    val codeAggs = (0 until 8).map(j => pmod(min(col(s"k$j")), lit(16L)).as(s"c$j"))
-    val codes = scored.groupBy("vec_id").agg(codeAggs.head, codeAggs.tail: _*)
-    val cl = codes.select(col("vec_id"),
-      posexplode(array((0 until 8).map(j => col(s"c$j")): _*)).as(Seq("j", "code")))
-    val lutWide = anchors.crossJoin(broadcast(q)).select(col("a_id") +:
-      (0 until 8).map { j =>
-        expr(s"CAST(round(round(${subDotSpark("qv", "a", j)}, 6) * 1000000, 0) AS BIGINT)").as(s"l$j")
-      }: _*)
-    val lut = lutWide.select(col("a_id"),
-      posexplode(array((0 until 8).map(j => col(s"l$j")): _*)).as(Seq("j", "dot_i")))
-    val adc = cl.as("cl").join(broadcast(lut.as("lt")),
-        col("cl.code") === col("lt.a_id") && col("cl.j") === col("lt.j"))
-      .groupBy(col("cl.vec_id").as("vec_id"))
-      .agg(round(sum("dot_i").cast("double") / 1000000, 6).as("adc"))
-    adc.orderBy(col("adc").desc, col("vec_id")).limit(10)
-      .join(e.select(col("vec_id"), col("embedding")), "vec_id")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("adc"), expr(cosineSpark("embedding", "qv")).as("cos_sim"))
-      .orderBy(col("adc").desc, col("vec_id"))
+    val anchors = pqAnchors(e)
+    adcRerank(pqEncode(cell, anchors, pqKeys), pqLut(anchors, q, pqLutDots), pqAdc, e, q, 10)
   }
 
   val qAnnIvfPqSql: String = {
-    val ds = (0 until 8).map(j =>
-      s"CAST(round(round(${subDotDuck("a", "a", j)} - 2 * ${subDotDuck("e.embedding", "a", j)}, 6) * 1000000, 0) AS BIGINT) * 16 + a_id AS k$j")
-      .mkString(", ")
-    val codeCols = (0 until 8).map(j => s"((MIN(k$j) % 16) + 16) % 16 AS c$j").mkString(", ")
-    val luts = (0 until 8).map(j =>
-      s"CAST(round(round(${subDotDuck("qv", "a", j)}, 6) * 1000000, 0) AS BIGINT) AS l$j")
-      .mkString(", ")
-    val lutCase = (0 until 8).map(j => s"WHEN $j THEN l$j").mkString(" ")
     s"""WITH pe AS (
         SELECT label, unnest(generate_series(1, len(embedding))) AS i, unnest(embedding) AS v
         FROM embeddings),
@@ -514,13 +528,13 @@ object Ann {
       best AS (SELECT label FROM cdots ORDER BY dot DESC, label LIMIT 1),
       anchors AS (SELECT vec_id AS a_id, embedding AS a FROM embeddings WHERE vec_id BETWEEN 1 AND 4),
       q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-      scored AS (SELECT e.vec_id, a_id, $ds FROM embeddings e, anchors
+      scored AS (SELECT e.vec_id, a_id, ${pqKeysDuck} FROM embeddings e, anchors
         WHERE e.label = (SELECT label FROM best)),
-      codes AS (SELECT vec_id, $codeCols FROM scored GROUP BY vec_id),
+      codes AS (SELECT vec_id, ${pqCodeColsDuck} FROM scored GROUP BY vec_id),
       cl AS (SELECT vec_id, unnest([0,1,2,3,4,5,6,7]) AS j,
         unnest([c0,c1,c2,c3,c4,c5,c6,c7]) AS code FROM codes),
-      lut AS (SELECT a_id, j, CASE j $lutCase END AS dot_i
-        FROM (SELECT a_id, $luts, unnest([0,1,2,3,4,5,6,7]) AS j FROM anchors, q) x),
+      lut AS (SELECT a_id, j, CASE j ${pqLutCaseDuck} END AS dot_i
+        FROM (SELECT a_id, ${pqLutsDuck}, unnest([0,1,2,3,4,5,6,7]) AS j FROM anchors, q) x),
       adc AS (
         SELECT cl.vec_id AS vec_id,
           round(CAST(CAST(SUM(lut.dot_i) AS BIGINT) AS DOUBLE) / 1000000, 6) AS adc
@@ -597,38 +611,18 @@ object Ann {
         .as("r"))
     val anchors = e.filter(col("vec_id").between(1, 4))
       .select(col("vec_id").as("a_id"), expr(s"transform(embedding, $micro)").as("aq"))
-    val ks = (0 until 8).map { j =>
-      expr(s"(${isubDotSpark("aq", "aq", j)} - 2 * ${isubDotSpark("r", "aq", j)}) * 16 + a_id")
-        .as(s"k$j")
-    }
-    val scored = res.crossJoin(broadcast(anchors)).select(col("vec_id") +: ks: _*)
-    val codeAggs = (0 until 8).map(j => pmod(min(col(s"k$j")), lit(16L)).as(s"c$j"))
-    val codes = scored.groupBy("vec_id").agg(codeAggs.head, codeAggs.tail: _*)
-    val cl = codes.select(col("vec_id"),
-      posexplode(array((0 until 8).map(j => col(s"c$j")): _*)).as(Seq("j", "code")))
-    val lutWide = anchors.crossJoin(broadcast(qfull)).select(col("a_id") +:
-      (0 until 8).map(j => expr(isubDotSpark("qq", "aq", j)).as(s"l$j")): _*)
-    val lut = lutWide.select(col("a_id"),
-      posexplode(array((0 until 8).map(j => col(s"l$j")): _*)).as(Seq("j", "dot_i")))
-    val adc = cl.as("cl").join(broadcast(lut.as("lt")),
-        col("cl.code") === col("lt.a_id") && col("cl.j") === col("lt.j"))
-      .groupBy(col("cl.vec_id").as("vec_id"))
-      .agg(sum("dot_i").as("adc"))
+    val keys = (0 until 8).map(j =>
+      expr(s"(${isubDotSpark("aq", "aq", j)} - 2 * ${isubDotSpark("r", "aq", j)}) * 16 + a_id"))
+    val lut = pqLut(anchors, qfull, (0 until 8).map(j => expr(isubDotSpark("qq", "aq", j))))
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-    adc.orderBy(col("adc").desc, col("vec_id")).limit(10)
-      .join(e.select(col("vec_id"), col("embedding")), "vec_id")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("adc"), expr(cosineSpark("embedding", "qv")).as("cos_sim"))
-      .orderBy(col("adc").desc, col("vec_id"))
+    adcRerank(pqEncode(res, anchors, keys), lut, sum("dot_i"), e, q, 10)
   }
 
   val qAnnIvfPqResSql: String = {
     val ds = (0 until 8).map(j =>
       s"(${isubDotDuck("aq", "aq", j)} - 2 * ${isubDotDuck("r", "aq", j)}) * 16 + a_id AS k$j")
       .mkString(", ")
-    val codeCols = (0 until 8).map(j => s"((MIN(k$j) % 16) + 16) % 16 AS c$j").mkString(", ")
     val luts = (0 until 8).map(j => s"${isubDotDuck("qq", "aq", j)} AS l$j").mkString(", ")
-    val lutCase = (0 until 8).map(j => s"WHEN $j THEN l$j").mkString(" ")
     val micro = "list_transform(embedding, v -> CAST(round(round(CAST(v AS DOUBLE), 6) * 1000000, 0) AS BIGINT))"
     s"""WITH eq AS (
         SELECT vec_id, label, embedding, $micro AS qvec FROM embeddings),
@@ -649,10 +643,10 @@ object Ann {
             d -> ((e.qvec[d] + 2000000) * b.n - b.sarr[d]) // b.n - 2000000) AS r
         FROM eq e JOIN best USING (label) CROSS JOIN bcell b),
       scored AS (SELECT res.vec_id, a_id, $ds FROM res, anchors),
-      codes AS (SELECT vec_id, $codeCols FROM scored GROUP BY vec_id),
+      codes AS (SELECT vec_id, ${pqCodeColsDuck} FROM scored GROUP BY vec_id),
       cl AS (SELECT vec_id, unnest([0,1,2,3,4,5,6,7]) AS j,
         unnest([c0,c1,c2,c3,c4,c5,c6,c7]) AS code FROM codes),
-      lut AS (SELECT a_id, j, CASE j $lutCase END AS dot_i
+      lut AS (SELECT a_id, j, CASE j ${pqLutCaseDuck} END AS dot_i
         FROM (SELECT a_id, $luts, unnest([0,1,2,3,4,5,6,7]) AS j FROM anchors, qfull) x),
       adc AS (
         SELECT cl.vec_id AS vec_id, CAST(SUM(lut.dot_i) AS BIGINT) AS adc
@@ -816,63 +810,85 @@ object Ann {
     * TrainingSpec keeps pinning the Lloyd descent on THIS frame at
     * the full decimal grid. */
   private[graft] def qKmeansConvergeFull(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables(spark, dir, "embeddings")
-    val dq = round(col("v").cast("double"), 6).cast("decimal(8,6)")
-    // r16 optimization: the (8,6) quantized grid is exact in BIGINT
-    // micro-units (qm = qv·10⁶, both exact), and every pipeline stage
-    // only ever consumes the micro value — the distance sum, the seed
-    // centroids, and the positive-shifted floor-division refresh
-    // (SUM(qv)·10⁶ ≡ SUM(qm) exactly). Carrying qm/cm as primitive
-    // longs removes ALL per-row Decimal allocation from the hot
-    // 512k-row distance stream (the measured cost center: ~600 ms
-    // aggTime per round at sf0.1), leaving one exact decimal rescale
-    // per (vec, seed): d2 = s·10⁻¹² via the (15,0)×(12,12)→(28,12)
-    // multiply — overflow-safe at ANY corpus size because the bound is
-    // per-PAIR: 64 dims × (2·10⁶)² = 2.56·10¹⁴ ≪ 2⁶³. Values are
-    // bit-identical to the previous all-decimal formulation (re-proven
-    // against the DuckDB oracle at sf0.01 AND sf0.1 at full
-    // decimal(30,12) text precision, pinned by TrainingSpec).
-    // materialized once like [[qKmeansProbe]]'s pe (the q_rfm chained-leg
-    // convention): the two distance legs and the two refresh legs would
-    // otherwise each re-run the explode + quantize chain (NodeProf:
-    // ~450 ms aggTime per leg at sf0.1, vs ~70 ms reading the memo);
-    // the checkpointed frame is three longs per component.
-    val pe = e.select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "v")))
-      .select(col("vec_id"), col("i"), dq.as("qv"))
-      .select(col("vec_id"), col("i"),
-        expr("CAST(qv * 1000000 AS BIGINT)").as("qm"))
-      .localCheckpoint(true)
-    var cent = pe.filter(col("vec_id") < 4)
-      .select(col("vec_id").cast("int").as("seed_id"), col("i"), col("qm").as("cm"))
-    val rounds = (1 to 2).map { it =>
-      val dist = pe.join(broadcast(cent), "i")
-        .groupBy("vec_id", "seed_id")
-        .agg(sum((col("qm") - col("cm")) * (col("qm") - col("cm"))).as("s"))
-      // packed-long argmin (the q_pq_train_step convention):
-      // min(struct(d2, seed_id)) plans SortAggregate (struct buffers
-      // are immutable) — but s ≤ 2.56·10¹⁴ and seed_id < 4, so
-      // min(s·4 + seed_id) is the same lexicographic argmin as a pure
-      // long min (d2 = s·10⁻¹² is strictly monotone in s), and the
-      // whole assignment stays hash-aggregated. d2 is restored by the
-      // exact (15,0)×(12,12) rescale once per vector.
-      val assign = dist.groupBy("vec_id")
-        .agg(min(col("s") * 4 + col("seed_id")).as("packed"))
-        .select(col("vec_id"),
-          expr("CAST(pmod(packed, 4) AS INT)").as("seed_id"),
-          expr("""CAST(CAST(packed div 4 AS DECIMAL(15,0))
-                       * CAST(0.000000000001 AS DECIMAL(12,12)) AS DECIMAL(27,12))""").as("d2"))
+    lloydRounds(Tables(spark, dir, "embeddings")) { (pe, assign, it) =>
       val stats = assign.groupBy("seed_id")
         .agg(count(lit(1)).as("n_assigned"),
           sum(col("d2")).cast("decimal(30,12)").as("inertia"))
         .withColumn("iteration", lit(it))
         .select("iteration", "seed_id", "n_assigned", "inertia")
-      cent = pe.join(assign.select("vec_id", "seed_id"), "vec_id")
+      val cent = pe.join(assign.select("vec_id", "seed_id"), "vec_id")
         .groupBy("seed_id", "i")
         .agg(expr(
           """(2 * SUM(qm) + 4000001 * COUNT(*)) div (2 * COUNT(*)) - 2000000""").as("cm"))
+      (stats, cent)
+    }.reduce(_.unionAll(_))
+  }
+
+  /** e27's two Lloyd rounds over [[microDims]] of `e`, seeded by
+    * [[microSeeds]]: each round assigns every vector ([[microAssign]])
+    * and `round(pe, assign, iteration)` returns that round's stats and
+    * the refreshed (seed_id, i, cm) centroids. */
+  private def lloydRounds(e: DataFrame)(
+      round: (DataFrame, DataFrame, Int) => (DataFrame, DataFrame)): Seq[DataFrame] = {
+    val pe = microDims(e)
+    var cent = microSeeds(pe)
+    (1 to 2).map { it =>
+      val (stats, next) = round(pe, microAssign(pe, cent), it)
+      cent = next
       stats
     }
-    rounds.reduce(_.unionAll(_))
+  }
+
+  /** The integer-micro Lloyd input shared by e27 and its probe twin
+    * (r16 optimization): the (8,6) quantized grid is exact in BIGINT
+    * micro-units (qm = qv·10⁶, both exact), and every pipeline stage
+    * only ever consumes the micro value — the distance sum, the seed
+    * centroids, and the positive-shifted floor-division refresh
+    * (SUM(qv)·10⁶ ≡ SUM(qm) exactly). Carrying qm/cm as primitive
+    * longs removes ALL per-row Decimal allocation from the hot
+    * 512k-row distance stream (the measured cost center: ~600 ms
+    * aggTime per round at sf0.1). Values are bit-identical to the
+    * previous all-decimal formulation (re-proven against the DuckDB
+    * oracle at sf0.01 AND sf0.1 at full decimal(30,12) text
+    * precision, pinned by TrainingSpec). Materialized once (the q_rfm
+    * chained-leg convention): the distance and refresh legs would
+    * otherwise each re-run the explode + quantize chain (NodeProf:
+    * ~450 ms aggTime per leg at sf0.1, vs ~70 ms reading the memo);
+    * the checkpointed frame is three longs per component. */
+  private def microDims(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "v")))
+      .select(col("vec_id"), col("i"), round(col("v").cast("double"), 6).cast("decimal(8,6)").as("qv"))
+      .select(col("vec_id"), col("i"),
+        expr("CAST(qv * 1000000 AS BIGINT)").as("qm"))
+      .localCheckpoint(true)
+
+  /** The deterministic init: vectors 0..3 are the seed centroids. */
+  private def microSeeds(pe: DataFrame): DataFrame =
+    pe.filter(col("vec_id") < 4)
+      .select(col("vec_id").cast("int").as("seed_id"), col("i"), col("qm").as("cm"))
+
+  /** One Lloyd assignment over [[microDims]]: each vector's nearest
+    * centroid (vec_id, seed_id, d2). One exact decimal rescale per
+    * (vec, seed): d2 = s·10⁻¹² via the (15,0)×(12,12)→(28,12)
+    * multiply — overflow-safe at ANY corpus size because the bound is
+    * per-PAIR: 64 dims × (2·10⁶)² = 2.56·10¹⁴ ≪ 2⁶³. */
+  private def microAssign(pe: DataFrame, cent: DataFrame): DataFrame = {
+    val dist = pe.join(broadcast(cent), "i")
+      .groupBy("vec_id", "seed_id")
+      .agg(sum((col("qm") - col("cm")) * (col("qm") - col("cm"))).as("s"))
+    // packed-long argmin (the q_pq_train_step convention):
+    // min(struct(d2, seed_id)) plans SortAggregate (struct buffers
+    // are immutable) — but s ≤ 2.56·10¹⁴ and seed_id < 4, so
+    // min(s·4 + seed_id) is the same lexicographic argmin as a pure
+    // long min (d2 = s·10⁻¹² is strictly monotone in s), and the
+    // whole assignment stays hash-aggregated. d2 is restored by the
+    // exact (15,0)×(12,12) rescale once per vector.
+    dist.groupBy("vec_id")
+      .agg(min(col("s") * 4 + col("seed_id")).as("packed"))
+      .select(col("vec_id"),
+        expr("CAST(pmod(packed, 4) AS INT)").as("seed_id"),
+        expr("""CAST(CAST(packed div 4 AS DECIMAL(15,0))
+                     * CAST(0.000000000001 AS DECIMAL(12,12)) AS DECIMAL(27,12))""").as("d2"))
   }
 
   /** e27's SHIPPED shape (r16 restatement): inertia presented in
@@ -966,37 +982,12 @@ object Ann {
     * generate_series is 1-based, so the weight is `vec_id·64 + i + 1`
     * here and `vec_id·64 + i` there — the same weight per component. */
   def qKmeansProbe(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables(spark, dir, "embeddings")
-    val dq = round(col("v").cast("double"), 6).cast("decimal(8,6)")
     // the probe's extra fingerprint legs read the quantized explode
     // SEVEN times per round — the chained-leg convention applies
-    // (q_rfm precedent): materialize it once, every leg reads the
-    // memo, final plan reads embeddings ZERO times
-    val pe = e.select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "v")))
-      .select(col("vec_id"), col("i"), dq.as("qv"))
-      .select(col("vec_id"), col("i"),
-        expr("CAST(qv * 1000000 AS BIGINT)").as("qm"))
-      .localCheckpoint(true)
-    var cent = pe.filter(col("vec_id") < 4)
-      .select(col("vec_id").cast("int").as("seed_id"), col("i"), col("qm").as("cm"))
-    val rounds = (1 to 2).map { it =>
-      // integer-micro pipeline — see [[qKmeansConvergeFull]] (r16: the
-      // checkpointed explode carries qm = qv·10⁶ as a primitive long,
-      // so the distance sum, the refresh (SUM(qv)·10⁶ ≡ SUM(qm)) and
-      // the wsum fingerprint all run as long codegen arithmetic with
-      // zero per-row Decimal allocation; one exact (15,0)×(12,12)
-      // rescale per (vec, seed) restores the DECIMAL(27,12) d2 grid.
-      // Values unchanged — bit-identical at both scales vs the oracle.)
-      val dist = pe.join(broadcast(cent), "i")
-        .groupBy("vec_id", "seed_id")
-        .agg(sum((col("qm") - col("cm")) * (col("qm") - col("cm"))).as("s"))
-      // packed-long argmin — see [[qKmeansConvergeFull]]
-      val assign = dist.groupBy("vec_id")
-        .agg(min(col("s") * 4 + col("seed_id")).as("packed"))
-        .select(col("vec_id"),
-          expr("CAST(pmod(packed, 4) AS INT)").as("seed_id"),
-          expr("""CAST(CAST(packed div 4 AS DECIMAL(15,0))
-                       * CAST(0.000000000001 AS DECIMAL(12,12)) AS DECIMAL(27,12))""").as("d2"))
+    // (q_rfm precedent): every leg reads the memo, final plan reads
+    // embeddings ZERO times; the wsum fingerprint runs as long codegen
+    // arithmetic on the same micro units
+    lloydRounds(Tables(spark, dir, "embeddings")) { (pe, assign, it) =>
       val stats = assign.groupBy("seed_id")
         .agg(count(lit(1)).as("n_assigned"),
           sum(col("vec_id") * 4 + col("seed_id")).as("assign_ck"),
@@ -1010,15 +1001,14 @@ object Ann {
           count(lit(1)).as("n"))
         .withColumn("cm_micro",
           expr("(2 * s_micro + 4000001 * n) div (2 * n) - 2000000"))
-      cent = rec.select(col("seed_id"), col("i"), col("cm_micro").as("cm"))
       val per = rec.groupBy("seed_id")
         .agg(sum("wsum").as("qv_wsum"), sum("cm_micro").as("cent_micro_sum"))
-      stats.join(per, "seed_id")
+      (stats.join(per, "seed_id")
         .withColumn("iteration", lit(it))
         .select("iteration", "seed_id", "n_assigned", "assign_ck",
-          "qv_wsum", "cent_micro_sum", "inertia_micro")
-    }
-    rounds.reduce(_.unionAll(_)).orderBy("iteration", "seed_id")
+          "qv_wsum", "cent_micro_sum", "inertia_micro"),
+        rec.select(col("seed_id"), col("i"), col("cm_micro").as("cm")))
+    }.reduce(_.unionAll(_)).orderBy("iteration", "seed_id")
   }
 
   val qKmeansProbeSql: String =
@@ -1411,22 +1401,14 @@ object Ann {
     // exact-decimal centroid numerators (e3's math) + per-cell radius
     val pe = e.select(col("vec_id"), col("label"),
       posexplode(col("embedding")).as(Seq("i", "v")))
-    val cent = pe.groupBy("label", "i")
-      .agg(sum(round(col("v").cast("double"), 6).cast("decimal(8,6)"))
-        .cast("decimal(12,6)").as("s"), count(lit(1)).as("n"))
+    val cent = ivfCentroids(pe)
       .withColumn("m", (col("s") / col("n")).cast("double"))
     val radius = pe.join(broadcast(cent.select("label", "i", "m")), Seq("label", "i"))
       .groupBy("vec_id", "label")
       .agg(sum((col("v").cast("double") - col("m")) *
         (col("v").cast("double") - col("m"))).as("d2"))
       .groupBy("label").agg(sqrt(max(col("d2"))).as("r"))
-    val qe = e.filter(col("vec_id") === 0)
-      .select(posexplode(col("embedding")).as(Seq("i", "qv")))
-    val dots = cent.join(broadcast(qe), "i")
-      .groupBy("label")
-      .agg((sum(round(col("qv").cast("double"), 6).cast("decimal(8,6)") * col("s"))
-        .cast("double") / max(col("n"))).as("dot"))
-    dots.join(radius, "label")
+    ivfDots(cent, queryDims(e)).join(radius, "label")
       .filter(col("dot") + col("r") + lit(1e-5) >= tau)
       .select("label")
   }
@@ -1752,18 +1734,8 @@ object Ann {
     * batch eval and not an online check (e10's argument). */
   def qAnnNprobeSweep(spark: SparkSession, dir: String): DataFrame = {
     val e = Tables(spark, dir, "embeddings")
-    val pe = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "v")))
-    val cent = pe.groupBy("label", "i")
-      .agg(sum(round(col("v").cast("double"), 6).cast("decimal(8,6)"))
-        .cast("decimal(12,6)").as("s"), count(lit(1)).as("n"))
-    val qe = e.filter(col("vec_id") === 0)
-      .select(posexplode(col("embedding")).as(Seq("i", "qv")))
-    val dots = cent.join(broadcast(qe), "i")
-      .groupBy("label")
-      .agg((sum(round(col("qv").cast("double"), 6).cast("decimal(8,6)") * col("s"))
-        .cast("double") / max(col("n"))).as("dot"))
     // cells are index-bounded (10 here): the rank window is a dim op
-    val cellRank = dots.withColumn("cell_rank",
+    val cellRank = ivfQueryDots(e).withColumn("cell_rank",
       row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy(col("dot").desc, col("label"))))
       .select(col("label"), col("cell_rank")).filter(col("cell_rank") <= 8)

@@ -62,14 +62,8 @@ object Asof {
     * dedup the c21 plan pays a shuffle + hash-agg for is folded into
     * the zipper's sort via the tiebreak ordering. */
   def qAsofNative(spark: SparkSession, dir: String): DataFrame = {
-    val e = Tables.events(spark, dir)
-    val o = Tables(spark, dir, "orders")
-    val ev = e.filter(col("event_type") === "purchase")
-      .select((col("user_id") + 1).as("k"),
-        expr("unix_millis(ts) div 86400000").as("t"), col("event_id"))
-    val od = o.select(col("o_custkey").as("rk"),
-        unix_date(to_date(col("o_orderdate"))).cast("long").as("rt"),
-        col("o_orderkey"), col("o_totalprice"))
+    val ev = Analytics.asofEvents(spark, dir)
+    val od = Analytics.asofOrders(spark, dir, "rk", "rt")
     asofJoin(ev, od, "k", "rk", "t", "rt",
         rightTiebreak = Seq("o_orderkey", "o_totalprice"))
       .select(col("event_id"), col("k"), col("t").as("event_day"),
@@ -97,15 +91,8 @@ object Asof {
     * Semantics and oracle are exactly c21's. */
   def qAsofSaltedNative(spark: SparkSession, dir: String): DataFrame = {
     val bucketDays = 16L
-    val e = Tables.events(spark, dir)
-    val o = Tables(spark, dir, "orders")
-    val ev = e.filter(col("event_type") === "purchase")
-      .select((col("user_id") + 1).as("k"),
-        expr("unix_millis(ts) div 86400000").as("t"), col("event_id"))
-      .withColumn("kb", expr(s"t div $bucketDays"))
-    val od = o.select(col("o_custkey").as("rk"),
-        unix_date(to_date(col("o_orderdate"))).cast("long").as("rt"),
-        col("o_orderkey"), col("o_totalprice"))
+    val ev = Analytics.asofEvents(spark, dir).withColumn("kb", expr(s"t div $bucketDays"))
+    val od = Analytics.asofOrders(spark, dir, "rk", "rt")
       .withColumn("rb", expr(s"rt div $bucketDays"))
     // latest order per active (key, bucket) — the ONLY data the
     // cross-bucket pass touches. max(struct(rt, tiebreak...)) picks

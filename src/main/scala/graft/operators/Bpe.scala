@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Oracle, Query, Tables}
 
@@ -116,6 +116,29 @@ object Bpe {
     rules.toSeq
   }
 
+  /** Train → encode: the checkpointed vocabulary (w, f) and the
+    * expression encoding its word `w` with the 8 rules [[trainBpeFrom]]
+    * learns on it, as literal string replaces over the wrapped-token
+    * form (see f41). Shared by f41, f42 and f45. */
+  private def bpeEncoding(spark: SparkSession, dir: String): (DataFrame, Column) = {
+    val wf = wordFreq(spark, dir).localCheckpoint()
+    val rules = trainBpeFrom(wf, 8)
+    val esc = (s: String) => s.replace("\\", "\\\\").replace("'", "\\'")
+    val encExpr = rules.foldLeft("regexp_replace(w, '(.)', '<$1>')") {
+      case (e, (a, b)) =>
+        s"replace($e, '<${esc(a)}><${esc(b)}>', '<${esc(a + b)}>')"
+    }
+    (wf, expr(encExpr))
+  }
+
+  /** The vocabulary's BPE token count per word (w, w_tokens). */
+  private def vocabTokens(spark: SparkSession, dir: String): DataFrame = {
+    val (wf, enc) = bpeEncoding(spark, dir)
+    wf.select(col("w"), enc.as("enc"))
+      .select(col("w"),
+        expr("CAST(length(enc) - length(replace(enc, '<', '')) AS BIGINT)").as("w_tokens"))
+  }
+
   /** f41 — `q_bpe_encode`: the APPLY half of the tokenizer (f24/
     * trainBpe learn the merges; every training-data pipeline then
     * ENCODES the corpus with them — the token counts fed to f16's
@@ -136,14 +159,8 @@ object Bpe {
     * independent training, so the driver check gates the whole
     * train→encode loop, not just the apply. */
   def qBpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val wf = wordFreq(spark, dir).localCheckpoint()
-    val rules = trainBpeFrom(wf, 8)
-    val esc = (s: String) => s.replace("\\", "\\\\").replace("'", "\\'")
-    val encExpr = rules.foldLeft("regexp_replace(w, '(.)', '<$1>')") {
-      case (e, (a, b)) =>
-        s"replace($e, '<${esc(a)}><${esc(b)}>', '<${esc(a + b)}>')"
-    }
-    wf.select(col("w"), col("f"), expr(encExpr).as("encoded"))
+    val (wf, enc) = bpeEncoding(spark, dir)
+    wf.select(col("w"), col("f"), enc.as("encoded"))
       .withColumn("n_tokens",
         expr("CAST(length(encoded) - length(replace(encoded, '<', '')) AS BIGINT)"))
       .withColumn("n_chars", length(col("w")).cast("long"))
@@ -200,17 +217,7 @@ object Bpe {
     * than 2 chars are untokenized passthroughs (1 token each),
     * mirroring wordFreq's training filter. */
   def qTokenizeCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val wf = wordFreq(spark, dir).localCheckpoint()
-    val rules = trainBpeFrom(wf, 8)
-    val esc = (s: String) => s.replace("\\", "\\\\").replace("'", "\\'")
-    val encExpr = rules.foldLeft("regexp_replace(w, '(.)', '<$1>')") {
-      case (e, (a, b)) =>
-        s"replace($e, '<${esc(a)}><${esc(b)}>', '<${esc(a + b)}>')"
-    }
-    val vocab = wf
-      .select(col("w"), expr(encExpr).as("enc"))
-      .select(col("w"),
-        expr("CAST(length(enc) - length(replace(enc, '<', '')) AS BIGINT)").as("w_tokens"))
+    val vocab = vocabTokens(spark, dir)
     val words = Tables(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
     words.join(broadcast(vocab), Seq("w"), "left")
@@ -236,17 +243,7 @@ object Bpe {
     * f42 (train once, ONE corpus explode, broadcast vocab join) with a
     * language-bounded final agg instead of the per-doc one. */
   def qTokenizerFertility(spark: SparkSession, dir: String): DataFrame = {
-    val wf = wordFreq(spark, dir).localCheckpoint()
-    val rules = trainBpeFrom(wf, 8)
-    val esc = (s: String) => s.replace("\\", "\\\\").replace("'", "\\'")
-    val encExpr = rules.foldLeft("regexp_replace(w, '(.)', '<$1>')") {
-      case (e, (a, b)) =>
-        s"replace($e, '<${esc(a)}><${esc(b)}>', '<${esc(a + b)}>')"
-    }
-    val vocab = wf
-      .select(col("w"), expr(encExpr).as("enc"))
-      .select(col("w"),
-        expr("CAST(length(enc) - length(replace(enc, '<', '')) AS BIGINT)").as("w_tokens"))
+    val vocab = vocabTokens(spark, dir)
     val words = Tables(spark, dir, "documents")
       .select(col("lang"), explode(split(col("text"), " ")).as("w"))
     words.join(broadcast(vocab), Seq("w"), "left")

@@ -261,12 +261,23 @@ object Dedup {
     // signature table computed once (64 md5-parity sums per doc), then
     // self-joined — see qDedupMinhash for why this is materialized
     val sig = simhash64(spark, dir).localCheckpoint(false)
-    val blocks = sig.withColumn("idx", explode(sequence(lit(0), lit(3))))
-      .withColumn("chunk",
-        element_at(array(col("c0"), col("c1"), col("c2"), col("c3")), col("idx") + 1))
     // filter on hamming BEFORE the pair-dedup: bit_count is a cheap
     // codegen'd op, and it shrinks the distinct's shuffle from every
     // blocked pair down to only the near-duplicates
+    hammingPairs(sig).distinct().orderBy("doc_a", "doc_b")
+  }
+
+  /** The pigeonhole block join over 4 16-bit chunks (d3c, g8, g11):
+    * the (doc_a < doc_b, hamming) pairs of a (doc_id, c0..c3) frame
+    * within Hamming distance 3. Such a pair agrees exactly on at least
+    * one chunk, so blocking on (chunk_idx, chunk_value) finds ALL of
+    * them with one shuffle; a pair agreeing on several chunks appears
+    * once per chunk, and the caller dedups or aggregates. */
+  private[graft] def hammingPairs(sig: DataFrame): DataFrame = {
+    val blocks = sig.withColumn("idx", explode(sequence(lit(0), lit(3))))
+      .withColumn("chunk",
+        element_at(array(col("c0"), col("c1"), col("c2"), col("c3")), col("idx") + 1))
+      .select("doc_id", "idx", "chunk", "c0", "c1", "c2", "c3")
     blocks.as("x").join(blocks.as("y"),
         col("x.idx") === col("y.idx") && col("x.chunk") === col("y.chunk") &&
           col("x.doc_id") < col("y.doc_id"))
@@ -274,8 +285,6 @@ object Dedup {
         expr("bit_count(x.c0 ^ y.c0) + bit_count(x.c1 ^ y.c1) + " +
           "bit_count(x.c2 ^ y.c2) + bit_count(x.c3 ^ y.c3)").cast("int").as("hamming"))
       .filter(col("hamming") <= 3)
-      .distinct()
-      .orderBy("doc_a", "doc_b")
   }
 
   /** DuckDB twin of [[simhash64]]: doc_id, c0..c3. */
@@ -609,10 +618,11 @@ object Dedup {
     * one partial-agg shuffle; localCheckpoint breaks the growing
     * lineage exactly as an iterative production job would persist
     * between rounds). Driver-side logic is loop CONTROL only (a
-    * per-round convergence count), never data. Oracle: DuckDB
+    * per-round convergence count), never data; the loop is
+    * [[propagate]], the one kernel d19 runs too. Oracle: DuckDB
     * recursive CTE reaching the same fixpoint. */
   def qDedupCc(spark: SparkSession, dir: String): DataFrame =
-    ccOver(minhashPairs(shingleSets(spark, dir)))._1
+    ccOver(minhashPairs(shingleSets(spark, dir)))
       .groupBy(col("label").as("component"))
       .agg(count(lit(1)).as("n_docs"), max("id").as("max_doc"))
       .orderBy("component")
@@ -622,7 +632,7 @@ object Dedup {
     * LogicalRDD carries HashPartitioning(dst) and every round's message
     * join reuses it instead of re-shuffling the (at scale, huge) edge
     * table — only the tiny label side moves. Shared by d6 and d19. */
-  private def symmetricEdges(pairs: DataFrame): DataFrame =
+  private[graft] def symmetricEdges(pairs: DataFrame): DataFrame =
     pairs.select("doc_a", "doc_b")
       .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .toDF("src", "dst")
@@ -630,36 +640,50 @@ object Dedup {
       .localCheckpoint(false)
 
   /** d6's min-label propagation over a (doc_a, doc_b) pair frame —
-    * returns (per-doc labels, rounds run); only docs appearing in at
-    * least one pair are labelled. Shared by the cold pass (d6 and its
-    * consumers) and the standing-side seed of the incremental pass
-    * (d19). */
-  private[graft] def ccOver(pairs: DataFrame): (DataFrame, Int) = {
+    * the per-doc labels; only docs appearing in at least one pair are
+    * labelled. Shared by the cold pass (d6 and its consumers) and the
+    * standing-side seed of the incremental pass (d19). The seed fuses
+    * round 1 into one agg: label0(id) = min(id, min neighbor).
+    * groupBy(dst) matches the edge partitioning — map-side only, no
+    * exchange. Every node appears as a dst (symmetry). The seed is
+    * also the first frontier, so every node messages in round one. */
+  private[graft] def ccOver(pairs: DataFrame): DataFrame = {
     val edges = symmetricEdges(pairs)
-    // seed = round 1 fused into one agg: label0(id) = min(id, min
-    // neighbor). groupBy(dst) matches the edge partitioning — map-side
-    // only, no exchange. Every node appears as a dst (symmetry).
-    var labels = edges
+    val seed = edges
       .groupBy(col("dst"))
       .agg(least(col("dst"), min(col("src"))).as("label"))
       .select(col("dst").as("id"), col("label"))
       .localCheckpoint(false)
-    // safety valve, not a truncation: min-label propagation needs
-    // O(component diameter) rounds, and silently stopping early would
+    propagate(edges, seed, seed)._1
+  }
+
+  /** The one min-label propagation loop behind d6 and d19. Each round,
+    * only `frontier` (id, label) nodes message their neighbours (the
+    * edges side is exchange-free on its dst partitioning); a node's
+    * own label rides the union tagged own=true, so one agg yields both
+    * the new `label` and `prev`, and the nodes with label < prev are
+    * the next frontier — counted on the checkpointed result, no extra
+    * join. From any labels that are component members' ids and a
+    * frontier holding one endpoint of every edge whose endpoints
+    * disagree (the lower-labelled one), it reaches the same fixpoint
+    * as a cold start — every node labelled by its component's
+    * minimum — in O(component diameter) rounds. Runs at least one
+    * round; returns (labels, rounds, Σ frontier sizes it produced). */
+  private[graft] def propagate(edges: DataFrame, labels0: DataFrame,
+      frontier0: DataFrame): (DataFrame, Int, Long) = {
+    // safety valve, not a truncation: silently stopping early would
     // split a >cap-diameter component into wrong clusters — if the cap
     // is ever hit we fail LOUDLY (and the cap is far above any
     // near-dup chain the pair graph realistically produces)
     val maxRounds = 50
+    var labels = labels0
+    var frontier = frontier0
     var changed = 1L
+    var moved = 0L
     var rounds = 0
     while (changed > 0 && rounds < maxRounds) {
-      // one round = one join (edges side exchange-free) + one groupBy:
-      // next(id) = min(own label, neighbor labels). The own label rides
-      // the union tagged own=true, so the agg also yields prev and the
-      // convergence check needs no extra join — just a count on the
-      // checkpointed result.
       val msgs = edges
-        .join(labels.select(col("id").as("dst"), col("label")), "dst")
+        .join(frontier.select(col("id").as("dst"), col("label")), "dst")
         .select(col("src").as("id"), col("label"), lit(false).as("own"))
       val next = msgs
         .union(labels.select(col("id"), col("label"), lit(true).as("own")))
@@ -667,7 +691,9 @@ object Dedup {
         .agg(min("label").as("label"),
           max(when(col("own"), col("label"))).as("prev"))
         .localCheckpoint(false)
-      changed = next.filter(col("label") < col("prev")).count()
+      frontier = next.filter(col("label") < col("prev")).select("id", "label")
+      changed = frontier.count()
+      moved += changed
       labels = next.select("id", "label")
       rounds += 1
     }
@@ -675,7 +701,7 @@ object Dedup {
       throw new IllegalStateException(
         s"CC min-label propagation did not converge in $maxRounds rounds " +
           s"($changed labels still changing) — component diameter exceeds the cap")
-    (labels, rounds)
+    (labels, rounds, moved)
   }
 
   /** d19 core — INCREMENTAL connected components with FRONTIER
@@ -684,14 +710,13 @@ object Dedup {
     * the whole history). Seeds: the standing subgraph's converged
     * labels (batch-free pairs), own-id for everything else. The
     * frontier starts as the endpoints of NEW (batch-incident) edges
-    * only, and each round ONLY nodes whose label just improved send
-    * messages — so per-round message volume is O(affected subgraph)
-    * (the components the batch actually touches or merges), not
-    * O(all edges) like the cold pass. Min-label propagation from any
-    * node-wise upper bound converges to the same fixpoint as the cold
-    * start, so the result is IDENTICAL to d6 on the full graph —
-    * which is why d19 shares d6's oracle. Returns (labels, rounds,
-    * total frontier size across rounds — the measured "affected"
+    * only, and [[propagate]] then messages only from nodes whose label
+    * just improved — so per-round message volume is O(affected
+    * subgraph) (the components the batch actually touches or merges),
+    * not O(all edges) like the cold pass' first round. Same loop,
+    * same fixpoint as d6 on the full graph — which is why d19 shares
+    * d6's oracle. Returns (labels, rounds, total frontier size across
+    * rounds, the initial frontier included — the measured "affected"
     * volume). */
   private[graft] def incrLabels(spark: SparkSession, dir: String)
       : (DataFrame, Int, Long) = {
@@ -700,49 +725,19 @@ object Dedup {
     val standingPairs = pairs.filter(!isBatch(col("doc_a")) && !isBatch(col("doc_b")))
     val newPairs = pairs.filter(isBatch(col("doc_a")) || isBatch(col("doc_b")))
       .localCheckpoint(false)
-    val standing = ccOver(standingPairs)._1 // yesterday's converged labels
+    val standing = ccOver(standingPairs) // yesterday's converged labels
     val edges = symmetricEdges(pairs)
-    var labels = edges.select(col("dst").as("id")).distinct()
+    val seed = edges.select(col("dst").as("id")).distinct()
       .join(standing.select(col("id"), col("label").as("seed")), Seq("id"), "left")
       .select(col("id"), coalesce(col("seed"), col("id")).as("label"))
-      .repartition(col("id"))
       .localCheckpoint(false)
-    var frontier = newPairs.select(col("doc_a").as("id"))
+    val frontier = newPairs.select(col("doc_a").as("id"))
       .union(newPairs.select(col("doc_b").as("id")))
       .distinct()
-      .join(labels, "id")
+      .join(seed, "id")
       .localCheckpoint(false)
-    val maxRounds = 50
-    var rounds = 0
-    var cur = frontier.count()
-    var totalFrontier = cur
-    while (cur > 0 && rounds < maxRounds) {
-      // one round: ONLY frontier nodes message their neighbors (edges
-      // side exchange-free on the pre-partitioned dst), improvements
-      // fold into the label table, the improved nodes BECOME the next
-      // frontier
-      val msgs = edges
-        .join(frontier.select(col("id").as("dst"), col("label")), "dst")
-        .select(col("src").as("id"), col("label"))
-      val upd = msgs.groupBy("id").agg(min("label").as("cand"))
-      val next = labels.join(upd, Seq("id"), "left").localCheckpoint(false)
-      frontier = next.filter(col("cand") < col("label"))
-        .select(col("id"), col("cand").as("label"))
-        .localCheckpoint(false)
-      labels = next
-        .select(col("id"),
-          when(col("cand") < col("label"), col("cand"))
-            .otherwise(col("label")).as("label"))
-        .repartition(col("id"))
-        .localCheckpoint(false)
-      cur = frontier.count()
-      totalFrontier += cur
-      rounds += 1
-    }
-    if (cur > 0)
-      throw new IllegalStateException(
-        s"incremental CC did not converge in $maxRounds rounds")
-    (labels, rounds, totalFrontier)
+    val (labels, rounds, moved) = propagate(edges, seed, frontier)
+    (labels, rounds, frontier.count() + moved)
   }
 
   /** d19 — q_dedup_cc_incr: d6's component table produced INCREMENTALLY
@@ -782,7 +777,7 @@ object Dedup {
   def qDedupKeepBest(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val d = Tables(spark, dir, "documents").select(col("doc_id"))
-    val labels = ccOver(minhashPairs(shingleSets(spark, dir)))._1
+    val labels = ccOver(minhashPairs(shingleSets(spark, dir)))
       .select(col("id").as("doc_id"), col("label"))
     val scores = TextOps.qQualityScore(spark, dir).select(col("doc_id"), col("score"))
     val comp = d.join(labels, Seq("doc_id"), "left")
@@ -844,14 +839,29 @@ object Dedup {
         col("n.b") === col("i.b") && col("n.bkey") === col("i.bkey"))
       .select(col("n.doc_id").as("doc_id"), col("i.doc_id").as("idx_id"))
       .distinct()
-    val near = cand
-      .join(sh.select(col("doc_id"), col("sh").as("sh_n")), "doc_id")
-      .join(sh.select(col("doc_id").as("idx_id"), col("sh").as("sh_i")), "idx_id")
+    screenVerdict(d.select(col("doc_id")).filter(isNew), exact, nearMatches(cand, sh, sh))
+  }
+
+  /** d8's near screen: the (doc_id, idx_id) candidates whose shingle
+    * sets — `batchSh` for the doc, `indexSh` for the index side, both
+    * (doc_id, sh) — reach Jaccard ≥ 0.2, as (doc_id, m_near) with the
+    * lowest matching index id. Shared with the served screen (e16). */
+  private[graft] def nearMatches(cand: DataFrame, batchSh: DataFrame,
+      indexSh: DataFrame): DataFrame =
+    cand
+      .join(batchSh.select(col("doc_id"), col("sh").as("sh_n")), "doc_id")
+      .join(indexSh.select(col("doc_id").as("idx_id"), col("sh").as("sh_i")), "idx_id")
       .withColumn("inter", expr("size(filter(sh_n, x -> array_contains(sh_i, x)))"))
       .filter(col("inter").cast("double") /
         (size(col("sh_n")) + size(col("sh_i")) - col("inter")) >= 0.2)
       .groupBy("doc_id").agg(min("idx_id").as("m_near"))
-    d.select(col("doc_id")).filter(isNew)
+
+  /** d8's per-doc verdict over the batch (doc_id) frame: an exact
+    * (doc_id, m_exact) match drops first, then a near (doc_id, m_near)
+    * one, else keep. */
+  private[graft] def screenVerdict(batch: DataFrame, exact: DataFrame,
+      near: DataFrame): DataFrame =
+    batch
       .join(exact, Seq("doc_id"), "left")
       .join(near, Seq("doc_id"), "left")
       .select(col("doc_id"),
@@ -860,7 +870,6 @@ object Dedup {
           .otherwise("keep").as("verdict"),
         coalesce(col("m_exact"), col("m_near")).as("match_id"))
       .orderBy("doc_id")
-  }
 
   val qDedupIncrementalSql: String =
     s"""WITH keys AS (SELECT doc_id, md5($normDuck) AS ck FROM documents),
@@ -1255,7 +1264,7 @@ object Dedup {
       .select(col("doc_id"), lit("exact_dup").as("verdict"), col("ek").as("dup_of"),
         lit(null).cast("long").as("n_tokens"), lit(null).cast("long").as("n_removed"))
     val keepers1 = s1.filter(col("doc_id") === col("ek")).select("doc_id", "text")
-    val labels = ccOver(minhashPairs(shingleSets(spark, dir)))._1
+    val labels = ccOver(minhashPairs(shingleSets(spark, dir)))
       .select(col("id").as("doc_id"), col("label"))
     val scores = TextOps.qQualityScore(spark, dir).select(col("doc_id"), col("score"))
     val w = Window.partitionBy("component").orderBy(col("score").desc, col("doc_id"))
@@ -1668,7 +1677,7 @@ object Dedup {
     * dedup it describes. */
   def qDedupReport(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables(spark, dir, "documents").select(col("doc_id"), col("n_chars"))
-    val labels = ccOver(minhashPairs(shingleSets(spark, dir)))._1
+    val labels = ccOver(minhashPairs(shingleSets(spark, dir)))
       .select(col("id").as("doc_id"), col("label"))
     val comp = d.join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),

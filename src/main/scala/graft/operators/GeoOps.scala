@@ -518,13 +518,9 @@ object GeoOps {
       FROM (${tiledSql(8)}) t ORDER BY event_id"""
   }
 
-  /** b19 — quadkey addressing: the Bing-scheme string key for a z=8
-    * tile (digit i from the MSB = 2·y_bit + x_bit) — the tile
-    * addressing PMTiles-ecosystem tooling uses for prefix queries: a
-    * quadkey PREFIX is exactly an ancestor tile, so string prefix
-    * ranges give pyramid subtree scans for free. Pure integer/concat
-    * column math. */
-  def qQuadkey(spark: SparkSession, dir: String): DataFrame = {
+  /** The z=8 tile stream (event_id, xt, yt) with its quadkey: digit i
+    * from the MSB = 2·y_bit + x_bit. */
+  private def quadkeyed(spark: SparkSession, dir: String): DataFrame = {
     val digits = (0 until 8).map { j =>
       val shift = 1 << (7 - j)
       expr(s"CAST(((yt div $shift) % 2) * 2 + ((xt div $shift) % 2) AS STRING)")
@@ -532,6 +528,16 @@ object GeoOps {
     tiled(spark, dir, 8)
       .select(col("event_id"), col("xt"), col("yt"))
       .withColumn("quadkey", concat(digits: _*))
+  }
+
+  /** b19 — quadkey addressing: the Bing-scheme string key for a z=8
+    * tile (digit i from the MSB = 2·y_bit + x_bit) — the tile
+    * addressing PMTiles-ecosystem tooling uses for prefix queries: a
+    * quadkey PREFIX is exactly an ancestor tile, so string prefix
+    * ranges give pyramid subtree scans for free. Pure integer/concat
+    * column math. */
+  def qQuadkey(spark: SparkSession, dir: String): DataFrame = {
+    quadkeyed(spark, dir)
       .orderBy("event_id")
   }
 
@@ -554,13 +560,7 @@ object GeoOps {
     * prunable). The aggregated answer per subtree is the b9 pyramid
     * relation computed a different way — only map work + one agg. */
   def qQuadkeySubtree(spark: SparkSession, dir: String): DataFrame = {
-    val digits = (0 until 8).map { j =>
-      val shift = 1 << (7 - j)
-      expr(s"CAST(((yt div $shift) % 2) * 2 + ((xt div $shift) % 2) AS STRING)")
-    }
-    tiled(spark, dir, 8)
-      .select(col("event_id"), col("xt"), col("yt"))
-      .withColumn("quadkey", concat(digits: _*))
+    quadkeyed(spark, dir)
       .withColumn("subtree", expr("substr(quadkey, 1, 3)"))
       .groupBy("subtree")
       .agg(count(lit(1)).as("n_features"),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{Oracle, Query, Tables}
@@ -40,6 +40,17 @@ object IngestOps {
         string_split(string_split(msg, ';')[3], '=')[2] = 'true' AS join_vector_tiles
       FROM m ORDER BY event_id"""
 
+  /** The processing route of a file extension (config.py:32-81's
+    * archive prefixes and raster formats, ingest.py:244-247): .pmtiles
+    * passes through, archives unpack, rasters become COGs, vectors
+    * become PMTiles, anything else is skipped. */
+  private def formatRoute(ext: Column): Column =
+    when(ext === ".pmtiles", "passthrough")
+      .when(ext.isin(".zip", ".gz", ".tar", ".tgz", ".7z"), "archive")
+      .when(ext.isin(".tif", ".tiff", ".gtif", ".gtiff", ".nc", ".nc4", ".aig", ".asc", ".sgr", ".grd"), "cog")
+      .when(ext.isin(".gpkg", ".geojson", ".gdb", ".fgb", ".shp", ".mbtiles"), "pmtiles")
+      .otherwise("skip")
+
   /** a2 — extension → processing route. ref config.py:32-81 (archive
     * driver prefixes, allowed raster formats), ingest.py:246
     * (.pmtiles passthrough), processing.py:619/682 (vector vs raster). */
@@ -47,11 +58,7 @@ object IngestOps {
     val e = Tables.events(spark, dir)
     val fname = Synth.fileName(col("event_id"))
     val ext = Synth.ext(col("event_id"))
-    val route = when(ext === ".pmtiles", "passthrough")
-      .when(ext.isin(".zip", ".gz", ".tar", ".tgz", ".7z"), "archive")
-      .when(ext.isin(".tif", ".tiff", ".gtif", ".gtiff", ".nc", ".nc4", ".aig", ".asc", ".sgr", ".grd"), "cog")
-      .when(ext.isin(".gpkg", ".geojson", ".gdb", ".fgb", ".shp", ".mbtiles"), "pmtiles")
-      .otherwise("skip")
+    val route = formatRoute(ext)
     val vsi = when(ext === ".zip", "/vsizip/").when(ext === ".gz", "/vsigzip/")
       .when(ext.isin(".tar", ".tgz"), "/vsitar/").when(ext === ".7z", "/vsi7z/")
       .otherwise("")
@@ -1310,11 +1317,7 @@ object IngestOps {
     val e = Tables.events(spark, dir)
     val fname = Synth.fileName(col("event_id"))
     val ext = Synth.ext(col("event_id"))
-    val route = when(ext === ".pmtiles", "passthrough")
-      .when(ext.isin(".zip", ".gz", ".tar", ".tgz", ".7z"), "archive")
-      .when(ext.isin(".tif", ".tiff", ".gtif", ".gtiff", ".nc", ".nc4", ".aig", ".asc", ".sgr", ".grd"), "cog")
-      .when(ext.isin(".gpkg", ".geojson", ".gdb", ".fgb", ".shp", ".mbtiles"), "pmtiles")
-      .otherwise("skip")
+    val route = formatRoute(ext)
     val plainSrc = concat(lit("/data/user"), col("user_id").cast("string"),
       lit("/raw/"), fname)
     val isSubds = ext === ".nc" // NETCDF:path:"name" planting class

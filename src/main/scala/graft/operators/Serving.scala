@@ -95,23 +95,14 @@ object Serving {
     * TRAINED `Ann.trainCentroids` assignment in the training-spec
     * composition (the cells a production build would use). */
   private[graft] def buildAnnIndex(e: DataFrame, ix: String): Unit = {
-    val pe = e.select(col("label"), posexplode(col("embedding")).as(Seq("i", "v")))
-    val cent = pe.groupBy("label", "i")
-      .agg(sum(round(col("v").cast("double"), 6).cast("decimal(8,6)"))
-        .cast("decimal(12,6)").as("s"), count(lit(1)).as("n"))
+    val cent = Ann.ivfCentroids(e.select(col("label"),
+      posexplode(col("embedding")).as(Seq("i", "v"))))
     DatasetsSink.writeOptimized(cent, s"$ix/centroids", Seq("label", "i"), Seq.empty)
-    val anchors = e.filter(col("vec_id").between(1, 4))
-      .select(col("vec_id").as("a_id"), col("embedding").as("a"))
+    val anchors = Ann.pqAnchors(e)
     DatasetsSink.writeOptimized(anchors, s"$ix/codebook", Seq("a_id"), Seq.empty)
     // per-vector PQ codes (e9's exact integer encode, over the WHOLE
     // corpus once instead of the probed cell per query)
-    val ks = (0 until 8).map { j =>
-      expr(s"CAST(round(round(${Ann.subDotSpark("a", "a", j)} - 2 * ${Ann.subDotSpark("embedding", "a", j)}, 6) * 1000000, 0) AS BIGINT) * 16 + a_id")
-        .as(s"k$j")
-    }
-    val scored = e.crossJoin(broadcast(anchors)).select(col("vec_id") +: ks: _*)
-    val codeAggs = (0 until 8).map(j => pmod(min(col(s"k$j")), lit(16L)).as(s"c$j"))
-    val codes = scored.groupBy("vec_id").agg(codeAggs.head, codeAggs.tail: _*)
+    val codes = Ann.pqEncode(e, anchors, Ann.pqKeys)
     val cells = codes.join(e.select(col("vec_id"), col("label"), col("embedding")), "vec_id")
     DatasetsSink.writeIndexed(cells, s"$ix/cells",
       partitionCols = Seq("label"), sortCols = Seq("vec_id"), bloomCols = Seq("vec_id"))
@@ -141,17 +132,10 @@ object Serving {
       ix: String, queryVecId: Long, rerankDepth: Int = 10,
       deltaDirs: Seq[String] = Nil, tombstoneDirs: Seq[String] = Nil): DataFrame = {
     val q = e.filter(col("vec_id") === queryVecId).select(col("embedding").as("qv"))
-    val qe = e.filter(col("vec_id") === queryVecId)
-      .select(posexplode(col("embedding")).as(Seq("i", "qv")))
-    val cent = spark.read.parquet(s"$ix/centroids")
-    val dots = cent.join(broadcast(qe), "i")
-      .groupBy("label")
-      .agg((sum(round(col("qv").cast("double"), 6).cast("decimal(8,6)") * col("s"))
-        .cast("double") / max(col("n"))).as("dot"))
+    val dots = Ann.ivfDots(spark.read.parquet(s"$ix/centroids"), Ann.queryDims(e, queryVecId))
     // the query router's probe decision: one tiny driver-side row, so
     // the cell scan below prunes statically (visible PartitionFilters)
-    val bestLabel = dots.orderBy(col("dot").desc, col("label")).limit(1)
-      .select(col("label").cast("int")).head().getInt(0)
+    val bestLabel = Ann.ivfBest(dots).select(col("label").cast("int")).head().getInt(0)
     // base cells ∪ any absorbed deltas (e22) — each source is its own
     // label-partitioned layout, so the literal probe filter prunes
     // every one of them to a single partition directory
@@ -166,25 +150,8 @@ object Serving {
         acc.join(broadcast(spark.read.parquet(t).select("vec_id")),
           Seq("vec_id"), "left_anti")
       }
-    val cl = cells.select(col("vec_id"),
-      posexplode(array((0 until 8).map(j => col(s"c$j")): _*)).as(Seq("j", "code")))
-    val codebook = spark.read.parquet(s"$ix/codebook")
-    val lutWide = codebook.crossJoin(broadcast(q)).select(col("a_id") +:
-      (0 until 8).map { j =>
-        expr(s"CAST(round(round(${Ann.subDotSpark("qv", "a", j)}, 6) * 1000000, 0) AS BIGINT)").as(s"l$j")
-      }: _*)
-    val lut = lutWide.select(col("a_id"),
-      posexplode(array((0 until 8).map(j => col(s"l$j")): _*)).as(Seq("j", "dot_i")))
-    val adc = cl.as("cl").join(broadcast(lut.as("lt")),
-        col("cl.code") === col("lt.a_id") && col("cl.j") === col("lt.j"))
-      .groupBy(col("cl.vec_id").as("vec_id"))
-      .agg(round(sum("dot_i").cast("double") / 1000000, 6).as("adc"))
-    adc.orderBy(col("adc").desc, col("vec_id")).limit(rerankDepth)
-      .join(cells.select(col("vec_id"), col("embedding")), "vec_id")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"), col("adc"),
-        expr(Ann.cosineSpark("embedding", "qv")).as("cos_sim"))
-      .orderBy(col("adc").desc, col("vec_id"))
+    val lut = Ann.pqLut(spark.read.parquet(s"$ix/codebook"), q, Ann.pqLutDots)
+    Ann.adcRerank(cells, lut, Ann.pqAdc, cells, q, rerankDepth)
   }
 
   /** e13 — q_ann_batch_indexed: a BATCH of queries served from the
@@ -208,11 +175,7 @@ object Serving {
     val qs = e.filter(col("vec_id") < 8)
       .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
     val qe = qs.select(col("q_id"), posexplode(col("qv")).as(Seq("i", "qvi")))
-    val cent = spark.read.parquet(s"$ix/centroids")
-    val dots = cent.join(broadcast(qe), "i")
-      .groupBy("q_id", "label")
-      .agg((sum(round(col("qvi").cast("double"), 6).cast("decimal(8,6)") * col("s"))
-        .cast("double") / max(col("n"))).as("dot"))
+    val dots = Ann.ivfDots(spark.read.parquet(s"$ix/centroids"), qe, "qvi", Seq("q_id", "label"))
     // the router's batch of probe decisions — 8 tiny rows collected, so
     // the cell scan prunes statically to the union of probed partitions
     val probeRows = dots
@@ -226,22 +189,15 @@ object Serving {
     val probes = broadcast(probeRows.toDF("q_id", "plabel"))
     val cells = spark.read.parquet(s"$ix/cells")
       .filter(col("label").isInCollection(probedLabels))
-    val cl = cells.select(col("vec_id"), col("label"),
-        posexplode(array((0 until 8).map(j => col(s"c$j")): _*)).as(Seq("j", "code")))
+    val cl = cells.select(col("vec_id"), col("label"), Ann.pqCodeCells)
       .join(probes, col("label") === col("plabel"))
       .select(col("q_id"), col("vec_id"), col("j"), col("code"))
-    val codebook = spark.read.parquet(s"$ix/codebook")
-    val lutWide = codebook.crossJoin(broadcast(qs)).select(col("q_id") +: col("a_id") +:
-      (0 until 8).map { j =>
-        expr(s"CAST(round(round(${Ann.subDotSpark("qv", "a", j)}, 6) * 1000000, 0) AS BIGINT)").as(s"l$j")
-      }: _*)
-    val lut = lutWide.select(col("q_id"), col("a_id"),
-      posexplode(array((0 until 8).map(j => col(s"l$j")): _*)).as(Seq("j", "dot_i")))
+    val lut = Ann.pqLut(spark.read.parquet(s"$ix/codebook"), qs, Ann.pqLutDots, col("q_id"))
     val adc = cl.as("cl").join(broadcast(lut.as("lt")),
         col("cl.q_id") === col("lt.q_id") && col("cl.code") === col("lt.a_id") &&
           col("cl.j") === col("lt.j"))
       .groupBy(col("cl.q_id").as("q_id"), col("cl.vec_id").as("vec_id"))
-      .agg(round(sum("dot_i").cast("double") / 1000000, 6).as("adc"))
+      .agg(Ann.pqAdc.as("adc"))
     val w = Window.partitionBy("q_id").orderBy(col("adc").desc, col("vec_id"))
     adc.withColumn("rk", row_number().over(w)).filter(col("rk") <= 10)
       .join(cells.select(col("vec_id"), col("embedding")), "vec_id")
@@ -252,14 +208,6 @@ object Serving {
   }
 
   val qAnnBatchIndexedSql: String = {
-    val ds = (0 until 8).map(j =>
-      s"CAST(round(round(${Ann.subDotDuck("a", "a", j)} - 2 * ${Ann.subDotDuck("e.embedding", "a", j)}, 6) * 1000000, 0) AS BIGINT) * 16 + a_id AS k$j")
-      .mkString(", ")
-    val codeCols = (0 until 8).map(j => s"((MIN(k$j) % 16) + 16) % 16 AS c$j").mkString(", ")
-    val luts = (0 until 8).map(j =>
-      s"CAST(round(round(${Ann.subDotDuck("qv", "a", j)}, 6) * 1000000, 0) AS BIGINT) AS l$j")
-      .mkString(", ")
-    val lutCase = (0 until 8).map(j => s"WHEN $j THEN l$j").mkString(" ")
     s"""WITH pe AS (
         SELECT label, unnest(generate_series(1, len(embedding))) AS i, unnest(embedding) AS v
         FROM embeddings),
@@ -278,15 +226,15 @@ object Serving {
           SELECT q_id, label, ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY dot DESC, label) AS rn
           FROM cdots) x WHERE rn = 1),
       anchors AS (SELECT vec_id AS a_id, embedding AS a FROM embeddings WHERE vec_id BETWEEN 1 AND 4),
-      scored AS (SELECT e.vec_id, e.label, a_id, $ds FROM embeddings e, anchors
+      scored AS (SELECT e.vec_id, e.label, a_id, ${Ann.pqKeysDuck} FROM embeddings e, anchors
         WHERE e.label IN (SELECT label FROM probe)),
-      codes AS (SELECT vec_id, label, $codeCols FROM scored GROUP BY vec_id, label),
+      codes AS (SELECT vec_id, label, ${Ann.pqCodeColsDuck} FROM scored GROUP BY vec_id, label),
       cl AS (SELECT p.q_id, c.vec_id, c.j, c.code FROM (
           SELECT vec_id, label, unnest([0,1,2,3,4,5,6,7]) AS j,
             unnest([c0,c1,c2,c3,c4,c5,c6,c7]) AS code FROM codes) c
         JOIN probe p ON p.label = c.label),
-      lut AS (SELECT q_id, a_id, j, CASE j $lutCase END AS dot_i
-        FROM (SELECT q_id, a_id, $luts, unnest([0,1,2,3,4,5,6,7]) AS j FROM anchors, qs) x),
+      lut AS (SELECT q_id, a_id, j, CASE j ${Ann.pqLutCaseDuck} END AS dot_i
+        FROM (SELECT q_id, a_id, ${Ann.pqLutsDuck}, unnest([0,1,2,3,4,5,6,7]) AS j FROM anchors, qs) x),
       adc AS (
         SELECT cl.q_id AS q_id, cl.vec_id AS vec_id,
           round(CAST(CAST(SUM(lut.dot_i) AS BIGINT) AS DOUBLE) / 1000000, 6) AS adc
@@ -412,23 +360,8 @@ object Serving {
         col("n.b") === col("i.b") && col("n.bkey") === col("i.bkey"))
       .select(col("n.doc_id").as("doc_id"), col("i.doc_id").as("idx_id"))
       .distinct()
-    val near = cand
-      .join(broadcast(bSh.select(col("doc_id"), col("sh").as("sh_n"))), "doc_id")
-      .join(ixRead("shingles")
-        .select(col("doc_id").as("idx_id"), col("sh").as("sh_i")), "idx_id")
-      .withColumn("inter", expr("size(filter(sh_n, x -> array_contains(sh_i, x)))"))
-      .filter(col("inter").cast("double") /
-        (size(col("sh_n")) + size(col("sh_i")) - col("inter")) >= 0.2)
-      .groupBy("doc_id").agg(min("idx_id").as("m_near"))
-    batch.select(col("doc_id"))
-      .join(exact, Seq("doc_id"), "left")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("m_exact").isNotNull, "drop_exact")
-          .when(col("m_near").isNotNull, "drop_near")
-          .otherwise("keep").as("verdict"),
-        coalesce(col("m_exact"), col("m_near")).as("match_id"))
-      .orderBy("doc_id")
+    val near = Dedup.nearMatches(cand, broadcast(bSh), ixRead("shingles"))
+    Dedup.screenVerdict(batch.select(col("doc_id")), exact, near)
   }
 
   /** e18 — FILTERED serving from the persisted index (e8 × e12, the
@@ -446,15 +379,8 @@ object Serving {
     val e = Tables(spark, dir, "embeddings")
     val admissible = Tables(spark, dir, "documents")
       .filter(col("lang") === "en").select(col("doc_id").as("vec_id"))
-    val qe = e.filter(col("vec_id") === 0)
-      .select(posexplode(col("embedding")).as(Seq("i", "qv")))
-    val cent = spark.read.parquet(s"$ix/centroids")
-    val dots = cent.join(broadcast(qe), "i")
-      .groupBy("label")
-      .agg((sum(round(col("qv").cast("double"), 6).cast("decimal(8,6)") * col("s"))
-        .cast("double") / max(col("n"))).as("dot"))
-    val bestLabel = dots.orderBy(col("dot").desc, col("label")).limit(1)
-      .select(col("label").cast("int")).head().getInt(0)
+    val dots = Ann.ivfDots(spark.read.parquet(s"$ix/centroids"), Ann.queryDims(e))
+    val bestLabel = Ann.ivfBest(dots).select(col("label").cast("int")).head().getInt(0)
     val cells = spark.read.parquet(s"$ix/cells")
       .filter(col("label") === lit(bestLabel))
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))

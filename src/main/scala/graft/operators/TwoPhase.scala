@@ -107,30 +107,16 @@ object TwoPhase {
     * plan divergence they could see DIFFERENT boundaries and silently
     * duplicate/skip ranks. The checkpoint pins one set of boundaries
     * for both branches (and is why the value-bucket variant above,
-    * whose buckets are pure functions of the row, needs none).
+    * whose buckets are pure functions of the row, needs none). The
+    * checkpointed partition id is then the bucket of
+    * [[globalRowNumber]]: carry-in, rank and total are its code.
     */
   def globalRowNumberByRange(df: DataFrame, order: Seq[Column],
       out: String, partitions: Int = 32, total: Option[String] = None): DataFrame = {
     val b = df.repartitionByRange(partitions, order: _*)
       .withColumn("__tp_bkt", spark_partition_id())
       .localCheckpoint(true)
-    val counts = b.groupBy("__tp_bkt").agg(count(lit(1)).as("__tp_cnt"))
-    val lower = counts.select(col("__tp_bkt").as("__tp_b2"),
-      col("__tp_cnt").as("__tp_cnt2"))
-    val offsets = counts.join(broadcast(lower),
-        col("__tp_b2") < col("__tp_bkt"), "left")
-      .groupBy("__tp_bkt")
-      .agg(coalesce(sum(col("__tp_cnt2")), lit(0L)).as("__tp_off"))
-    val grand = counts.agg(sum(col("__tp_cnt")).as("__tp_n"))
-    val joined = b.join(broadcast(offsets), "__tp_bkt")
-      .withColumn(out, col("__tp_off") +
-        row_number().over(Window.partitionBy(col("__tp_bkt")).orderBy(order: _*)))
-      .drop("__tp_bkt", "__tp_off")
-    total match {
-      case Some(n) => joined.crossJoin(broadcast(grand))
-        .withColumnRenamed("__tp_n", n)
-      case None => joined
-    }
+    globalRowNumber(b, col("__tp_bkt"), order, out, total)
   }
 
   /** Two-phase KEYED PREFIX SUM — the distributed running total

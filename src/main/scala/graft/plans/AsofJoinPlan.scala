@@ -121,6 +121,12 @@ case class AsofJoinExec(left: SparkPlan, right: SparkPlan,
     val lkOs = lkEs.map(ordinal)
     val rkOs = rkEs.map(ordinal)
     val (ltO, rtO) = (ordinal(ltE), ordinal(rtE))
+    // a row whose key or time is null never joins, on either side —
+    // the generated zipper skips it the same way (`continue`)
+    val lNullable = (lkEs :+ ltE).filter(_.nullable)
+    val rNullable = (rkEs :+ rtE).filter(_.nullable)
+    def anyNull(row: InternalRow, es: Array[Expression]): Boolean =
+      es.exists(_.eval(row) == null)
     left.execute().zipPartitions(right.execute()) { (li, ri) =>
       val joined = new JoinedRow
       // identity projection: emit UnsafeRows downstream operators expect
@@ -166,9 +172,12 @@ case class AsofJoinExec(left: SparkPlan, right: SparkPlan,
       def advanceRight(lt: Long): Unit = {
         var continue = true
         while (continue) {
-          if (rNext == null && ri.hasNext) {
-            rNext = ri.next()
-            readKeys(rNext, rkOs, rkEs, rKey)
+          while (rNext == null && ri.hasNext) {
+            val r = ri.next()
+            if (!anyNull(r, rNullable)) {
+              rNext = r
+              readKeys(rNext, rkOs, rkEs, rKey)
+            }
           }
           if (rNext == null) continue = false
           else {
@@ -178,7 +187,7 @@ case class AsofJoinExec(left: SparkPlan, right: SparkPlan,
           }
         }
       }
-      li.flatMap { lrow =>
+      li.filterNot(anyNull(_, lNullable)).flatMap { lrow =>
         readKeys(lrow, lkOs, lkEs, lKey)
         val lt = longAt(lrow, ltO, ltE)
         advanceRight(lt)

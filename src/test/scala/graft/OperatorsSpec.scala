@@ -882,6 +882,37 @@ class OperatorsSpec extends SparkTestBase {
         "(batch-incident components only)")
   }
 
+  test("d6/d19 CC kernel: a planted multi-round graph converges to the union-find minimum") {
+    import spark.implicits._
+    // a 12-node path with shuffled ids, a star whose centre is not its
+    // minimum, and two disjoint pairs: every committed corpus converges
+    // in one round, this graph cannot
+    val path = new scala.util.Random(7).shuffle((100L to 111L).toList)
+    val edges: Seq[(Long, Long)] = path.zip(path.tail) ++
+      Seq(205L -> 201L, 205L -> 209L, 203L -> 205L, 207L -> 205L, 300L -> 301L, 311L -> 310L)
+    val pairs = edges.toDF("doc_a", "doc_b")
+    val parent = scala.collection.mutable.Map[Long, Long]()
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val expected = parent.keys.map(x => x -> find(x)).toMap
+    val labels = operators.Dedup.ccOver(pairs).as[(Long, Long)].collect().toMap
+    assert(labels == expected, "CC labels differ from the driver-side union-find minimum")
+    // ccOver's run, round count included: its fused seed (min of self
+    // and neighbours) is both the labels and the frontier of the kernel
+    val sym = operators.Dedup.symmetricEdges(pairs)
+    val seed = sym.groupBy(col("dst")).agg(least(col("dst"), min(col("src"))).as("label"))
+      .select(col("dst").as("id"), col("label"))
+    val (kernel, rounds, _) = operators.Dedup.propagate(sym, seed, seed)
+    assert(kernel.as[(Long, Long)].collect().toMap == expected)
+    assert(rounds >= 3, s"the planted path must take several rounds, took $rounds")
+  }
+
   test("d6 reads the files under dir on every call: a rewritten corpus is not served a previous call's components") {
     val dir = java.nio.file.Files.createTempDirectory("graft-stale-input")
     val docs = Tables(spark, sfDir, "documents")

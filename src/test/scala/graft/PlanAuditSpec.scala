@@ -254,6 +254,28 @@ class PlanAuditSpec extends SparkTestBase {
       s"salted AsofJoinExec not whole-stage-codegen'd:\n$tree")
   }
 
+  test("native as-of drops null keys and times on the interpreted path as the generated zipper does") {
+    import spark.implicits._
+    val left = Seq[(Option[Long], Long, Long)]((None, 10L, 1L), (Some(0L), 10L, 2L),
+      (Some(5L), 10L, 3L)).toDF("k", "t", "id")
+    val right = Seq[(Option[Long], Long, Long)]((Some(0L), 1L, 100L), (None, 1L, 200L),
+      (Some(5L), 2L, 300L)).toDF("rk", "rt", "v")
+    def joined(): Seq[(Long, Long)] =
+      operators.Asof.asofJoin(left, right, "k", "rk", "t", "rt")
+        .select("id", "v").orderBy("id").as[(Long, Long)].collect().toSeq
+    val key = "spark.sql.codegen.wholeStage"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "true")
+      assert(joined() == Seq((2L, 100L), (3L, 300L)))
+      spark.conf.set(key, "false")
+      assert(joined() == Seq((2L, 100L), (3L, 300L)),
+        "the interpreted zipper must skip null keys, not read them as 0")
+    } finally {
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
   test("filtered IVF ANN: cell probe broadcasts and the metadata filter reaches the scan") {
     val df = operators.Ann.qAnnFilteredIvf(spark, sfDir)
     val p = df.queryExecution.executedPlan.toString

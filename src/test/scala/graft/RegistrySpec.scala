@@ -68,4 +68,68 @@ class RegistrySpec extends AnyFunSuite {
     assert(used.nonEmpty && (used -- declared).isEmpty,
       s"used but not declared: ${(used -- declared).toSeq.sorted.mkString(", ")}")
   }
+
+  /** Lines of code in a window that may occur at one place only. */
+  private val CopyWindow = 6
+
+  /** The code lines of a Scala source, numbered: comments, blank
+    * lines, `import`/`package` lines, bracket-only lines and the
+    * contents of triple-quoted strings (oracle SQL, generated Java)
+    * are dropped; the rest is trimmed. */
+  private def codeLines(src: String): Seq[(Int, String)] = {
+    var inBlock = false
+    var inTriple = false
+    src.split("\n", -1).toSeq.zipWithIndex.flatMap { case (line, n) =>
+      val out = new StringBuilder
+      var j = 0
+      while (j < line.length) {
+        if (inBlock) {
+          val k = line.indexOf("*/", j)
+          if (k < 0) j = line.length else { inBlock = false; j = k + 2 }
+        } else if (inTriple) {
+          val k = line.indexOf("\"\"\"", j)
+          if (k < 0) j = line.length
+          else {
+            inTriple = false
+            j = k + 3
+            while (j < line.length && line.charAt(j) == '"') j += 1
+          }
+        } else if (line.startsWith("\"\"\"", j)) { inTriple = true; j += 3 }
+        else if (line.startsWith("//", j)) j = line.length
+        else if (line.startsWith("/*", j)) { inBlock = true; j += 2 }
+        else if (line.charAt(j) == '"') {
+          // a one-line string literal is code: keep it whole, so a
+          // comment marker inside it is not taken for a comment
+          var k = j + 1
+          while (k < line.length && line.charAt(k) != '"') {
+            if (line.charAt(k) == '\\') k += 1
+            k += 1
+          }
+          out.append(line.substring(j, math.min(k + 1, line.length)))
+          j = k + 1
+        } else { out.append(line.charAt(j)); j += 1 }
+      }
+      val t = out.toString.trim
+      if (t.isEmpty || t.startsWith("import ") || t.startsWith("package ") ||
+          t.forall("(){}[] \t".contains(_))) None
+      else Some((n + 1, t))
+    }
+  }
+
+  test(s"no $CopyWindow-line code window of src/main occurs at two places") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root: no ${root.toAbsolutePath}")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+    val sites = files.flatMap { p =>
+      val lines = codeLines(Files.readString(p))
+      lines.sliding(CopyWindow).filter(_.size == CopyWindow).map { w =>
+        w.map(_._2) -> s"${root.relativize(p)}:${w.head._1}"
+      }
+    }.groupBy(_._1).values.map(_.map(_._2)).filter(_.size > 1).toSeq
+    if (sites.nonEmpty)
+      fail(s"${sites.size} code windows are written more than once; " +
+        "move each into one helper and call it:\n" +
+        sites.map(_.mkString(" = ")).sorted.mkString("\n"))
+  }
 }

@@ -448,28 +448,17 @@ object Serving {
         .collect().map(_.getLong(0)).toSeq.sorted
     val fs = new Path(ix).getFileSystem(spark.sparkContext.hadoopConfiguration)
     over.foreach { l =>
-      val dir = new Path(s"$ix/cells/label=$l")
+      val (dir, tmp, aside) = gcCellPaths(ix, l)
       val cleaned = spark.read.parquet(dir.toString)
         .join(broadcast(ts), Seq("vec_id"), "left_anti")
         .localCheckpoint(true) // sever the file read before the swap
       if (cleaned.isEmpty) fs.delete(dir, true)
       else {
-        val tmp = new Path(s"$ix/cells/.gc_label_$l.tmp")
-        val aside = new Path(s"$ix/cells/.gc_label_$l.old")
-        fs.delete(tmp, true); fs.delete(aside, true)
         DatasetsSink.writeOptimized(cleaned, tmp.toString, Seq("vec_id"), Seq("vec_id"))
-        // recoverable swap (r15 ADVICE): the old delete→rename pair
-        // could drop the live partition forever if the rename failed
-        // or the process died in between. Aside→promote→drop-aside
-        // leaves every crash window in a state [[repairAnnCells]] can
-        // finish from, and a false rename return fails LOUDLY with
-        // the cell's data still intact in the aside dir.
-        require(fs.rename(dir, aside),
-          s"GC swap: failed to move live cell $dir aside — cell untouched")
-        require(fs.rename(tmp, dir),
-          s"GC swap: failed to promote $tmp into $dir — run repairAnnCells " +
-            s"(data intact in $aside)")
-        fs.delete(aside, true): Unit
+        // every crash window of the swap leaves a state
+        // [[repairAnnCells]] finishes from; a failed rename throws
+        // with the cell's data back in place
+        DatasetsSink.swapDir(fs, dir, tmp, aside)
       }
     }
     tombstoneAnnBatch(spark, ix, remaining, gcBatchId)
@@ -477,20 +466,14 @@ object Serving {
     (over, remaining.size.toLong)
   }
 
-  /** e30 — startup repair for a [[gcAnnCells]] interrupted mid-swap.
-    * The swap per cell is: write `.gc_label_L.tmp` (complete rewrite)
-    * → rename(live, `.old`) → rename(`.tmp`, live) → delete(`.old`) —
-    * so every crash window leaves a DISTINGUISHABLE state: live dir
-    * present ⇒ the swap finished or never started (any tmp/aside
-    * leftovers are stale — drop them); live missing with tmp present
-    * ⇒ tmp holds the complete rewritten cell (it is fully written
-    * before the first rename can run) — promote it and finish the GC;
-    * live missing with only the aside ⇒ the aside IS the cell —
-    * restore it. Idempotent (a repaired cell's leftovers are gone, a
-    * re-run sees nothing); dot-prefixed dirs are invisible to Spark's
-    * listing, so an unrepaired crash never serves a torn partition —
-    * it serves the cell MISSING, which this promotes back. Returns
-    * the labels whose live dir it had to reconstruct. */
+  /** e30 — startup repair for a [[gcAnnCells]] interrupted mid-swap:
+    * every cell with `.gc_label_L.tmp`/`.old` leftovers goes through
+    * [[DatasetsSink.recoverDir]] (live present ⇒ drop the leftovers;
+    * else promote the complete tmp; else restore the aside).
+    * Dot-prefixed dirs are invisible to Spark's listing, so an
+    * unrepaired crash never serves a torn partition — it serves the
+    * cell MISSING, which this promotes back. Idempotent. Returns the
+    * labels whose live dir it had to reconstruct. */
   def repairAnnCells(spark: SparkSession, ix: String): Seq[Int] = {
     import org.apache.hadoop.fs.Path
     val cellsRoot = new Path(s"$ix/cells")
@@ -499,20 +482,17 @@ object Serving {
     val Orphan = """\.gc_label_(-?\d+)\.(tmp|old)""".r
     val labels = fs.listStatus(cellsRoot).toSeq.map(_.getPath.getName)
       .collect { case Orphan(l, _) => l.toInt }.distinct.sorted
-    labels.flatMap { l =>
-      val live = new Path(s"$ix/cells/label=$l")
-      val tmp = new Path(s"$ix/cells/.gc_label_$l.tmp")
-      val aside = new Path(s"$ix/cells/.gc_label_$l.old")
-      if (fs.exists(live)) {
-        fs.delete(tmp, true); fs.delete(aside, true); None
-      } else if (fs.exists(tmp)) {
-        require(fs.rename(tmp, live), s"repair: failed to promote $tmp")
-        fs.delete(aside, true); Some(l)
-      } else {
-        require(fs.rename(aside, live), s"repair: failed to restore $aside")
-        Some(l)
-      }
+    labels.filter { l =>
+      val (live, tmp, aside) = gcCellPaths(ix, l)
+      DatasetsSink.recoverDir(fs, live, tmp, aside)
     }
+  }
+
+  /** A GC'd cell's (live, rewritten tmp, moved-aside) directories. */
+  private def gcCellPaths(ix: String, l: Int) = {
+    import org.apache.hadoop.fs.Path
+    (new Path(s"$ix/cells/label=$l"), new Path(s"$ix/cells/.gc_label_$l.tmp"),
+      new Path(s"$ix/cells/.gc_label_$l.old"))
   }
 
   // ---------- i10 × e12: atomic index publication ----------

@@ -810,8 +810,11 @@ object TextOps {
     * millions of times (boilerplate, licenses, nav bars) partially
     * aggregates on every input task instead of concentrating its rows
     * on one task the way `row_number() OVER (PARTITION BY span)`
-    * would. The keeper join back is a plain equi-join on span (AQE
-    * skew-split eligible), then one shuffle on doc_id reassembles.
+    * would. The keeper row already names the one kept occurrence
+    * (doc_id, span_id) with its span text and count, so no join back
+    * to the span stream is needed: one shuffle on the keeper's doc_id
+    * reassembles, and a hot span is one keeper row, never a skewed
+    * partition.
     * Requires non-empty documents (f13's same precondition: Spark's
     * `div` truncates toward zero, DuckDB's `//` floors, so the
     * zero-token span index would disagree at size 0). */
@@ -838,10 +841,11 @@ object TextOps {
 
   /** f19's full pipeline over any (doc_id, text) frame. */
   private[graft] def spanDedup(docs: DataFrame): DataFrame = {
-    val spans = spanStreamOf(docs)
-    val keepers = spanKeepers(spans)
-    spans.join(keepers, "span")
-      .filter(struct(col("doc_id"), col("span_id")) === col("keep"))
+    // a null span (null text) keeps nothing, as in DuckDB's unnest
+    spanKeepers(spanStreamOf(docs))
+      .filter(col("span").isNotNull)
+      .select(col("keep.doc_id").as("doc_id"), col("keep.span_id").as("span_id"),
+        col("span"), col("n_occ"))
       .groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_kept"),
         sum(when(col("n_occ") > 1, 1).otherwise(0)).cast("long").as("n_dup_kept"),

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Output layout mirroring the reference's blob store convention:
@@ -141,9 +141,9 @@ object DatasetsSink {
     * affected partitions' merged content — existing rows LEFT-ANTI
     * the batch's keys (covers replace and delete), UNION the upsert
     * rows — written bucket-partitioned to a staging root; (3) each
-    * bucket dir swaps in via i8's rename protocol (live → trash,
-    * staging → live), with i8's entry-time recovery per bucket (live
-    * missing + staging present ⇒ finish the swap; stale staging
+    * bucket dir swaps in through [[swapDir]] (live → trash, staging
+    * → live), with [[recoverDir]]'s entry-time recovery per bucket
+    * (live missing + staging present ⇒ finish the swap; stale staging
     * discarded). A crash mid-swap leaves some buckets applied and
     * some not: RE-RUNNING THE SAME MERGE CONVERGES — applied buckets
     * re-merge to identical content (deletes find nothing, upserts
@@ -169,12 +169,8 @@ object DatasetsSink {
     def staging(b: Int) = new Path(stagingRoot, s"kb=$b")
     def trash(b: Int) = new Path(root, s".kb=$b.merge_trash")
 
-    // entry-time recovery per affected bucket (i8's rules)
-    buckets.foreach { b =>
-      if (!fs.exists(live(b)) && fs.exists(staging(b))) fs.rename(staging(b), live(b))
-      else if (fs.exists(staging(b))) fs.delete(staging(b), true)
-      if (fs.exists(trash(b))) fs.delete(trash(b), true)
-    }
+    // entry-time recovery per affected bucket
+    buckets.foreach(b => recoverDir(fs, live(b), staging(b), trash(b)))
 
     // a bucket dir can legitimately exist and be EMPTY (all rows
     // deleted by an earlier merge) — only dirs with parquet content
@@ -205,17 +201,10 @@ object DatasetsSink {
 
     // commit: per-bucket rename swaps (driver-side, no data movement).
     // A batch can be all-deletes for a bucket ⇒ staging dir absent ⇒
-    // the new content is EMPTY: swap to an empty live dir.
+    // the new content is EMPTY: swap in an empty staging dir.
     buckets.foreach { b =>
-      if (fs.exists(live(b)) && !fs.rename(live(b), trash(b)))
-        throw new IllegalStateException(s"merge commit failed renaming ${live(b)}")
-      if (fs.exists(staging(b))) {
-        if (!fs.rename(staging(b), live(b))) {
-          fs.rename(trash(b), live(b))
-          throw new IllegalStateException(s"merge commit failed renaming ${staging(b)}")
-        }
-      } else fs.mkdirs(live(b))
-      fs.delete(trash(b), true)
+      fs.mkdirs(staging(b))
+      swapDir(fs, live(b), staging(b), trash(b))
     }
     fs.delete(stagingRoot, true)
     // one job for both stats, not a count() per op kind
@@ -223,6 +212,42 @@ object DatasetsSink {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     MergeStats(buckets.length,
       opCounts.getOrElse("u", 0L), opCounts.getOrElse("d", 0L))
+  }
+
+  /** The directory commit shared by [[mergeInto]], [[compactPartition]]
+    * and the ANN cell GC: `staged` is fully written before this runs;
+    * `live` (when present) moves to `aside`, `staged` is promoted to
+    * `live`, and `aside` is dropped. Each crash window leaves a state
+    * [[recoverDir]] finishes from. A failed promote moves `aside`
+    * back to `live` and throws, leaving `staged` intact. */
+  private[graft] def swapDir(fs: FileSystem, live: Path, staged: Path, aside: Path): Unit = {
+    val hadLive = fs.exists(live)
+    if (hadLive && !fs.rename(live, aside))
+      throw new IllegalStateException(s"swap failed moving $live aside; $live untouched")
+    if (!fs.rename(staged, live)) {
+      if (hadLive) fs.rename(aside, live)
+      throw new IllegalStateException(s"swap failed promoting $staged into $live")
+    }
+    fs.delete(aside, true): Unit
+  }
+
+  /** Entry-time recovery for a [[swapDir]] that may have crashed:
+    * `live` present ⇒ the swap finished or never started, so the
+    * leftovers are stale — drop them; `live` missing with `staged`
+    * present ⇒ `staged` is complete (it is written before the first
+    * rename) — promote it; `live` missing with only `aside` ⇒ `aside`
+    * IS the content — restore it. Idempotent. Returns true iff it
+    * rebuilt `live`. */
+  private[graft] def recoverDir(fs: FileSystem, live: Path, staged: Path, aside: Path): Boolean = {
+    val rebuilt = !fs.exists(live) &&
+      Seq(staged, aside).find(p => fs.exists(p)).exists { from =>
+        if (!fs.rename(from, live))
+          throw new IllegalStateException(s"recovery failed moving $from to $live")
+        true
+      }
+    fs.delete(staged, true)
+    fs.delete(aside, true)
+    rebuilt
   }
 
   /** What [[compactPartition]] did, for logging/specs. */
@@ -239,12 +264,12 @@ object DatasetsSink {
     * Commit protocol (filesystem rename as the atomic unit): the
     * compacted copy is FULLY written to a sibling staging directory
     * first (the read of the live files happens here, so the live dir
-    * is never touched while still needed), then live renames to a
-    * trash dir and staging renames to live; the crash window between
-    * the two renames is closed by recovery at entry (live missing +
-    * staging present ⇒ finish the swap; both present ⇒ the previous
-    * run died before commit, its stale staging is discarded). On an
-    * object store without atomic rename this commit point would be
+    * is never touched while still needed), then [[swapDir]] renames
+    * live to a trash dir and staging to live; the crash window
+    * between the two renames is closed by [[recoverDir]] at entry
+    * (live missing + staging present ⇒ finish the swap; both present
+    * ⇒ the previous run died before commit, its stale staging is
+    * discarded). On an object store without atomic rename this commit point would be
     * i5's manifest instead — the staging/recovery structure is
     * unchanged. Re-running on an already-compacted partition is a
     * no-op (file count already ≤ target count).
@@ -262,9 +287,7 @@ object DatasetsSink {
     val staging = new Path(live.getParent, s".${live.getName}.compact_staging")
     val trash = new Path(live.getParent, s".${live.getName}.compact_trash")
     // recovery: finish or discard a previous run's half-done commit
-    if (!fs.exists(live) && fs.exists(staging)) fs.rename(staging, live)
-    else if (fs.exists(staging)) fs.delete(staging, true)
-    if (fs.exists(trash)) fs.delete(trash, true)
+    recoverDir(fs, live, staging, trash)
     val files = fs.listStatus(live)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     val bytes = files.map(_.getLen).sum
@@ -276,14 +299,7 @@ object DatasetsSink {
     // target the way the plan's cumsum groups do)
     writeOptimized(spark.read.parquet(partitionDir).repartition(nOut),
       staging.toString, sortCols, bloomCols)
-    // commit: two renames; recovery above makes the window safe
-    if (!fs.rename(live, trash))
-      throw new IllegalStateException(s"compaction commit failed renaming $live")
-    if (!fs.rename(staging, live)) {
-      fs.rename(trash, live) // roll back — staging is still intact
-      throw new IllegalStateException(s"compaction commit failed renaming $staging")
-    }
-    fs.delete(trash, true)
+    swapDir(fs, live, staging, trash)
     val after = fs.listStatus(live)
       .count(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
     CompactionStats(files.length, after, bytes, skipped = false)

@@ -40,22 +40,140 @@ object VersionedTable {
   private def fsOf(spark: SparkSession, path: String) =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def manifest(root: String, v: Long) = new Path(root, f"_v$v%06d.manifest")
+  /** A manifest log: `<root>/<prefix><N>.manifest`, one file per
+    * version. Main's prefix is `_v`, a branch's `_branch-<name>-v`;
+    * every log is listed, read and published by the same routines. */
+  private final case class Log(root: String, prefix: String) {
+    def file(v: Long): Path = new Path(root, f"$prefix$v%06d.manifest")
+  }
+
+  private def mainLog(root: String) = Log(root, "_v")
+
+  private def branchLog(root: String, name: String) = Log(root, s"_branch-$name-v")
+
+  private def manifest(root: String, v: Long) = mainLog(root).file(v)
 
   /** Manifest entries are root-relative (`data/...`) except a shallow
     * clone's absolute source references — resolve accordingly. */
   private def resolve(root: String, f: String): String =
     if (f.startsWith("/") || f.contains(":/")) f else s"$root/$f"
 
-  /** Versions present, ascending (empty for a fresh root). */
-  def versions(spark: SparkSession, path: String): Seq[Long] = {
-    val fs = fsOf(spark, path)
-    val root = new Path(path)
+  /** A log's versions, ascending (empty for a fresh root or log). */
+  private def logVersions(spark: SparkSession, log: Log): Seq[Long] = {
+    val fs = fsOf(spark, log.root)
+    val root = new Path(log.root)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("_v") && n.endsWith(".manifest"))
-      .map(n => n.stripPrefix("_v").stripSuffix(".manifest").toLong)
+      .filter(n => n.startsWith(log.prefix) && n.endsWith(".manifest"))
+      .map(n => n.stripPrefix(log.prefix).stripSuffix(".manifest").toLong)
       .sorted
+  }
+
+  /** Versions present, ascending (empty for a fresh root). */
+  def versions(spark: SparkSession, path: String): Seq[Long] =
+    logVersions(spark, mainLog(path))
+
+  /** The latest version; a table with no commit is a loud error. */
+  private def latest(spark: SparkSession, path: String): Long = {
+    val vs = versions(spark, path)
+    require(vs.nonEmpty, s"no committed version at $path")
+    vs.last
+  }
+
+  /** A scan of root-relative `files`; no files is an empty frame. */
+  private def scan(spark: SparkSession, path: String, files: Seq[String]): DataFrame =
+    if (files.isEmpty) spark.emptyDataFrame
+    else spark.read.parquet(files.map(f => resolve(path, f)): _*)
+
+  /** The non-empty lines of a small metadata file — a manifest, the
+    * `_ts.index` / `_fstats.index` sidecars or a `_cursor.*` file. */
+  private def readLines(spark: SparkSession, p: Path): Seq[String] =
+    Using.resource(fsOf(spark, p.toString).open(p)) { in =>
+      scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+    }.filter(_.nonEmpty)
+
+  /** A manifest's data-file entries: its lines minus `#` metadata. */
+  private def entries(spark: SparkSession, p: Path): Seq[String] =
+    readLines(spark, p).filterNot(_.startsWith("#"))
+
+  /** What an append keeps of a log's latest snapshot; an overwrite
+    * (or an empty log) keeps nothing. */
+  private def baseFiles(spark: SparkSession, log: Log, vs: Seq[Long],
+      overwrite: Boolean): Seq[String] =
+    if (overwrite || vs.isEmpty) Nil else entries(spark, log.file(vs.last))
+
+  /** A sidecar map parsed by `parse`; empty when the file is absent or
+    * unreadable, so readers degrade instead of failing. */
+  private def sidecar[K, V](spark: SparkSession, f: Path)(
+      parse: Seq[String] => Map[K, V]): Map[K, V] =
+    if (!fsOf(spark, f.toString).exists(f)) Map.empty
+    else scala.util.Try(parse(readLines(spark, f))).getOrElse(Map.empty)
+
+  private def writeFile(spark: SparkSession, p: Path, content: String): Unit =
+    Using.resource(fsOf(spark, p.toString).create(p, true))(_.write(content.getBytes("UTF-8")))
+
+  /** Replaces a small sidecar whole: a tmp write, then a rename over
+    * the dropped old file. A reader racing the swap finds the file
+    * absent and degrades; it never reads a torn one. */
+  private def replaceFile(spark: SparkSession, target: Path, lines: Seq[String]): Unit = {
+    val fs = fsOf(spark, target.toString)
+    val tmp = new Path(target.getParent, s".${target.getName}.tmp")
+    fs.delete(tmp, true)
+    writeFile(spark, tmp, lines.mkString("\n") + "\n")
+    fs.delete(target, false)
+    if (!fs.rename(tmp, target)) throw new IllegalStateException(s"swap onto $target failed")
+  }
+
+  /** The one manifest commit, for every log. Under [[commitLock]],
+    * `body` sees the log's versions and either aborts (Left) or
+    * returns the next version's lines: its `#` headers first, then
+    * the data files. The in-commit timestamp `#ts:` (i25) is stamped
+    * after the headers, MONOTONE by construction (max(now, parent+1)
+    * — wall-clock ties and skew cannot reorder history), so marker
+    * checks on the first line (#compaction, #restore) still hold.
+    * The lines go to a tmp file that renames onto the next version.
+    *
+    * Atomicity contract: rename-onto-existing-fails is atomic on the
+    * stores a production table lives on (HDFS rename, ABFS ETag
+    * If-None-Match, GCS generation preconditions). POSIX rename()
+    * REPLACES the target, and Hadoop's local ChecksumFileSystem only
+    * approximates check-and-act — so two CONCURRENT local-FS writers
+    * could both believe they won (observed once under the 8-writer
+    * stress spec). Two local guards close it: in-process committers
+    * serialize on a JVM lock (covers every multi-threaded driver,
+    * which is how concurrent local commits actually happen), and the
+    * winner re-reads the manifest it just renamed — if the content
+    * is not byte-for-byte its own, somebody replaced it and `body`
+    * runs again against the newer versions (the unique data-file
+    * token makes every writer's content distinct). */
+  private def publish[A](spark: SparkSession, log: Log)(
+      body: Seq[Long] => Either[A, Seq[String]]): Either[A, Long] = {
+    val fs = fsOf(spark, log.root)
+    val tmp = new Path(log.root, s".manifest-${java.util.UUID.randomUUID.toString.take(8)}.tmp")
+    @annotation.tailrec
+    def attempt(): Either[A, Long] = {
+      val won: Option[Either[A, Long]] = commitLock.synchronized {
+        val vs = logVersions(spark, log)
+        body(vs) match {
+          case Left(abort) => Some(Left(abort))
+          case Right(lines) =>
+            val next = vs.lastOption.getOrElse(0L) + 1
+            val prevTs = vs.lastOption.map(logTs(spark, log, _)).getOrElse(0L)
+            val ict = math.max(System.currentTimeMillis(), prevTs + 1)
+            val (headers, files) = lines.span(_.startsWith("#"))
+            val content = (headers ++ Seq(s"$TsMarkerPrefix$ict") ++ files).mkString("\n")
+            writeFile(spark, tmp, content)
+            if (fs.rename(tmp, log.file(next)) &&
+                readLines(spark, log.file(next)).mkString("\n") == content) Some(Right(next))
+            else { fs.delete(tmp, true); None }
+        }
+      }
+      won match {
+        case Some(out) => out
+        case None      => attempt()
+      }
+    }
+    attempt()
   }
 
   /** First manifest line of a compaction commit (i14): the version
@@ -63,15 +181,11 @@ object VersionedTable {
     * delta. '#'-prefixed lines are metadata, never file names. */
   private val CompactionMarker = "#compaction"
 
-  private def rawManifest(spark: SparkSession, path: String, v: Long): Seq[String] = {
-    val fs = fsOf(spark, path)
-    Using.resource(fs.open(manifest(path, v))) { in =>
-      scala.io.Source.fromInputStream(in).getLines().toList
-    }.filter(_.nonEmpty)
-  }
+  private def rawManifest(spark: SparkSession, path: String, v: Long): Seq[String] =
+    readLines(spark, manifest(path, v))
 
   private[graft] def readManifest(spark: SparkSession, path: String, v: Long): Seq[String] =
-    rawManifest(spark, path, v).filterNot(_.startsWith("#"))
+    entries(spark, manifest(path, v))
 
   /** True iff version `v` is a compaction commit (no row delta). */
   def isCompaction(spark: SparkSession, path: String, v: Long): Boolean =
@@ -107,7 +221,7 @@ object VersionedTable {
     val vs = versions(spark, path)
     require(vs.contains(toVersion), s"version $toVersion not in $vs")
     val files = readManifest(spark, path, toVersion)
-    casCommitWithHeaders(spark, path, files, overwrite = true,
+    casCommit(spark, path, files, overwrite = true,
       headers = Seq(s"$RestoreMarkerPrefix$toVersion"))
   }
 
@@ -182,7 +296,7 @@ object VersionedTable {
             (coalesce(col("total"), lit(0L)) + coalesce(col("_dsum"), lit(0L)))
               .as("total"))
         val newFiles = land(spark, matPath, merged)
-        casCommitWithHeaders(spark, matPath, newFiles, overwrite = true,
+        casCommit(spark, matPath, newFiles, overwrite = true,
           headers = Seq(s"$SourceMarkerPrefix$v"))
       }
     }
@@ -216,13 +330,8 @@ object VersionedTable {
       overwrite: Boolean = false): Either[Seq[String], Long] = {
     val fs = fsOf(spark, path)
     val newFiles = land(spark, path, df)
-    val vs = versions(spark, path)
-    val base = if (overwrite || vs.isEmpty) Seq.empty
-      else readManifest(spark, path, vs.last)
-    val candidateFiles = (base ++ newFiles).map(f => resolve(path, f))
-    val candidate =
-      if (candidateFiles.isEmpty) spark.emptyDataFrame
-      else spark.read.parquet(candidateFiles: _*)
+    val base = baseFiles(spark, mainLog(path), versions(spark, path), overwrite)
+    val candidate = scan(spark, path, base ++ newFiles)
     val failed = audits.collect { case (name, check) if !check(candidate) => name }
     if (failed.nonEmpty) {
       newFiles.foreach(f => fs.delete(new Path(path, f), false))
@@ -351,11 +460,8 @@ object VersionedTable {
   /** The data files a snapshot references (root-relative) — the list
     * [[readPruned]] cuts; public so callers can audit prune ratios. */
   def manifestFiles(spark: SparkSession, path: String,
-      version: Option[Long] = None): Seq[String] = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no versions at $path")
-    readManifest(spark, path, version.getOrElse(vs.last))
-  }
+      version: Option[Long] = None): Seq[String] =
+    readManifest(spark, path, version.getOrElse(latest(spark, path)))
 
   /** Snapshot read pruned on `pcol = value`: keeps a manifest file iff
     * it carries the matching marker OR carries NO marker for `pcol`
@@ -367,78 +473,27 @@ object VersionedTable {
     * file cut BEFORE any split planning. */
   def readPruned(spark: SparkSession, path: String, pcol: String, value: String,
       version: Option[Long] = None): (DataFrame, Int, Int) = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no versions at $path")
-    val v = version.getOrElse(vs.last)
+    val v = version.getOrElse(latest(spark, path))
     val files = readManifest(spark, path, v)
     val kept = files.filter { f =>
       !f.contains(s"-$pcol=") || f.contains(s"-$pcol=$value-")
     }
-    val df =
-      if (kept.isEmpty) {
-        // preserve schema from the full snapshot, return no rows
-        read(spark, path, Some(v)).limit(0)
-      } else spark.read.parquet(kept.map(resolve(path, _)): _*)
+    // no kept file: the full snapshot's schema, no rows
+    val df = if (kept.isEmpty) read(spark, path, Some(v)).limit(0) else scan(spark, path, kept)
     (df, kept.size, files.size)
   }
 
   /** Publishes already-landed files as the next version (commit's
-    * second half). */
-  private def casCommit(spark: SparkSession, path: String,
-      newFiles: Seq[String], overwrite: Boolean): Long =
-    casCommitWithHeaders(spark, path, newFiles, overwrite, Seq.empty)
-
-  private def casCommitWithHeaders(spark: SparkSession, path: String,
-      newFiles: Seq[String], overwrite: Boolean,
-      headers: Seq[String]): Long = {
-    val fs = fsOf(spark, path)
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    // optimistic manifest CAS: create-if-absent on the next version;
-    // lose the race ⇒ recompute the base file list and retry.
-    //
-    // Atomicity contract: rename-onto-existing-fails is atomic on the
-    // stores a production table lives on (HDFS rename, ABFS ETag
-    // If-None-Match, GCS generation preconditions). POSIX rename()
-    // REPLACES the target, and Hadoop's local ChecksumFileSystem only
-    // approximates check-and-act — so two CONCURRENT local-FS writers
-    // could both believe they won (observed once under the 8-writer
-    // stress spec). Two local guards close it: in-process committers
-    // serialize on a JVM lock (covers every multi-threaded driver,
-    // which is how concurrent local commits actually happen), and the
-    // winner re-reads the manifest it just renamed — if the content
-    // is not byte-for-byte its own, somebody replaced it and the
-    // commit retries at the next version (the unique data-file token
-    // makes every writer's content distinct).
-    var committed = -1L
-    while (committed < 0) {
-      val attempt: Long = VersionedTable.commitLock.synchronized {
-        val vs = versions(spark, path)
-        val next = vs.lastOption.getOrElse(0L) + 1
-        val base = if (overwrite || vs.isEmpty) Seq.empty
-          else readManifest(spark, path, vs.last)
-        // i25: the in-commit timestamp, MONOTONE by construction
-        // (max(now, parent+1) — wall-clock ties and skew cannot
-        // reorder history); placed after caller headers so marker
-        // checks on the first line (#compaction, #restore) hold
-        val prevTs = vs.lastOption.map(v => commitTs(spark, path, v)).getOrElse(0L)
-        val ict = math.max(System.currentTimeMillis(), prevTs + 1)
-        val content = (headers ++ Seq(s"$TsMarkerPrefix$ict") ++ base ++ newFiles)
-          .mkString("\n")
-        val tmp = new Path(path, s".manifest-$token.tmp")
-        Using.resource(fs.create(tmp, true)) { out =>
-          out.write(content.getBytes("UTF-8"))
-        }
-        if (fs.rename(tmp, manifest(path, next)) &&
-            rawManifest(spark, path, next).mkString("\n") == content) next
-        else { fs.delete(tmp, true); -1L }
-      }
-      committed = attempt
-    }
-    committed
-  }
+    * second half): append re-lists the latest base on every attempt,
+    * overwrite lists `newFiles` alone. */
+  private def casCommit(spark: SparkSession, path: String, newFiles: Seq[String],
+      overwrite: Boolean, headers: Seq[String] = Nil): Long =
+    publish(spark, mainLog(path)) { vs =>
+      Right(headers ++ baseFiles(spark, mainLog(path), vs, overwrite) ++ newFiles)
+    }.merge
 
   /** Serializes same-process commit attempts (see the atomicity
-    * contract in [[commit]]); cross-process safety is the store's
+    * contract in [[publish]]); cross-process safety is the store's
     * atomic create-if-absent. */
   private val commitLock = new Object
 
@@ -451,13 +506,15 @@ object VersionedTable {
     * (exactly Delta's legacy timestamp resolution). Counts its
     * manifest opens in [[tsHeaderReads]] so the i27 checkpoint's
     * O(tail) claim is ASSERTABLE, not prose. */
-  def commitTs(spark: SparkSession, path: String, v: Long): Long = {
+  def commitTs(spark: SparkSession, path: String, v: Long): Long =
+    logTs(spark, mainLog(path), v)
+
+  private def logTs(spark: SparkSession, log: Log, v: Long): Long = {
     tsHeaderReads.incrementAndGet()
-    rawManifest(spark, path, v)
+    readLines(spark, log.file(v))
       .collectFirst { case l if l.startsWith(TsMarkerPrefix) =>
         l.stripPrefix(TsMarkerPrefix).trim.toLong }
-      .getOrElse(fsOf(spark, path).getFileStatus(manifest(path, v))
-        .getModificationTime)
+      .getOrElse(fsOf(spark, log.root).getFileStatus(log.file(v)).getModificationTime)
   }
 
   /** i27 instrumentation: per-version timestamp resolutions that had
@@ -486,35 +543,20 @@ object VersionedTable {
     * batch of commits, like [[compact]]. Returns the head version
     * covered. */
   def checkpointTimestamps(spark: SparkSession, path: String): Long = {
-    val fs = fsOf(spark, path)
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"nothing to checkpoint at $path")
-    val lines = vs.map(v => s"$v:${commitTs(spark, path, v)}")
-    val tmp = new Path(path, "._ts.index.tmp")
-    fs.delete(tmp, true)
-    Using.resource(fs.create(tmp, true)) { out =>
-      out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    }
-    fs.delete(tsIndexFile(path), false)
-    require(fs.rename(tmp, tsIndexFile(path)), s"ts-index swap failed at $path")
+    replaceFile(spark, tsIndexFile(path), vs.map(v => s"$v:${commitTs(spark, path, v)}"))
     vs.last
   }
 
   /** The checkpointed version→rawTs map; empty when absent or
     * unreadable (readers must degrade to headers, never fail). */
-  private[graft] def tsIndexMap(spark: SparkSession, path: String): Map[Long, Long] = {
-    val fs = fsOf(spark, path)
-    val f = tsIndexFile(path)
-    if (!fs.exists(f)) Map.empty
-    else scala.util.Try {
-      Using.resource(fs.open(f)) { in =>
-        scala.io.Source.fromInputStream(in).getLines()
-          .filter(_.contains(":")).map { l =>
-            val Array(v, t) = l.split(":", 2); v.trim.toLong -> t.trim.toLong
-          }.toMap
-      }
-    }.getOrElse(Map.empty)
-  }
+  private[graft] def tsIndexMap(spark: SparkSession, path: String): Map[Long, Long] =
+    sidecar(spark, tsIndexFile(path)) { lines =>
+      lines.filter(_.contains(":")).map { l =>
+        val Array(v, t) = l.split(":", 2); v.trim.toLong -> t.trim.toLong
+      }.toMap
+    }
 
   // ---- i28: per-file zone maps + data skipping ---------------------
 
@@ -524,35 +566,39 @@ object VersionedTable {
     * when absent/unreadable — readers degrade to reading every file,
     * never fail. Lines are `file|col|min|max` (long-typed grids). */
   private[graft] def fstatsMap(spark: SparkSession,
-      path: String): Map[String, Map[String, (Long, Long)]] = {
-    val fs = fsOf(spark, path)
-    val f = fstatsFile(path)
-    if (!fs.exists(f)) Map.empty
-    else scala.util.Try {
-      Using.resource(fs.open(f)) { in =>
-        scala.io.Source.fromInputStream(in).getLines()
-          .map(_.split("\\|")).collect { case Array(fn, c, lo, hi) =>
-            (fn, c, lo.toLong, hi.toLong)
-          }.toList
+      path: String): Map[String, Map[String, (Long, Long)]] =
+    sidecar(spark, fstatsFile(path)) { lines =>
+      lines.map(_.split("\\|")).collect { case Array(fn, c, lo, hi) =>
+        (fn, c, lo.toLong, hi.toLong)
       }.groupBy(_._1).map { case (fn, rows) =>
         fn -> rows.map(r => r._2 -> (r._3, r._4)).toMap
       }
-    }.getOrElse(Map.empty)
-  }
+    }
 
   private def writeFstats(spark: SparkSession, path: String,
-      m: Map[String, Map[String, (Long, Long)]]): Unit = {
-    val fs = fsOf(spark, path)
-    val lines = m.toSeq.sortBy(_._1).flatMap { case (fn, cols) =>
+      m: Map[String, Map[String, (Long, Long)]]): Unit =
+    replaceFile(spark, fstatsFile(path), m.toSeq.sortBy(_._1).flatMap { case (fn, cols) =>
       cols.toSeq.sortBy(_._1).map { case (c, (lo, hi)) => s"$fn|$c|$lo|$hi" }
+    })
+
+  /** Per-file min/max of the integral `cols` over just-landed `files`
+    * (root-relative): one commit-sized pass grouped by
+    * `input_file_name`, never table-sized. */
+  private def fileBounds(spark: SparkSession, path: String, files: Seq[String],
+      cols: Seq[String]): Map[String, Map[String, (Long, Long)]] = {
+    val aggs = cols.flatMap { c =>
+      Seq(fmin(col(c)).cast("long").as(s"min_$c"), fmax(col(c)).cast("long").as(s"max_$c"))
     }
-    val tmp = new Path(path, "._fstats.index.tmp")
-    fs.delete(tmp, true)
-    Using.resource(fs.create(tmp, true)) { out =>
-      out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    }
-    fs.delete(fstatsFile(path), false)
-    require(fs.rename(tmp, fstatsFile(path)), s"fstats swap failed at $path")
+    val byName = files.map(f => f.split("/").last -> f).toMap
+    scan(spark, path, files)
+      .groupBy(input_file_name().as("f"))
+      .agg(aggs.head, aggs.tail: _*)
+      .collect() // bounded: one row per file in THIS commit
+      .flatMap { r =>
+        byName.get(r.getString(0).split("/").last).map { rel =>
+          rel -> cols.map(c => c -> (r.getAs[Long](s"min_$c"), r.getAs[Long](s"max_$c"))).toMap
+        }
+      }.toMap
   }
 
   /** i28 — commit with per-file ZONE MAPS (Delta add-file stats /
@@ -574,24 +620,7 @@ object VersionedTable {
       statCols: Seq[String], overwrite: Boolean = false): Long = {
     require(statCols.nonEmpty, "statCols must be non-empty")
     val newFiles = land(spark, path, df)
-    val landed = spark.read.parquet(newFiles.map(f => resolve(path, f)): _*)
-    val aggs = statCols.flatMap { c =>
-      Seq(fmin(col(c)).cast("long").as(s"min_$c"),
-        fmax(col(c)).cast("long").as(s"max_$c"))
-    }
-    val rows = landed.groupBy(input_file_name().as("f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // bounded: one row per file in THIS commit
-    val byName = newFiles.map(f => f.split("/").last -> f).toMap
-    val fresh = rows.flatMap { r =>
-      val base = r.getString(0).split("/").last
-      byName.get(base).map { rel =>
-        rel -> statCols.map { c =>
-          c -> (r.getAs[Long](s"min_$c"), r.getAs[Long](s"max_$c"))
-        }.toMap
-      }
-    }.toMap
-    writeFstats(spark, path, fstatsMap(spark, path) ++ fresh)
+    writeFstats(spark, path, fstatsMap(spark, path) ++ fileBounds(spark, path, newFiles, statCols))
     casCommit(spark, path, newFiles, overwrite)
   }
 
@@ -601,11 +630,7 @@ object VersionedTable {
     * bounds is kept (must-read). Root-relative names. */
   def skipPlan(spark: SparkSession, path: String, c: String, lo: Long,
       hi: Long, version: Option[Long] = None): (Seq[String], Seq[String]) = {
-    val v = version.getOrElse {
-      val vs = versions(spark, path)
-      require(vs.nonEmpty, s"no committed version at $path")
-      vs.last
-    }
+    val v = version.getOrElse(latest(spark, path))
     val stats = fstatsMap(spark, path)
     readManifest(spark, path, v).partition { f =>
       stats.get(f).flatMap(_.get(c)) match {
@@ -625,13 +650,8 @@ object VersionedTable {
       hi: Long, version: Option[Long] = None): DataFrame = {
     val (kept, pruned) = skipPlan(spark, path, c, lo, hi, version)
     val resid = col(c) >= lo && col(c) <= hi
-    if (kept.nonEmpty)
-      spark.read.parquet(kept.map(f => resolve(path, f)): _*).filter(resid)
-    else {
-      val witness = pruned.headOption.map(f => resolve(path, f))
-      witness.map(w => spark.read.parquet(w).filter(lit(false)))
-        .getOrElse(spark.emptyDataFrame)
-    }
+    if (kept.nonEmpty) scan(spark, path, kept).filter(resid)
+    else scan(spark, path, pruned.take(1)).filter(lit(false))
   }
 
   /** i29 — copy-on-write DELETE for a closed range, riding the i28
@@ -659,7 +679,7 @@ object VersionedTable {
       val v = versions(spark, path).last
       return (v, 0, untouched.size, 0L)
     }
-    val cand = spark.read.parquet(candidates.map(f => resolve(path, f)): _*)
+    val cand = scan(spark, path, candidates)
     val hit = col(c) >= lo && col(c) <= hi
     val nDel = cand.filter(hit).count()
     val survivors = cand.filter(!hit)
@@ -671,23 +691,13 @@ object VersionedTable {
     val hadStats = fstatsMap(spark, path).exists { case (f, cols) =>
       candidates.contains(f) && cols.contains(c)
     }
-    if (hadStats && rewritten.nonEmpty) {
-      val landed = spark.read.parquet(rewritten.map(f => resolve(path, f)): _*)
-      val rows = landed.groupBy(input_file_name().as("f"))
-        .agg(fmin(col(c)).cast("long").as("mn"), fmax(col(c)).cast("long").as("mx"))
-        .collect()
-      val byName = rewritten.map(f => f.split("/").last -> f).toMap
-      val fresh = rows.flatMap { r =>
-        byName.get(r.getString(0).split("/").last)
-          .map(rel => rel -> Map(c -> (r.getLong(1), r.getLong(2))))
-      }.toMap
-      writeFstats(spark, path, fstatsMap(spark, path) ++ fresh)
-    }
+    if (hadStats && rewritten.nonEmpty)
+      writeFstats(spark, path, fstatsMap(spark, path) ++ fileBounds(spark, path, rewritten, Seq(c)))
     // the `#delete` marker makes the commit an OVERWRITE STEP for
     // change consumers even though untouched files carry by name —
     // without it the delta would be `new − old` = the survivor files,
     // i.e. retractions silently re-delivered as appends
-    val v = casCommitWithHeaders(spark, path, untouched ++ rewritten,
+    val v = casCommit(spark, path, untouched ++ rewritten,
       overwrite = true, headers = Seq(DeleteMarker))
     (v, candidates.size, untouched.size, nDel)
   }
@@ -739,7 +749,7 @@ object VersionedTable {
       if (lastTxnVersion(spark, path, writerId).exists(_ >= txnVersion)) None
       else {
         val newFiles = land(spark, path, df)
-        Some(casCommitWithHeaders(spark, path, newFiles, overwrite,
+        Some(casCommit(spark, path, newFiles, overwrite,
           headers = Seq(s"$TxnMarkerPrefix$writerId:$txnVersion")))
       }
     }
@@ -795,16 +805,8 @@ object VersionedTable {
     read(spark, path, Some(versionAsOf(spark, path, tsMs)))
 
   /** Snapshot read: the given version, or the latest. */
-  def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse {
-      val vs = versions(spark, path)
-      require(vs.nonEmpty, s"no committed version at $path")
-      vs.last
-    }
-    val files = readManifest(spark, path, v).map(f => resolve(path, f))
-    if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files: _*)
-  }
+  def read(spark: SparkSession, path: String, version: Option[Long] = None): DataFrame =
+    scan(spark, path, readManifest(spark, path, version.getOrElse(latest(spark, path))))
 
   /** i24 — the table's DECLARED schema at a version: the schema of the
     * files INTRODUCED by the newest schema-bearing commit at or before
@@ -814,8 +816,6 @@ object VersionedTable {
     * so rolling back data rolls back the declared schema with it. */
   def declaredSchema(spark: SparkSession, path: String,
       version: Option[Long] = None): org.apache.spark.sql.types.StructType = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no versions at $path")
     // walk down from v: a RESTORE jumps to its target (it introduces
     // no files — the rolled-back snapshot's schema is the declared
     // one); otherwise the newest version that introduced ≥1 file
@@ -851,7 +851,7 @@ object VersionedTable {
           }
           else schemaFileAt(v - 1)
       }
-    spark.read.parquet(resolve(path, schemaFileAt(version.getOrElse(vs.last)))).schema
+    spark.read.parquet(resolve(path, schemaFileAt(version.getOrElse(latest(spark, path))))).schema
   }
 
   /** i24 — SCHEMA-EVOLVED snapshot read: push the declared schema into
@@ -865,9 +865,7 @@ object VersionedTable {
     * schema; [[restore]] rolls the schema back with the data. */
   def readEvolved(spark: SparkSession, path: String,
       version: Option[Long] = None): DataFrame = {
-    val vs = versions(spark, path)
-    require(vs.nonEmpty, s"no versions at $path")
-    val v = version.getOrElse(vs.last)
+    val v = version.getOrElse(latest(spark, path))
     val files = readManifest(spark, path, v).map(f => resolve(path, f))
     if (files.isEmpty) spark.emptyDataFrame
     else spark.read.schema(declaredSchema(spark, path, Some(v))).parquet(files: _*)
@@ -936,9 +934,7 @@ object VersionedTable {
           else prevManifest(v).toSet
         manifestOf(v).filterNot(prev)
       }.distinct
-      .map(f => resolve(path, f))
-    if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files: _*)
+    scan(spark, path, files)
   }
 
   /** i14 — COMPACTION (the lakehouse OPTIMIZE): rewrite the latest
@@ -960,51 +956,22 @@ object VersionedTable {
     * At 100 TB this is the small-file maintenance a streaming-ingested
     * table needs nightly: read O(live files), write O(targetFiles),
     * one manifest create; readers never block. */
+  @annotation.tailrec
   def compact(spark: SparkSession, path: String, targetFiles: Int = 1): Long = {
-    val fs = fsOf(spark, path)
-    val dataDir = new Path(path, "data")
-    var committed = -1L
-    while (committed < 0) {
-      val vs = versions(spark, path)
-      require(vs.nonEmpty, s"nothing to compact at $path")
-      val base = vs.last
-      val token = java.util.UUID.randomUUID.toString.take(8)
-      val staging = new Path(path, s".staging-$token")
-      read(spark, path, Some(base)).repartition(targetFiles)
-        .write.mode(SaveMode.Overwrite).parquet(staging.toString)
-      val newFiles = fs.listStatus(staging).toSeq
-        .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map { f =>
-          val dst = new Path(dataDir, s"$token-${f.getPath.getName}")
-          if (!fs.rename(f.getPath, dst))
-            throw new IllegalStateException(s"landing ${f.getPath} failed")
-          s"data/${dst.getName}"
-        }
-      fs.delete(staging, true)
-      val content = (CompactionMarker +: newFiles).mkString("\n")
-      val attempt: Long = VersionedTable.commitLock.synchronized {
-        val now = versions(spark, path)
-        if (now.last != base) -1L // lost to a concurrent commit
-        else {
-          val next = base + 1
-          val tmp = new Path(path, s".manifest-$token.tmp")
-          Using.resource(fs.create(tmp, true))(_.write(content.getBytes("UTF-8")))
-          if (fs.rename(tmp, manifest(path, next)) &&
-              rawManifest(spark, path, next).mkString("\n") == content) next
-          else { fs.delete(tmp, true); -1L }
-        }
-      }
-      if (attempt < 0) // roll back this attempt's files before retrying
+    val base = latest(spark, path)
+    val newFiles = land(spark, path, read(spark, path, Some(base)).repartition(targetFiles))
+    publish(spark, mainLog(path)) { now =>
+      if (now.last != base) Left("base moved") else Right(CompactionMarker +: newFiles)
+    } match {
+      case Right(v) => v
+      case Left(_) => // lost to a concurrent commit: drop this attempt's files, re-run
+        val fs = fsOf(spark, path)
         newFiles.foreach(f => fs.delete(new Path(path, f), false))
-      committed = attempt
+        compact(spark, path, targetFiles)
     }
-    committed
   }
 
   // ---- i18: branches (dev/main isolation + fast-forward publish) ----
-
-  private def branchManifest(root: String, name: String, v: Long) =
-    new Path(root, f"_branch-$name-v$v%06d.manifest")
 
   private val BranchBasePrefix = "#base:"
 
@@ -1014,34 +981,16 @@ object VersionedTable {
   /** Versions present on a branch, ascending (empty = no such branch). */
   def branchVersions(spark: SparkSession, path: String, name: String): Seq[Long] = {
     requireBranchName(name)
-    val fs = fsOf(spark, path)
-    val root = new Path(path)
-    val prefix = s"_branch-$name-v"
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith(prefix) && n.endsWith(".manifest"))
-      .map(n => n.stripPrefix(prefix).stripSuffix(".manifest").toLong)
-      .sorted
-  }
-
-  private def readBranchManifest(spark: SparkSession, path: String,
-      name: String, v: Long): Seq[String] = {
-    val fs = fsOf(spark, path)
-    Using.resource(fs.open(branchManifest(path, name, v))) { in =>
-      scala.io.Source.fromInputStream(in).getLines().toList
-    }.filter(l => l.nonEmpty && !l.startsWith("#"))
+    logVersions(spark, branchLog(path, name))
   }
 
   /** The main version this branch forked from (recorded in its v1
     * manifest as a `#base:` metadata line). */
-  def branchBase(spark: SparkSession, path: String, name: String): Long = {
-    val fs = fsOf(spark, path)
-    Using.resource(fs.open(branchManifest(path, name, 1))) { in =>
-      scala.io.Source.fromInputStream(in).getLines().toList
-    }.collectFirst { case l if l.startsWith(BranchBasePrefix) =>
-      l.stripPrefix(BranchBasePrefix).trim.toLong
-    }.getOrElse(throw new IllegalStateException(s"branch $name has no base line"))
-  }
+  def branchBase(spark: SparkSession, path: String, name: String): Long =
+    readLines(spark, branchLog(path, name).file(1))
+      .collectFirst { case l if l.startsWith(BranchBasePrefix) =>
+        l.stripPrefix(BranchBasePrefix).trim.toLong
+      }.getOrElse(throw new IllegalStateException(s"branch $name has no base line"))
 
   /** i18 — fork a BRANCH off a main version (Iceberg branch / git
     * branch semantics on this table's own log): branch v1 is a
@@ -1057,20 +1006,15 @@ object VersionedTable {
   def createBranch(spark: SparkSession, path: String, name: String,
       from: Option[Long] = None): Long = {
     requireBranchName(name)
-    val fs = fsOf(spark, path)
     val vs = versions(spark, path)
     require(vs.nonEmpty, s"cannot branch an empty table at $path")
     val base = from.getOrElse(vs.last)
     require(vs.contains(base), s"no version $base to branch from")
-    require(branchVersions(spark, path, name).isEmpty,
-      s"branch $name already exists")
     val files = readManifest(spark, path, base)
-    val content = (s"$BranchBasePrefix$base" +: files).mkString("\n")
-    val tmp = new Path(path, s".branch-$name.tmp")
-    Using.resource(fs.create(tmp, true))(_.write(content.getBytes("UTF-8")))
-    if (!fs.rename(tmp, branchManifest(path, name, 1)))
-      throw new IllegalStateException(s"branch $name create lost a race")
-    1L
+    publish(spark, branchLog(path, name)) { bvs =>
+      if (bvs.nonEmpty) Left(s"branch $name already exists")
+      else Right(s"$BranchBasePrefix$base" +: files)
+    }.fold(e => throw new IllegalArgumentException(e), identity)
   }
 
   /** Commit `df` as the branch's next version (the branch-side twin of
@@ -1079,29 +1023,11 @@ object VersionedTable {
     * space. Main is never touched. */
   def commitToBranch(spark: SparkSession, path: String, name: String,
       df: DataFrame, overwrite: Boolean = false): Long = {
-    requireBranchName(name)
     require(branchVersions(spark, path, name).nonEmpty, s"no branch $name")
-    val fs = fsOf(spark, path)
     val newFiles = land(spark, path, df)
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    var committed = -1L
-    while (committed < 0) {
-      val attempt: Long = VersionedTable.commitLock.synchronized {
-        val vs = branchVersions(spark, path, name)
-        val next = vs.last + 1
-        val base = if (overwrite) Seq.empty
-          else readBranchManifest(spark, path, name, vs.last)
-        val content = (base ++ newFiles).mkString("\n")
-        val tmp = new Path(path, s".manifest-$token.tmp")
-        Using.resource(fs.create(tmp, true))(_.write(content.getBytes("UTF-8")))
-        if (fs.rename(tmp, branchManifest(path, name, next)) &&
-            readBranchManifest(spark, path, name, next).mkString("\n") == content)
-          next
-        else { fs.delete(tmp, true); -1L }
-      }
-      committed = attempt
-    }
-    committed
+    publish(spark, branchLog(path, name)) { vs =>
+      Right(baseFiles(spark, branchLog(path, name), vs, overwrite) ++ newFiles)
+    }.merge
   }
 
   /** Snapshot read of a branch (its latest version by default). */
@@ -1109,10 +1035,7 @@ object VersionedTable {
       version: Option[Long] = None): DataFrame = {
     val vs = branchVersions(spark, path, name)
     require(vs.nonEmpty, s"no branch $name at $path")
-    val files = readBranchManifest(spark, path, name, version.getOrElse(vs.last))
-      .map(f => resolve(path, f))
-    if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files: _*)
+    scan(spark, path, entries(spark, branchLog(path, name).file(version.getOrElse(vs.last))))
   }
 
   /** i18 — FAST-FORWARD publish: make main's next version the branch's
@@ -1128,32 +1051,14 @@ object VersionedTable {
     * commit aborts with Left. */
   def fastForward(spark: SparkSession, path: String,
       name: String): Either[String, Long] = {
-    requireBranchName(name)
-    val fs = fsOf(spark, path)
-    val base = branchBase(spark, path, name)
     val bvs = branchVersions(spark, path, name)
     require(bvs.nonEmpty, s"no branch $name")
-    val content = readBranchManifest(spark, path, name, bvs.last).mkString("\n")
-    val token = java.util.UUID.randomUUID.toString.take(8)
-    var out: Either[String, Long] = null
-    while (out == null) {
-      val attempt: Either[String, Long] = VersionedTable.commitLock.synchronized {
-        val vs = versions(spark, path)
-        if (vs.last != base)
-          Left(s"main moved to v${vs.last} past fork base v$base — rebase")
-        else {
-          val next = base + 1
-          val tmp = new Path(path, s".manifest-$token.tmp")
-          Using.resource(fs.create(tmp, true))(_.write(content.getBytes("UTF-8")))
-          if (fs.rename(tmp, manifest(path, next)) &&
-              readManifest(spark, path, next).mkString("\n") == content)
-            Right(next)
-          else { fs.delete(tmp, true); null }
-        }
-      }
-      out = attempt
+    val base = branchBase(spark, path, name)
+    val files = entries(spark, branchLog(path, name).file(bvs.last))
+    publish(spark, mainLog(path)) { vs =>
+      if (vs.last != base) Left(s"main moved to v${vs.last} past fork base v$base — rebase")
+      else Right(files)
     }
-    out
   }
 
   // ---- i20: table clones (zero-copy shallow / independent deep) -----
@@ -1171,22 +1076,15 @@ object VersionedTable {
   def shallowClone(spark: SparkSession, srcPath: String,
       dstPath: String): Long = {
     val fs = fsOf(spark, dstPath)
-    val vs = versions(spark, srcPath)
-    require(vs.nonEmpty, s"nothing to clone at $srcPath")
-    require(versions(spark, dstPath).isEmpty, s"clone target $dstPath not empty")
-    fs.mkdirs(new Path(dstPath))
     // absolute references: lines that don't start with data/ are
     // resolved as-is by readers (read() prefixes dstPath only for
     // relative entries)
     val srcAbs = new Path(srcPath).makeQualified(
       fs.getUri, fs.getWorkingDirectory).toString
-    val content = readManifest(spark, srcPath, vs.last)
-      .map(f => s"$srcAbs/$f").mkString("\n")
-    val tmp = new Path(dstPath, ".clone.tmp")
-    Using.resource(fs.create(tmp, true))(_.write(content.getBytes("UTF-8")))
-    if (!fs.rename(tmp, manifest(dstPath, 1)))
-      throw new IllegalStateException(s"clone create at $dstPath lost a race")
-    1L
+    val files = readManifest(spark, srcPath, latest(spark, srcPath)).map(f => s"$srcAbs/$f")
+    publish(spark, mainLog(dstPath)) { dvs =>
+      if (dvs.nonEmpty) Left(s"clone target $dstPath not empty") else Right(files)
+    }.fold(e => throw new IllegalArgumentException(e), identity)
   }
 
   /** i20 — DEEP CLONE: the source snapshot's rows re-land as the
@@ -1201,16 +1099,31 @@ object VersionedTable {
     requireBranchName(name)
     val fs = fsOf(spark, path)
     val vs = branchVersions(spark, path, name)
-    vs.foreach(v => fs.delete(branchManifest(path, name, v), false))
+    vs.foreach(v => fs.delete(branchLog(path, name).file(v), false))
     vs.length
   }
 
-  /** Drop all but the last `keepLast` manifests and delete every data
-    * file none of the kept manifests references (including files
-    * orphaned by crashed commits). Live BRANCH manifests count as
-    * references — a branch's snapshot stays byte-stable across a main
-    * vacuum (delete the branch first to reclaim its files). Returns
-    * (manifests dropped, data files deleted). */
+  /** What `vacuum(keepLast)` does: the manifests it drops and keeps,
+    * the file set the kept manifests and live branches reference, and
+    * the data files present. Pure metadata. */
+  private final case class VacuumPlan(drop: Seq[Long], keep: Seq[Long],
+      referenced: Set[String], dataFiles: Seq[org.apache.hadoop.fs.FileStatus])
+
+  private def planVacuum(spark: SparkSession, path: String, keepLast: Int): VacuumPlan = {
+    val fs = fsOf(spark, path)
+    val vs = versions(spark, path)
+    val (drop, keep) = vs.splitAt(math.max(0, vs.length - keepLast))
+    val branchRefs = fs.listStatus(new Path(path)).toSeq.map(_.getPath)
+      .filter(p => p.getName.startsWith("_branch-") && p.getName.endsWith(".manifest"))
+      .flatMap(p => entries(spark, p))
+    val referenced = (keep.flatMap(v => readManifest(spark, path, v)) ++ branchRefs)
+      .map(f => f.stripPrefix("data/")).toSet
+    val dataDir = new Path(path, "data")
+    val dataFiles =
+      if (!fs.exists(dataDir)) Seq.empty else fs.listStatus(dataDir).toSeq.filter(_.isFile)
+    VacuumPlan(drop, keep, referenced, dataFiles)
+  }
+
   /** i26 — VACUUM DRY RUN: the reclamation PLAN `vacuum(keepLast)`
     * would execute, as data (Delta's `VACUUM ... DRY RUN` — nobody
     * deletes from a 100 TB lake without reading this first). Per data
@@ -1223,56 +1136,35 @@ object VersionedTable {
   def vacuumPlan(spark: SparkSession, path: String, keepLast: Int): DataFrame = {
     import spark.implicits._
     val fs = fsOf(spark, path)
-    val vs = versions(spark, path)
-    val (drop, keep) = vs.splitAt(math.max(0, vs.length - keepLast))
-    val referenced = liveRefs(spark, path, keep)
-    val dataDir = new Path(path, "data")
-    val fileRows =
-      if (!fs.exists(dataDir)) Seq.empty
-      else fs.listStatus(dataDir).toSeq.filter(_.isFile).map { f =>
-        val kept = referenced.contains(f.getPath.getName)
-        ("data", f.getPath.getName, f.getLen,
-          if (kept) "referenced" else "unreferenced", !kept)
-      }
-    val manifestRows = drop.map { v =>
-      ("manifest", manifest(path, v).getName,
-        fs.getFileStatus(manifest(path, v)).getLen, "beyond keepLast", true)
-    } ++ keep.map { v =>
-      ("manifest", manifest(path, v).getName,
-        fs.getFileStatus(manifest(path, v)).getLen, "kept", false)
+    val plan = planVacuum(spark, path, keepLast)
+    val fileRows = plan.dataFiles.map { f =>
+      val kept = plan.referenced.contains(f.getPath.getName)
+      ("data", f.getPath.getName, f.getLen,
+        if (kept) "referenced" else "unreferenced", !kept)
     }
-    (fileRows ++ manifestRows)
+    def manifestRows(vs: Seq[Long], reason: String, del: Boolean) = vs.map { v =>
+      ("manifest", manifest(path, v).getName,
+        fs.getFileStatus(manifest(path, v)).getLen, reason, del)
+    }
+    (fileRows ++ manifestRows(plan.drop, "beyond keepLast", true) ++
+        manifestRows(plan.keep, "kept", false))
       .toDF("kind", "name", "bytes", "reason", "would_delete")
       .orderBy("kind", "name")
   }
 
-  /** The file set kept manifests + live branches still reference. */
-  private def liveRefs(spark: SparkSession, path: String,
-      keep: Seq[Long]): Set[String] = {
-    val fs = fsOf(spark, path)
-    val branchRefs = fs.listStatus(new Path(path)).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("_branch-") && n.endsWith(".manifest"))
-      .flatMap { n =>
-        Using.resource(fs.open(new Path(path, n))) { in =>
-          scala.io.Source.fromInputStream(in).getLines().toList
-        }.filter(l => l.nonEmpty && !l.startsWith("#"))
-      }
-    (keep.flatMap(v => readManifest(spark, path, v)) ++ branchRefs)
-      .map(f => f.stripPrefix("data/")).toSet
-  }
-
+  /** Drop all but the last `keepLast` manifests and delete every data
+    * file none of the kept manifests references (including files
+    * orphaned by crashed commits). Live BRANCH manifests count as
+    * references — a branch's snapshot stays byte-stable across a main
+    * vacuum (delete the branch first to reclaim its files). Executes
+    * exactly the plan [[vacuumPlan]] reports. Returns
+    * (manifests dropped, data files deleted). */
   def vacuum(spark: SparkSession, path: String, keepLast: Int): (Int, Int) = {
     val fs = fsOf(spark, path)
-    val vs = versions(spark, path)
-    val (drop, keep) = vs.splitAt(math.max(0, vs.length - keepLast))
-    val referenced = liveRefs(spark, path, keep)
-    drop.foreach(v => fs.delete(manifest(path, v), false))
-    val dataDir = new Path(path, "data")
-    val removed =
-      if (!fs.exists(dataDir)) 0
-      else fs.listStatus(dataDir).toSeq
-        .filter(f => f.isFile && !referenced.contains(f.getPath.getName))
-        .map { f => fs.delete(f.getPath, false); 1 }.sum
+    val plan = planVacuum(spark, path, keepLast)
+    plan.drop.foreach(v => fs.delete(manifest(path, v), false))
+    val removed = plan.dataFiles.filterNot(f => plan.referenced.contains(f.getPath.getName))
+    removed.foreach(f => fs.delete(f.getPath, false))
     // i28 upkeep: drop zone-map entries for the files just collected —
     // stale entries are harmless to correctness (lookups key off live
     // manifests) but the sidecar must not grow with delete/rewrite
@@ -1280,11 +1172,11 @@ object VersionedTable {
     val stats = fstatsMap(spark, path)
     if (stats.nonEmpty) {
       val live = stats.filter { case (f, _) =>
-        referenced.contains(f.stripPrefix("data/"))
+        plan.referenced.contains(f.stripPrefix("data/"))
       }
       if (live.size != stats.size) writeFstats(spark, path, live)
     }
-    (drop.length, removed)
+    (plan.drop.length, removed.length)
   }
 
   // ---- i13: the table's change feed as an exactly-once consumer ----
@@ -1300,23 +1192,16 @@ object VersionedTable {
     val fs = fsOf(spark, ckptDir)
     val dir = new Path(ckptDir)
     if (!fs.exists(dir)) return 0L
-    val readOne = (p: Path) => Using.resource(fs.open(p)) { in =>
-      scala.io.Source.fromInputStream(in).getLines().next().trim.toLong
-    }
     val named = fs.listStatus(dir).toSeq.map(_.getPath)
       .filter(_.getName.startsWith("_cursor"))
-    if (named.isEmpty) 0L else named.map(readOne).max
+    if (named.isEmpty) 0L else named.map(p => readLines(spark, p).head.trim.toLong).max
   }
 
   private def writeCursor(spark: SparkSession, ckptDir: String, v: Long): Unit = {
-    val fs = fsOf(spark, ckptDir)
-    fs.mkdirs(new Path(ckptDir))
-    val tmp = new Path(ckptDir, s"._cursor.$v.tmp")
-    Using.resource(fs.create(tmp, true))(_.write(v.toString.getBytes("UTF-8")))
     // land the NEW cursor first; only then drop superseded ones.
     // A crash in between leaves multiple cursors and max-on-read wins.
-    if (!fs.rename(tmp, new Path(ckptDir, s"_cursor.$v")))
-      throw new IllegalStateException(s"cursor commit for v$v failed")
+    replaceFile(spark, new Path(ckptDir, s"_cursor.$v"), Seq(v.toString))
+    val fs = fsOf(spark, ckptDir)
     fs.listStatus(new Path(ckptDir)).toSeq.map(_.getPath)
       .filter(p => p.getName.startsWith("_cursor") && p.getName != s"_cursor.$v")
       .foreach(p => fs.delete(p, false))

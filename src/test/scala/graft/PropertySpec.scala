@@ -182,8 +182,8 @@ class PropertySpec extends SparkTestBase {
   }
 
   test("span dedup equals the reference model on random corpora") {
-    // f19's distributed formulation (partial min/count agg + keeper
-    // join + reassembly) against a direct in-memory model: global
+    // f19's distributed formulation (partial min/count agg +
+    // reassembly from the keepers) against a direct in-memory model: global
     // first-occurrence keep over non-overlapping 10-token spans. Tiny
     // vocab forces heavy span collisions, short docs exercise the
     // ragged last span.

@@ -132,4 +132,26 @@ class RegistrySpec extends AnyFunSuite {
         "move each into one helper and call it:\n" +
         sites.map(_.mkString(" = ")).sorted.mkString("\n"))
   }
+
+  test("storage commits go through the two publish protocols") {
+    val root = Paths.get("src/main/scala/graft")
+    assert(Files.isDirectory(root), s"run from the repo root: no ${root.toAbsolutePath}")
+    val code: Map[String, Seq[String]] = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map((p: Path) => root.relativize(p).toString -> codeLines(Files.readString(p)).map(_._2))
+      .toMap
+    def count(needle: String): Map[String, Int] = code.collect {
+      case (f, lines) if lines.exists(_.contains(needle)) => f -> lines.count(_.contains(needle))
+    }
+    // VersionedTable: land, publish and the sidecar swap; DatasetsSink:
+    // swapDir (aside, promote, rollback) and recoverDir
+    val renames = count(".rename(").filterNot(_._1.startsWith("dev/"))
+    assert(renames.keySet.subsetOf(Set("sources/VersionedTable.scala",
+      "sources/DatasetsSink.scala")), s"renames outside the publish protocols: $renames")
+    assert(renames.getOrElse("sources/VersionedTable.scala", 0) <= 3, renames)
+    assert(renames.getOrElse("sources/DatasetsSink.scala", 0) <= 4, renames)
+    assert(!renames.contains("operators/Serving.scala"))
+    // publish and commitTxn are the only holders of the commit lock
+    assert(count("commitLock.synchronized").values.sum <= 2)
+  }
 }

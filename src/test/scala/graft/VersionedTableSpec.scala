@@ -1022,4 +1022,32 @@ class VersionedTableSpec extends SparkTestBase {
     // time travel unaffected: the replayed-no-op left no version
     assert(VersionedTable.versions(spark, path) == Seq(1L, 2L, 3L, 4L, 5L))
   }
+
+  test("i25: every main-line commit carries one #ts: — compaction, fast-forward and shallow clone too") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("vtable_ts_all").toString
+    def b(lo: Long, hi: Long) = (lo to hi).map(i => (i, s"r$i")).toDF("id", "v")
+    def tsLines(root: String, v: Long): Int =
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(root, f"_v$v%06d.manifest")), "UTF-8")
+        .linesIterator.count(_.startsWith("#ts:"))
+
+    VersionedTable.commit(spark, path, b(1, 10))
+    VersionedTable.commit(spark, path, b(11, 20))
+    assert(VersionedTable.compact(spark, path) == 3L)
+    VersionedTable.createBranch(spark, path, "dev")
+    VersionedTable.commitToBranch(spark, path, "dev", b(21, 30))
+    assert(VersionedTable.fastForward(spark, path, "dev") == Right(4L))
+
+    val vs = VersionedTable.versions(spark, path)
+    assert(vs == Seq(1L, 2L, 3L, 4L))
+    vs.foreach(v => assert(tsLines(path, v) == 1, s"v$v must carry exactly one #ts: line"))
+    val ts = vs.map(v => VersionedTable.commitTs(spark, path, v))
+    assert(ts.zip(ts.tail).forall { case (a, c) => a < c }, s"commit ts not increasing: $ts")
+    assert(VersionedTable.read(spark, path).count() == 30L)
+
+    val clone = java.nio.file.Files.createTempDirectory("vtable_ts_clone").toString
+    assert(VersionedTable.shallowClone(spark, path, clone) == 1L)
+    assert(tsLines(clone, 1L) == 1, "a shallow clone's v1 must carry #ts:")
+  }
 }

@@ -27,9 +27,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Spark defaults under which a generated class compiles once per JVM
-    * instead of once per session. Set only where the user has not set
-    * the key, so an explicit value always wins.
+  /** Spark defaults graft installs. Each is set only where the user has
+    * not set the key, so a value given on the builder or with `--conf`
+    * always wins.
+    *
+    * Under the first three a generated class compiles once per JVM
+    * instead of once per session:
     *
     *  - `spark.sql.codegen.cache.maxEntries`: static, read once when the
     *    JVM-wide class cache is first built. Spark's 100 is fewer than
@@ -45,11 +48,25 @@ object GraftExtensions {
     *    in re-optimization order, so identical code gets different class
     *    names (`…CodegenStage16` vs `…24`) in different sessions and
     *    misses the cache.
+    *
+    * Under the last two a streaming trigger on a local disk starts no
+    * process (without libhadoop, Hadoop's local file system forks
+    * `chmod`, `readlink` and `rm` for checkpoint files):
+    *
+    *  - `spark.sql.streaming.checkpointFileManagerClass`: offset, commit
+    *    and state files go through [[graft.sources.LocalCheckpointFileManager]].
+    *  - `spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled`:
+    *    a RocksDB commit writes one changelog file per partition through
+    *    that manager; without it every commit uploads a snapshot, which
+    *    bypasses the manager. Snapshots move to the maintenance thread.
+    *    Spark resumes a checkpoint written in either mode.
     */
   val sessionDefaults: Seq[(String, String)] = Seq(
     "spark.sql.codegen.cache.maxEntries" -> "1024",
     "spark.sql.artifact.isolation.enabled" -> "false",
-    "spark.sql.codegen.useIdInClassName" -> "false")
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" -> "graft.sources.LocalCheckpointFileManager",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   def installDefaults(conf: SparkConf): Unit =
     sessionDefaults.foreach { case (k, v) => conf.setIfMissing(k, v) }

@@ -11,9 +11,16 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // on stderr beside Spark's own log, so each warning sits between
+      // the start and done lines of the query that raised it; the
+      // millisecond count is a plain Long, whatever the locale
+      System.err.println(s"[verify] start $name")
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        System.err.println(s"[verify] done $name ${(System.nanoTime() - t0) / 1000000L} ms")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a failed/partial write must never leave a PREVIOUS run's
         // parquet (or a torn one) for the driver compare — a crashed

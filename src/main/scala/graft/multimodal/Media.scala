@@ -561,7 +561,7 @@ object Media {
           orig :: hashed(id + PhashVariantOffset, nudged) :: Nil
         } else orig :: Nil
       }
-    }.toDF().localCheckpoint(false) // hash once, not once per join side
+    }.toDF().localCheckpoint(true) // hash once, before either join side reads it
     Dedup.hammingPairs(sig).distinct().orderBy("doc_a", "doc_b")
   }
 
@@ -786,7 +786,7 @@ object Media {
       .filter(col("p4").isNotNull)
       .select(col("doc_id"), col("t"),
         ((((col("p") * 8 + col("p1")) * 8 + col("p2")) * 8 + col("p3")) * 8 + col("p4")).as("fp"))
-      .localCheckpoint(false) // hash/peak once, not once per join side
+      .localCheckpoint(true) // hash/peak once, before either join side reads it
     chains.as("x").join(chains.as("y"),
         col("x.fp") === col("y.fp") && col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),

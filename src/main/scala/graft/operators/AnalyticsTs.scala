@@ -1009,8 +1009,8 @@ object AnalyticsTs {
     val rankedX = TwoPhase.globalRowNumber(perUser, col("x"),
       Seq(col("x"), col("user_id")), "rx")
     // y (lifetime spend) has no structural domain bound — ride the
-    // distribution-free range variant (hard 32-bucket carry-in for ANY
-    // whale distribution) instead of value-width slices
+    // distribution-free range variant (carry-in bounded by the range
+    // count for ANY whale distribution) instead of value-width slices
     val ranked = TwoPhase.globalRowNumberByRange(rankedX,
         Seq(col("y"), col("user_id")), "ry")
       .withColumn("mrx", min(col("rx")).over(Window.partitionBy("x"))

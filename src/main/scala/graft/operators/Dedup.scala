@@ -259,8 +259,11 @@ object Dedup {
     * Verified with summed per-chunk bit_count(xor). */
   def qSimhashNear(spark: SparkSession, dir: String): DataFrame = {
     // signature table computed once (64 md5-parity sums per doc), then
-    // self-joined — see qDedupMinhash for why this is materialized
-    val sig = simhash64(spark, dir).localCheckpoint(false)
+    // self-joined — see qDedupMinhash for why this is materialized.
+    // Eager: a lazy memo read by both join sides is taken while the
+    // other side's stage still runs the old lineage, and that stage's
+    // metric updates then reach accumulators GC has dropped
+    val sig = simhash64(spark, dir).localCheckpoint(true)
     // filter on hamming BEFORE the pair-dedup: bit_count is a cheap
     // codegen'd op, and it shrinks the distinct's shuffle from every
     // blocked pair down to only the near-duplicates
@@ -1369,14 +1372,17 @@ object Dedup {
     // r16 optimization: the degree-annotated edge list is loop-INVARIANT,
     // but each of the 8 rounds' jobs re-derived it (degree agg + join =
     // 2 shuffles per round, 16 across the descent, plus a 17th for the
-    // final deg join). One lazy checkpoint each materializes them on
-    // round 1 and every later round reads the blocks — exactly the
+    // final deg join). One eager checkpoint each materializes them
+    // before round 1 and every round reads the blocks — exactly the
     // "persist the message-passing structure once" discipline an
     // iterative production job uses (d6's CC already checkpoints its
-    // edge table for the same reason). Values unchanged.
+    // edge table for the same reason). Values unchanged. Eager, not
+    // lazy: one plan reads each several times (the rank seed, every
+    // round's join), and a lazy memo taken mid-plan strands the metric
+    // updates of the stages still running its old lineage.
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(false)
-    val out = edges.join(deg, "src").localCheckpoint(false)
+      .localCheckpoint(true)
+    val out = edges.join(deg, "src").localCheckpoint(true)
     var rank = deg.select(col("src").as("id"), lit(1000000L).as("r"))
     for (i <- 1 to 8) {
       rank = out.join(rank, out("src") === rank("id"))

@@ -222,29 +222,33 @@ object TextModels {
   // whole selection→dedup→packing flow as one declarative query and
   // Catalyst pipelines it (the filter's keeper agg, the span keeper
   // agg, and the packing prefix-sum are the only shuffles; no stage
-  // materializes to storage between steps).
+  // materializes to storage between steps). The span counts ride
+  // through the chunk/pack branch as grouping keys (one row per doc
+  // on both sides), so the span dedup runs once: joined back as its
+  // own branch, column pruning made the two reads of it differ and
+  // no exchange was reused.
   def qPipelineE2e(spark: SparkSession, dir: String): DataFrame = {
     val survivors = TextOps.qCorpusFilter(spark, dir)
       .join(Tables(spark, dir, "documents").select("doc_id", "text"), "doc_id")
     val cleaned = TextOps.spanDedup(survivors.select(col("doc_id"), col("text")))
+    val spanCounts = Seq("doc_id", "n_kept", "n_dup_kept").map(col)
     val chunks = cleaned
-      .select(col("doc_id"), split(col("text_clean"), " ").as("toks"))
-      .select(col("doc_id"),
+      .select(spanCounts :+ split(col("text_clean"), " ").as("toks"): _*)
+      .select(spanCounts ++ Seq(
         explode(expr("sequence(0, (size(toks) - 1) div 24)")).as("chunk_id"),
-        col("toks"))
-      .select(col("doc_id"), col("chunk_id"),
-        expr("size(slice(toks, chunk_id * 24 + 1, 32))").as("n_tok_chunk"))
+        col("toks")): _*)
+      .select(spanCounts ++ Seq(col("chunk_id"),
+        expr("size(slice(toks, chunk_id * 24 + 1, 32))").as("n_tok_chunk")): _*)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("chunk_id")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
     val packed = chunks
       .withColumn("cum", sum(col("n_tok_chunk")).over(w))
       .withColumn("seq_id", expr("int((cum - n_tok_chunk) div 128)"))
-      .groupBy("doc_id")
+      .groupBy(spanCounts: _*)
       .agg((max(col("seq_id")) + 1).cast("int").as("n_seqs"),
         sum(col("n_tok_chunk")).as("tok_total"))
     survivors.select("doc_id", "lang", "score")
-      .join(cleaned.select("doc_id", "n_kept", "n_dup_kept"), "doc_id")
       .join(packed, "doc_id")
       .orderBy("doc_id")
   }

@@ -90,7 +90,12 @@ object TwoPhase {
     * physical partition id as the bucket. Costs ONE extra sampling
     * pass over df (the reservoir job repartitionByRange always runs);
     * buys a HARD bound of `partitions` carry-in rows for any
-    * distribution. Output ranks are deterministic even though the
+    * distribution. `partitions` defaults to the session's
+    * `spark.sql.shuffle.partitions`: the ranks do not depend on the
+    * range count (the concatenation argument below), so the count only
+    * sets parallelism, which then follows the session instead of a
+    * fixed 32 (more tasks than cores on a laptop, a cap at cluster
+    * scale). Output ranks are deterministic even though the
     * partition boundaries come from sampling: the rank depends only on
     * the total `order`, and concatenating range partitions in pid
     * order IS that order wherever the sampler happens to cut.
@@ -112,8 +117,8 @@ object TwoPhase {
     * [[globalRowNumber]]: carry-in, rank and total are its code.
     */
   def globalRowNumberByRange(df: DataFrame, order: Seq[Column],
-      out: String, partitions: Int = 32, total: Option[String] = None): DataFrame = {
-    val b = df.repartitionByRange(partitions, order: _*)
+      out: String, partitions: Int = 0, total: Option[String] = None): DataFrame = {
+    val b = df.repartitionByRange(ranges(df, partitions), order: _*)
       .withColumn("__tp_bkt", spark_partition_id())
       .localCheckpoint(true)
     globalRowNumber(b, col("__tp_bkt"), order, out, total)
@@ -138,10 +143,11 @@ object TwoPhase {
     *
     * Exact whenever (keys, order) is a total order per key (callers
     * tie-break on a unique id), by the same concatenation argument as
-    * the rank helper. */
+    * the rank helper, whatever the range count (`partitions`, by
+    * default the session's shuffle partitions). */
   def globalCumSumByKey(df: DataFrame, keys: Seq[Column], order: Seq[Column],
-      value: Column, out: String, partitions: Int = 32): DataFrame = {
-    val b = df.repartitionByRange(partitions, (keys ++ order): _*)
+      value: Column, out: String, partitions: Int = 0): DataFrame = {
+    val b = df.repartitionByRange(ranges(df, partitions), (keys ++ order): _*)
       .withColumn("__tp_bkt", spark_partition_id())
       .withColumn("__tp_v", value)
       .localCheckpoint(true)
@@ -163,6 +169,12 @@ object TwoPhase {
       .withColumn(out, col("__tp_off") + sum(col("__tp_v")).over(w))
       .drop("__tp_bkt" +: "__tp_v" +: "__tp_off" +: keyNames: _*)
   }
+
+  /** The range count of the two range helpers: `partitions` when it is
+    * positive, else (the default) the session's shuffle partitions. */
+  private def ranges(df: DataFrame, partitions: Int): Int =
+    if (partitions > 0) partitions
+    else df.sparkSession.sessionState.conf.numShufflePartitions
 
   /** SQL expression computing `ntile(k)` from a global 1-based rank
     * and the row count — the ANSI bucket rule both engines implement

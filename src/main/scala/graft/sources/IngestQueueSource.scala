@@ -72,9 +72,8 @@ object IngestQueueSource {
       element_at(array(exts.map(lit): _*), (id % 10).cast("int") + 1))
   }
 
-  def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  def md5hex(s: String): String = java.util.HexFormat.of().formatHex(
+    java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")))
 }
 
 class IngestQueueTable(options: CaseInsensitiveStringMap)

@@ -29,7 +29,9 @@ class SourceV2Spec extends SparkTestBase {
       .where("event_id = 2").collect()(0)
     assert(row.getAs[String]("blob_url") ==
       "https://acct.blob.core.windows.net/userdata/user2/raw/file_2.nc")
-    assert(row.getAs[String]("token") == graft.sources.IngestQueueSource.md5hex("2"))
+    // a known answer, md5("2"), not md5hex compared with itself
+    assert(graft.sources.IngestQueueSource.md5hex("2") == "c81e728d9d4c2f636f067f89cc14862c")
+    assert(row.getAs[String]("token") == "c81e728d9d4c2f636f067f89cc14862c")
     assert(row.getAs[Boolean]("join_vector_tiles"))
   }
 
